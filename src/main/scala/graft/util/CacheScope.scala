@@ -102,9 +102,8 @@ object CacheScope extends org.apache.spark.internal.Logging {
 
   // seal jobs of ONE sealMany call run concurrently (they are independent
   // reads of already-materialized scoped caches); a small shared daemon pool
-  // bounds the extra scheduler pressure. private[graft]: HashCache.merge
-  // reuses it for its concurrent per-partition snapshot commits.
-  private[graft] lazy val sealEc: scala.concurrent.ExecutionContext =
+  // bounds the extra scheduler pressure.
+  private lazy val sealEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
         val t = new Thread(r, "graft-seal"); t.setDaemon(true); t
@@ -245,7 +244,10 @@ object CacheScope extends org.apache.spark.internal.Logging {
       val consumed =
         try p.outputs.exists(o => qe.analyzed.exists(n => n.sameResult(o)))
         catch { case _: Throwable => false }
-      if (consumed) { it.remove(); p.scope.close() }
+      // close BEFORE remove: while the scope is still queued, a concurrent
+      // flushDeferred() finds it and waits on its monitor for this close,
+      // so it never returns with the scope's persists still registered
+      if (consumed) { p.scope.close(); it.remove() }
     }
   }
 
