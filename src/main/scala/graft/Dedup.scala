@@ -123,10 +123,15 @@ object Dedup {
     graft.util.Seal(src.select(cols: _*))
   }
 
-  /** Candidate edges from every enabled source, unioned.
+  /** Candidate edges from every enabled source, unioned, over image ids
+    * (id1 < id2). Connectivity form: clustering needs only the components,
+    * so exact groups arrive as stars and caption-LSH as a per-partition
+    * forest (`Candidates.captionLshEdges`) — these edges have the
+    * components of every verified near-dup pair, but are not the pair
+    * listing itself (the `DocOps` pair operators are).
     * `hashCol`: name of a precomputed content-hash column (cache-first
     * path); when absent the hash is computed inline from `bytes`.
-    * Returns (edges(id1,id2,kind), metrics rows).
+    * Returns (edges(id1,id2), metrics rows).
     *
     * The sources are independent Spark jobs over the shared featurized
     * frame (each operator seals its output eagerly — CacheScope), so
@@ -138,9 +143,9 @@ object Dedup {
     * barrier with another source's tasks. */
   /** @param dedup apply a final global `distinct` across sources. The
     *   public contract keeps it true; the clustering pipeline passes false —
-    *   ConnectedComponents normalizes (orient + distinct) as its first step,
-    *   so a union-level distinct there is a second full shuffle of the edge
-    *   set for nothing. */
+    *   ConnectedComponents contracts duplicates away in its first pass, so
+    *   a union-level distinct there is a full shuffle of the edge set for
+    *   nothing. */
   def candidateEdges(df: DataFrame, cfg: DedupConfig,
                      hashCol: Option[String] = None,
                      dedup: Boolean = true): (DataFrame, DataFrame) = {
@@ -174,10 +179,8 @@ object Dedup {
     // each source tags its jobs (thread-local; SQLExecution propagates it
     // into AQE stage-materialization jobs) so listeners/UIs can attribute
     // every stage to its candidate source
-    def tagged[A](name: String)(body: => A): A = {
-      spark.sparkContext.setJobDescription(s"graft:source:$name")
-      try body finally spark.sparkContext.setJobDescription(null)
-    }
+    def tagged[A](name: String)(body: => A): A =
+      graft.util.JobDescription.tagged(spark.sparkContext, s"graft:source:$name")(body)
     val tasks: Seq[Future[(DataFrame, Option[DataFrame])]] = Seq(
       Future { tagged("exact") {
         (graft.util.Seal(Candidates.exactEdges(keyed, "iid", "key")), None)
@@ -278,7 +281,9 @@ object Dedup {
     val hashCacheRoot = s"${cacheRoot.getOrElse(s"$stateRoot/hash_cache")}/$hashKind"
     val filtered = filterRows(df, cfg.filter)
     var scratch = List.empty[DataFrame] // persisted frames released post-commit
-    val edges = TableIO.stageCheckpoint(spark, s"$stateRoot/edges", "edges") {
+    // released in a finally: a stage that throws must not leak them into
+    // the caller's session
+    val edges = try TableIO.stageCheckpoint(spark, s"$stateRoot/edges", "edges") {
       // Cache-first hashing (reference X7 adaptive strategy +
       // hash_manager.py:112-158): re-runs hash ONLY cache misses — at
       // 100 TB this is the difference between re-reading every byte and a
@@ -323,8 +328,7 @@ object Dedup {
       val (e, m) = candidateEdges(hashed, cfg, hashCol = Some("hash_value"))
       TableIO.commit(m, s"$stateRoot/metrics_candidates", "candidate_metrics")
       e
-    }
-    scratch.foreach(_.unpersist())
+    } finally scratch.foreach(_.unpersist())
     // the clusters stage table holds the NON-ROOT mapping only (roots and
     // singletons coalesce to themselves at read time below) — smaller
     // snapshot, and skips CC's node-universe jobs

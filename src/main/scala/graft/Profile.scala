@@ -73,8 +73,8 @@ object Profile {
       e
     }
     val cc = time("connected components") {
-      val (out, iters, _) = ConnectedComponents.runWithStats(edges)
-      println(s"[profile]   cc iterations=$iters")
+      val out = ConnectedComponents.runMapping(edges)
+      println(s"[profile]   cc non-root nodes=${out.count()}")
       out
     }
     val members = time("members join+persist") {

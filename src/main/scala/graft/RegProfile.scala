@@ -30,10 +30,12 @@ object RegProfile {
       Dedup.filterRows(corpus, DedupConfig().filter), DedupConfig(), dedup = false)
     val e = edges.localCheckpoint(true)
     println(s"[prof] edges=${e.count()}")
-    val (cc, rounds, nE) = time("CC runWithStats") {
-      ConnectedComponents.runWithStats(e)
+    val cc = time("CC runMapping") {
+      val m = ConnectedComponents.runMapping(e)
+      m.count()
+      m
     }
-    println(s"[prof] rounds=$rounds finalEdges=$nE clusters=${cc.select("cluster_id").distinct().count()}")
+    println(s"[prof] non-root nodes=${cc.count()} multi-node clusters=${cc.select("cluster_id").distinct().count()}")
     // degree distribution of the edge set
     val deg = e.select(col("id1").as("id")).union(e.select(col("id2").as("id")))
       .groupBy("id").count()

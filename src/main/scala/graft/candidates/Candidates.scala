@@ -4,13 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.cluster.ConnectedComponents
 import graft.keys.Keys
 import graft.schema.NearDupConfig
 import graft.util.CacheScope
 
 /** Candidate-pair generation. Output contract for every source: DataFrame
-  * `(id1, id2, kind)` with `id1 < id2`, distinct — the union feeds
-  * connected-components clustering.
+  * `(id1, id2, kind)` with `id1 < id2` — the union feeds
+  * connected-components clustering. Exact, pHash-Hamming and containment
+  * edges are distinct; caption-LSH emits a connectivity-form forest (see
+  * `captionLshEdges`): the same components as its verified pairs, not the
+  * pairs themselves, and an edge may repeat across partitions.
   *
   * At 100 TB the invariant is: NEVER a cartesian product; every candidate
   * source is an equi-join on a blocking key (exact key, LSH band hash,
@@ -182,8 +186,9 @@ object Candidates {
     *   members      (id, rep)   every input row → its identical-caption rep
     *   shingledReps (rep)       reps whose caption yields ≥1 shingle (groups
     *                            whose within-pairs qualify at Jaccard 1)
-    * The engine edge source stars the groups (`captionLshEdges`);
-    * pair-listing queries expand to member level (`expandRepPairs`). */
+    * The engine edge source contracts pairs and groups into a forest
+    * (`captionLshEdges`); pair-listing queries expand to member level
+    * (`expandRepPairs`). */
   /** Lazy body of the MinHash+LSH machinery — see `pairsWithinBucketsIn`.
     * Consumers: `captionLshEdges` (flagship, sealed concurrent mode) and
     * DocOps.minhashLshPairs/minhashLshEdges (query surfaces, deferred
@@ -238,10 +243,15 @@ object Candidates {
     (repPairs, members, shingled.select(col(idCol).as("rep")), metrics)
   }
 
-  /** Caption-LSH candidate edges for the cluster pipeline: verified rep
-    * pairs + rep—member star per identical-caption group (connectivity is
-    * what clustering needs; stars keep hot groups linear).
-    * Returns (edges(id1,id2,kind), metrics). */
+  /** Caption-LSH candidate edges for the cluster pipeline, in
+    * connectivity form: the verified rep pairs ∪ a rep—member star per
+    * identical-caption group, contracted per partition by
+    * `ConnectedComponents.localStars` into a forest whose edges point each
+    * id at the minimum of its partition-local component (id1 = that
+    * minimum < id2). The components are those of the verified pairs, but a
+    * hot near-dup cluster of s captions leaves as at most s − 1 edges per
+    * partition instead of its Θ(s²) verified pairs. Every edge has kind
+    * `caption_lsh`. Returns (edges(id1,id2,kind), metrics). */
   def captionLshEdges(df: DataFrame, idCol: String, captionCol: String,
                       cfg: NearDupConfig): (DataFrame, DataFrame) = {
     // seal exactly the TWO frames the flagship consumes (edges, metrics) —
@@ -251,8 +261,10 @@ object Candidates {
       val (repPairs, members, _, mx) =
         captionLshPartsIn(df, idCol, captionCol, cfg)(scope)
       val sameCaption = members.where(col("id") =!= col("rep"))
-        .select(col("rep").as("id1"), col("id").as("id2"), lit("caption_exact").as("kind"))
-      Seq(repPairs.withColumn("kind", lit("caption_lsh")).unionByName(sameCaption), mx)
+        .select(col("rep").as("id1"), col("id").as("id2"))
+      val forest = ConnectedComponents.localStars(repPairs.unionByName(sameCaption))
+        .select(col("dst").as("id1"), col("src").as("id2"), lit("caption_lsh").as("kind"))
+      Seq(forest, mx)
     }
     (edges, metrics)
   }

@@ -1,209 +1,225 @@
 package graft.cluster
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Iterative DataFrame connected components — the alternating
-  * large-star / small-star algorithm (Kiveris et al., "Connected Components
-  * in MapReduce and Beyond", SoCC'14), which BASELINE.json's north_rule
-  * names explicitly. No GraphX/RDDs: each round is two shuffles on the node
-  * id, edges monotonically point toward each component's minimum id, and
-  * convergence is O(log n) rounds.
+/** Iterative DataFrame connected components — partition-local union-find
+  * contraction, then the alternating large-star / small-star algorithm
+  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  * SoCC'14) as the global backstop. No GraphX/RDDs.
   *
-  * Scale notes: per-round `persist` + `count` materializes the iteration and
-  * truncates the lineage chain (on a real cluster this would be a
-  * checkpoint/table write per round — see graft.state.TableIO); the
-  * neighborhood minimum uses a window `min` rather than `collect_list`, so a
-  * degenerate high-degree node (the skew block's star root) never
+  *   - Contraction (`localStars`): every partition of the caller's edges is
+  *     rewritten in memory into stars on its partition-local component
+  *     minima. Dedup graphs are many tiny components, so the contracted
+  *     graph is usually already a star forest (reducing locally before the
+  *     global exchange — Hyper Dimension Shuffle, VLDB 2019).
+  *   - Star-forest test (`starTest`): one `groupBy(src)` over both edge
+  *     orientations keeps each node's minimum and maximum neighbour; the
+  *     frame is sealed, and an observed metric of that same job counts the
+  *     nodes that are neither a root (every neighbour larger) nor a leaf
+  *     (one neighbour, smaller). Zero such nodes means every component is a
+  *     star on its minimum id, and the leaf rows ARE the mapping.
+  *   - Otherwise `roundsPerJob` rounds (three exchanges each: the two star
+  *     windows and the round's `distinct`) run in one lazily-sealed batch
+  *     that the next test's job materializes — one test job per batch,
+  *     O(log n) rounds.
+  *
+  * The neighbourhood minimum uses a window `min`, never `collect_list`, so
+  * a degenerate high-degree node (the skew block's star root) never
   * materializes its adjacency list in one task.
   */
 object ConnectedComponents {
 
-  /** @param edges DataFrame with two columns (any orderable type) naming an
-    *              undirected edge; self-loops and duplicates are fine.
-    * @return DataFrame (id, cluster_id): every node of `edges` mapped to the
-    *         minimum id of its component (including isolated endpoints).
-    */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame =
-    runWithStats(edges, maxIter)._1
-
-  /** Normalized edge frame (src > dst, no self-loops, distinct) — lazy. */
-  private def normalize(edges: DataFrame): DataFrame = {
-    val Seq(c1, c2) = edges.columns.take(2).toSeq
-    edges
-      .select(col(c1).as("src"), col(c2).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("dst2"),
-              greatest(col("src"), col("dst")).as("src2"))
-      .select(col("src2").as("src"), col("dst2").as("dst")) // src > dst
-      .distinct()
-  }
-
   /** Edge count below which `roundsPerJob` auto-resolves to 1 (un-chained
     * rounds). Chaining two rounds per job QUADRUPLES the per-batch logical
-    * plan (round() scans its input twice and its large-star frame twice),
-    * and per-batch cost is super-linear in plan size on the driver (AQE
-    * re-optimizes the whole plan at every exchange materialization).
+    * plan, and per-batch cost is super-linear in plan size on the driver
+    * (AQE re-optimizes the whole plan at every exchange materialization).
     * Measured on a 250-edge graph, warm: rpj=1 2.3 s vs rpj=2 4.5 s vs
     * rpj=4 50-145 s — below the threshold the batch is driver-planning-
     * bound and chaining is counterproductive. Above it task execution
     * dominates and chaining halves the materialization barriers (the flat
     * cost that caps scaling efficiency at high core counts — the 4M-image
-    * ScalingBench regime, ~2-4M edges, keeps rpj=2). */
+    * ScalingBench regime, ~2-4M edges, keeps rpj=2). The count is the
+    * edge count of the graph the rounds run on (the contracted one). */
   val AutoChainEdges = 1L << 20
 
-  /** run + (rounds, finalEdgeCount) for tests/metrics.
-    *
-    * `roundsPerJob`: large-star/small-star rounds chained per materialized
-    * job. Every materialization is a full cluster barrier (checkpoint write
-    * + signature action + scheduler round-trip) — at high core counts these
-    * barriers are flat cost that caps scaling efficiency, and component
-    * diameters shrink so fast (squared per round) that typical inputs
-    * converge in 3-5 rounds: batching 2 rounds per job halves the barrier
-    * count for at most one wasted round after convergence. 0 (default) =
-    * adaptive: 1 below `AutoChainEdges` normalized edges, else 2 — see
-    * AutoChainEdges for the measured crossover. */
-  def runWithStats(edges: DataFrame, maxIter: Int = 50,
-                   roundsPerJob: Int = 0): (DataFrame, Int, Long) = {
-    // tag every CC job for stage attribution (ScaleDiag, UIs)
-    edges.sparkSession.sparkContext.setJobDescription("graft:cc")
-    try runWithStatsIn(edges, maxIter, roundsPerJob)
-    finally edges.sparkSession.sparkContext.setJobDescription(null)
-  }
-
-  private def runWithStatsIn(edges: DataFrame, maxIter: Int,
-                             roundsPerJob: Int): (DataFrame, Int, Long) = {
-    // normalize once and materialize EAGERLY: every consumer plan scans e0
-    // at least twice (allNodes' union, round()'s nbrs union), and AQE
-    // races those scans into a lazily-persisted cache concurrently — each
-    // recomputing the caller's full candidate DAG (measured: deferred-mode
-    // LSH edges doubled q_doc_pipeline/q_dup_clusters until this barrier)
-    val e0 = normalize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val nE0 = e0.count()
-    val rpj = resolveChain(roundsPerJob, nE0)
-    val allNodes = e0
-      .select(col("src").as("id")).union(e0.select(col("dst").as("id")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    allNodes.count()
-    val (fin, iter, nEdges) = converge(e0, maxIter, rpj)
-    // components: every node that appears as src points at its root (dst);
-    // roots themselves and isolated nodes map to themselves.
-    val roots = fin.groupBy("src").agg(min("dst").as("cluster_id"))
-    // sealed output: eager localCheckpoint materializes the mapping (one
-    // pass, same cost the old persist+count paid) but lives OUTSIDE the SQL
-    // cache manager — reclaimed by the ContextCleaner once unreferenced, so
-    // a long-lived session composing operators never accumulates CC outputs
-    val out = graft.util.Seal(allNodes
-      .join(roots.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id")))
-    allNodes.unpersist(); fin.unpersist(); e0.unpersist()
-    (out, iter, nEdges)
-  }
+  /** Nodes a task's union-find holds before it emits its stars and starts
+    * over: bounds the per-task map whatever the partition size. */
+  private val FlushNodes = 1 << 16
 
   /** Cluster mapping for NON-ROOT edge nodes only: (id, cluster_id) for
     * every node that is not its component's minimum. Roots and isolated
-    * nodes are ABSENT — the pipeline's members join is a left join +
-    * `coalesce(cluster_id, id)`, which maps them to themselves anyway, so
-    * the `allNodes` union-distinct, its count barrier, and the final
-    * node-universe join that `run` pays are pure overhead there (three of
-    * the flat per-run jobs the scaling decomposition charged to CC). */
+    * nodes are ABSENT — callers join with a left join +
+    * `coalesce(cluster_id, id)`, which maps them to themselves.
+    *
+    * @param edges frame whose first two columns (one id type, any
+    *   `Comparable` — Long and String in the engine) name an undirected
+    *   edge; nulls, self-loops and duplicates are fine.
+    * @param roundsPerJob large-star/small-star rounds chained per
+    *   materialized batch. Every materialization is a cluster barrier; 0
+    *   (default) = adaptive: 1 below `AutoChainEdges` contracted edges,
+    *   else 2.
+    * @throws IllegalStateException if the rounds have not converged after
+    *   `maxIter` rounds (the mapping would be wrong). */
   def runMapping(edges: DataFrame, maxIter: Int = 50,
-                 roundsPerJob: Int = 0): DataFrame = {
-    edges.sparkSession.sparkContext.setJobDescription("graft:cc")
-    try runMappingIn(edges, maxIter, roundsPerJob)
-    finally edges.sparkSession.sparkContext.setJobDescription(null)
-  }
+                 roundsPerJob: Int = 0): DataFrame =
+    mappingAndRounds(edges, maxIter, roundsPerJob)._1
 
-  private def runMappingIn(edges: DataFrame, maxIter: Int,
-                           roundsPerJob: Int): DataFrame = {
-    // eager for the same AQE-race reason as runWithStatsIn: round() scans
-    // e0 twice inside the first signature action
-    val e0 = normalize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val nE0 = e0.count()
-    val (fin, _, _) = converge(e0, maxIter, resolveChain(roundsPerJob, nE0))
-    val out = graft.util.Seal(fin.groupBy("src").agg(min("dst").as("cluster_id"))
-      .withColumnRenamed("src", "id"))
-    fin.unpersist(); e0.unpersist()
-    out
-  }
-
-  /** 0 = adaptive on the measured normalized edge count (see
-    * AutoChainEdges); an explicit caller value always wins. */
-  private def resolveChain(roundsPerJob: Int, nEdges: Long): Int =
-    if (roundsPerJob > 0) roundsPerJob
-    else if (nEdges < AutoChainEdges) 1 else 2
-
-  /** The alternating-rounds loop: iterate from persisted `e0` until the
-    * edge set is stable; returns the persisted final frame (src > dst,
-    * star-shaped), the round count, and the final edge count. Intermediate
-    * frames (including `e0` once replaced) are unpersisted here. */
-  private def converge(e0: DataFrame, maxIter: Int,
-                       roundsPerJob: Int): (DataFrame, Int, Long) = {
-    var e = e0
-
-    // ONE alternating large-star + small-star round (lazy plan):
-    //   large star: for every node u, attach all neighbors v > u to the
-    //     minimum of (u ∪ neighbors) — both edge directions participate;
-    //   small star: edges then satisfy src > dst; for each u attach all its
-    //     smaller neighbors (and u) to the minimum neighbor.
-    // The neighborhood minimum is a window `min`, never collect_list — a
-    // degenerate high-degree node holds no adjacency list in one task.
-    def round(cur: DataFrame): DataFrame = {
-      val nbrs = cur.union(cur.select(col("dst").as("src"), col("src").as("dst")))
-      val wL = Window.partitionBy("src")
-      // no distinct between the stars (round 6): duplicates in the
-      // large-star output (two old sources of one node mapping to the same
-      // minimum) do not change the small-star window minimum, and the final
-      // distinct below dedups the round's output — the intermediate
-      // distinct was a full extra exchange per round for a frame the next
-      // window reshuffles anyway. The undeduped large output is ≤ |nbrs| =
-      // 2|E| rows, so the small-star shuffle grows at most 2× in the worst
-      // case while every round drops one exchange barrier.
-      val large = nbrs
-        .withColumn("m", least(min("dst").over(wL), col("src")))
-        .where(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst")) // keep src > dst
-        .where(col("src") =!= col("dst"))
-      val wS = Window.partitionBy("src")
-      val withMin = large.withColumn("m", min("dst").over(wS))
-      withMin
-        .select(col("src"), col("m").as("dst"))
-        .union(withMin.where(col("dst") =!= col("m"))
-          .select(col("dst").as("src"), col("m").as("dst")))
-        .where(col("src") =!= col("dst"))
-        .distinct()
+  /** `runMapping` plus the number of large-star/small-star rounds it ran
+    * (0 when the contracted input was already a star forest). */
+  private[graft] def mappingAndRounds(edges: DataFrame, maxIter: Int = 50,
+                                      roundsPerJob: Int = 0): (DataFrame, Int) =
+    // tag every CC job for stage attribution (listeners, UIs)
+    graft.util.JobDescription.tagged(edges.sparkSession.sparkContext, "graft:cc") {
+      // lazy seal: the first test's job reads the caller's edges ONCE and
+      // builds this frame's blocks as it goes, so a round (if any) reads
+      // the contracted graph, never the caller's plan again
+      var e = graft.util.Seal(localStars(edges), eager = false)
+      val (t0, v0, nEdges) = starTest(e)
+      var t = t0
+      var violations = v0
+      val rpj = if (roundsPerJob > 0) roundsPerJob
+                else if (nEdges < AutoChainEdges) 1 else 2
+      var rounds = 0
+      while (violations > 0) {
+        if (rounds >= maxIter)
+          throw new IllegalStateException(
+            s"connected components did not converge in $maxIter rounds")
+        var cur = e
+        var r = 0
+        while (r < rpj && rounds + r < maxIter) { cur = round(cur); r += 1 }
+        // lazy seal: truncates the plan (a persist alone leaves the tree
+        // growing exponentially across batches); the test's job builds it
+        e = graft.util.Seal(cur, eager = false)
+        val (t2, v2, _) = starTest(e)
+        t = t2; violations = v2; rounds += r
+      }
+      (t.where(col("mn") < col("src"))
+        .select(col("src").as("id"), col("mn").as("cluster_id")), rounds)
     }
 
-    var iter = 0
-    var converged = false
-    var prevSig: (Long, Any) = (-1L, null)
-    while (!converged && iter < maxIter) {
-      var cur = e
-      var r = 0
-      while (r < roundsPerJob && iter + r < maxIter) { cur = round(cur); r += 1 }
-      // lazy seal: materializes the chained rounds AND truncates the
-      // logical plan (a persist alone leaves the tree growing exponentially
-      // across iterations); the signature aggregation below is the action
-      // that materializes it — ONE job per batch. With
-      // spark.graft.checkpoint.dir set this is a RELIABLE checkpoint
-      // (executor-loss-safe on a real cluster); the local default stays
-      // zero-copy.
-      val next = graft.util.Seal(cur, eager = false)
-      // convergence: edge set stable (count + order-independent xor-hash —
-      // xor, not sum: ANSI mode makes long-sum overflow an error)
-      val sig = next.agg(
-        count(lit(1)),
-        call_function("bit_xor", xxhash64(col("src"), col("dst")))).first()
-      val newSig = (sig.getLong(0), sig.get(1))
-      e.unpersist()
-      e = next
-      converged = newSig == prevSig
-      prevSig = newSig
-      iter += r
+  /** Partition-local union-find contraction: rewrites an edge frame (first
+    * two columns, one `Comparable` id type) into stars `(src, dst)`, each
+    * node pointing at the minimum of its component among the edges its
+    * task has read since the last flush (so src > dst). The components
+    * are the input's by construction: every star edge joins two nodes of
+    * one input component, and the endpoints of every input edge end in one
+    * star. Nulls and self-loops are dropped. An edge may repeat across
+    * partitions; nothing downstream needs it unique. Lazy. */
+  private[graft] def localStars(edges: DataFrame): DataFrame = {
+    val Seq(a, b) = edges.columns.take(2).toSeq
+    val t = edges.schema(a).dataType
+    val schema = StructType(Seq(StructField("src", t, nullable = false),
+                                StructField("dst", t, nullable = false)))
+    edges.select(col(a), col(b).cast(t))
+      .mapPartitions(rows => new LocalStars(rows))(Encoders.row(schema))
+  }
+
+  private final class LocalStars(rows: Iterator[Row]) extends Iterator[Row] {
+    private val parent = new java.util.HashMap[Any, Any]()
+    private var out: Iterator[Row] = Iterator.empty
+
+    private def find(x: Any): Any = {
+      var r = x
+      var p = parent.get(r)
+      while (p != null && p != r) { r = p; p = parent.get(r) }
+      var c = x // path compression
+      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
     }
-    (e, iter, prevSig._1)
+
+    private def union(x: Any, y: Any): Unit = {
+      parent.putIfAbsent(x, x); parent.putIfAbsent(y, y)
+      val (rx, ry) = (find(x), find(y))
+      if (rx != ry) {
+        // the smaller root wins, so every root is its set's minimum
+        if (rx.asInstanceOf[Comparable[Any]].compareTo(ry) < 0) parent.put(ry, rx)
+        else parent.put(rx, ry)
+      }
+    }
+
+    /** Reads edges until the map holds `FlushNodes` nodes or the input
+      * ends, then turns the map into its stars and clears it. */
+    private def fill(): Unit = {
+      while (parent.size < FlushNodes && rows.hasNext) {
+        val r = rows.next()
+        if (!r.isNullAt(0) && !r.isNullAt(1) && r.get(0) != r.get(1))
+          union(r.get(0), r.get(1))
+      }
+      val stars = Array.newBuilder[Row]
+      parent.keySet.forEach { n =>
+        val root = find(n)
+        if (root != n) stars += Row(n, root)
+      }
+      parent.clear()
+      out = stars.result().iterator
+    }
+
+    def hasNext: Boolean = {
+      while (!out.hasNext && rows.hasNext) fill()
+      out.hasNext
+    }
+
+    def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      out.next()
+    }
+  }
+
+  /** Both orientations of a (src, dst) edge frame in one scan. */
+  private def bothWays(e: DataFrame): DataFrame =
+    e.select(inline(array(
+      struct(col("src"), col("dst")),
+      struct(col("dst").as("src"), col("src").as("dst")))))
+
+  /** The star-forest test over edge frame `e` (src > dst): the sealed
+    * per-node frame (src, mn, mx, deg) plus, observed in the job that
+    * seals it, the count of nodes that are neither a root nor a leaf and
+    * `e`'s edge count. Without the observed row (e.g. Spark internals
+    * changed) both counts come from one extra action over the sealed
+    * frame — never from a wait, never assumed. */
+  private def starTest(e: DataFrame): (DataFrame, Long, Long) = {
+    val notStar = !(col("mn") > col("src") ||
+                    (col("mn") === col("mx") && col("mn") < col("src")))
+    val stats: Seq[Column] = Seq(
+      coalesce(sum(when(notStar, 1L).otherwise(0L)), lit(0L)).as("violations"),
+      coalesce(sum(col("deg")), lit(0L)).as("arcs"))
+    // one observation per plan: `e` is sealed, so no earlier test's
+    // observation is part of this plan
+    val name = "graft_cc_star_test"
+    val observed = bothWays(e).groupBy("src")
+      .agg(min("dst").as("mn"), max("dst").as("mx"), count(lit(1)).as("deg"))
+      .observe(name, stats.head, stats.tail: _*)
+    val sealedTest = graft.util.Seal(observed)
+    val row = observed.queryExecution.observedMetrics.getOrElse(name,
+      sealedTest.agg(stats.head, stats.tail: _*).first())
+    // every edge is counted once from each endpoint
+    (sealedTest, row.getLong(0), row.getLong(1) / 2)
+  }
+
+  /** ONE alternating large-star + small-star round (lazy plan) over an
+    * edge frame with src > dst; returns the same form, distinct.
+    *   large star: for every node u, attach all neighbours v > u to the
+    *     minimum of (u ∪ neighbours) — both edge directions participate;
+    *   small star: edges then satisfy src > dst; for each u attach u and
+    *     all its smaller neighbours to the minimum neighbour.
+    * No distinct between the stars: duplicates in the large-star output do
+    * not change the small-star window minimum, and the final distinct
+    * dedups the round's output. */
+  private def round(cur: DataFrame): DataFrame = {
+    val w = Window.partitionBy("src")
+    val large = bothWays(cur)
+      .withColumn("m", least(min("dst").over(w), col("src")))
+      .where(col("dst") > col("src"))
+      .select(col("dst").as("src"), col("m").as("dst")) // src > dst
+    val withMin = large.withColumn("m", min("dst").over(w))
+    withMin
+      .select(col("src"), col("m").as("dst"))
+      .union(withMin.where(col("dst") =!= col("m"))
+        .select(col("dst").as("src"), col("m").as("dst")))
+      .where(col("src") =!= col("dst"))
+      .distinct()
   }
 }

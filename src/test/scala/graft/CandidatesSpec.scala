@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.candidates.Candidates
-import graft.cluster.ConnectedComponents
+import graft.schema.NearDupConfig
+import graft.util.CacheScope
 
 /** Candidate generation: exact pair semantics for small buckets, salting
   * behavior (connectivity + bounded pair count + metrics) for hot buckets. */
@@ -31,7 +32,7 @@ class CandidatesSpec extends SparkSpec {
     assert(nPairs < n.toLong * cap, s"salted pair count $nPairs not bounded")
     assert(nPairs >= n - 1, "must keep at least a spanning structure")
     // connectivity: all n ids still form ONE component
-    val cc = ConnectedComponents.run(p.select("id1", "id2"))
+    val cc = CcTestKit.run(p.select("id1", "id2"))
     assert(cc.select("cluster_id").distinct().count() == 1)
     assert(cc.count() == n)
     val m = metrics.first()
@@ -141,11 +142,40 @@ class CandidatesSpec extends SparkSpec {
     assert(query == Set(("a", "c")), s"query path got $query")
   }
 
+  test("caption-LSH edges: a hot near-dup bucket leaves as a per-partition forest") {
+    // n near-identical captions (J = 18/20 on 3-shingles) in one LSH bucket
+    // above the cap, plus identical-caption copies of some of them
+    val n = 80
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val df = ((0 until n).map(i => (i.toLong, s"$base v$i")) ++
+              (0 until 10).map(i => (1000L + i, s"$base v$i"))).toDF("id", "caption")
+    val cfg = NearDupConfig(maxBucketSize = 16)
+    val (edges, metrics) = Candidates.captionLshEdges(df, "id", "caption", cfg)
+    assert(metrics.first().getLong(0) > 0, "the bucket is above the cap (salted)")
+    val parts = edges.rdd.getNumPartitions
+    val nEdges = edges.count()
+    assert(nEdges <= parts.toLong * (n + 10 - 1),
+      s"$nEdges edges over $parts partitions: not a per-partition forest")
+    assert(edges.where(col("id1") >= col("id2")).isEmpty)
+    assert(edges.select("kind").distinct().as[String].collect().toSeq == Seq("caption_lsh"))
+    // the same components as the verified rep pairs ∪ member stars
+    val Seq(repPairs, stars) = CacheScope.sealMany { scope =>
+      val (rp, members, _, _) = Candidates.captionLshPartsIn(df, "id", "caption", cfg)(scope)
+      Seq(rp, members.where(col("id") =!= col("rep"))
+        .select(col("rep").as("id1"), col("id").as("id2")))
+    }
+    def clusters(e: org.apache.spark.sql.DataFrame) =
+      CcTestKit.run(e).as[(Long, Long)].collect().toMap
+    val expected = clusters(repPairs.unionByName(stars))
+    assert(expected.values.toSet.size == 1 && expected.size == n + 10)
+    assert(clusters(edges.select("id1", "id2")) == expected)
+  }
+
   test("star edges for exact groups are linear in group size") {
     val keyed = (0 until 50).map(i => (f"id_$i%03d", "k1")).toDF("image_id", "key")
     val edges = Candidates.exactEdges(keyed, "image_id", "key")
     assert(edges.count() == 49, "star = n-1 edges, not n(n-1)/2")
-    val cc = ConnectedComponents.run(edges.select("id1", "id2"))
+    val cc = CcTestKit.run(edges.select("id1", "id2"))
     assert(cc.select("cluster_id").distinct().count() == 1)
   }
 }

@@ -125,4 +125,30 @@ class CheckpointedRunSpec extends SparkSpec {
     assert(mB("cache_hits") == 0, "no cross-kind cache hits")
     corpus.unpersist()
   }
+
+  test("a stage that throws releases the run's persisted frames") {
+    val corpus = Corpus.generate(spark, nClusters = 12).toDF().cache()
+    corpus.count()
+    val sc = spark.sparkContext
+    // checkpointed blocks are reclaimed by the ContextCleaner after GC
+    def persisted(base: Int): Int = {
+      var tries = 0
+      while (sc.getPersistentRDDs.size > base && tries < 40) {
+        System.gc(); Thread.sleep(50); tries += 1
+      }
+      sc.getPersistentRDDs.size
+    }
+    val before = persisted(0)
+    val root = Files.createTempDirectory("graft_ckpt_fault").toString
+    // every row is a cache miss, so the edges stage merges — and fails there
+    graft.state.HashCache.mergeStep = step =>
+      if (step == "staged") throw new IllegalStateException("injected fault")
+    try {
+      val e = intercept[IllegalStateException](
+        Dedup.runCheckpointed(corpus, DedupConfig(), root).count())
+      assert(e.getMessage == "injected fault")
+    } finally graft.state.HashCache.mergeStep = _ => ()
+    assert(persisted(before) == before, "the failed run left persisted frames behind")
+    corpus.unpersist()
+  }
 }

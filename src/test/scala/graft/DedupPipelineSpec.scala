@@ -100,4 +100,13 @@ class DedupPipelineSpec extends SparkSpec {
     // every action row accounted for: same count as filtered input
     assert(actions.count() == corpus.count())
   }
+
+  test("the engine leaves the caller's job description as it found it") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller: nightly dedup")
+    try {
+      Dedup.run(corpus.toDF(), DedupConfig()).count()
+      assert(sc.getLocalProperty("spark.job.description") == "caller: nightly dedup")
+    } finally sc.setJobDescription(null)
+  }
 }

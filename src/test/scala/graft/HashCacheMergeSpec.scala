@@ -169,8 +169,7 @@ class HashCacheMergeSpec extends SparkSpec {
       assert(ids.distinct.size == ids.size, s"$name: no image_id is cached twice")
       assert(stagingDirs(s"$cache/partial").isEmpty)
     }
-    // the interrupted runs' persisted hits/fresh frames
-    spark.catalog.clearCache()
+    corpus.unpersist()
   }
 
   test("job counts: reads submit no job, lookup and merge do not grow with the partitions") {
