@@ -140,8 +140,9 @@ object Dedup {
     * barriers and fixed per-stage costs — the dominant term of the
     * measured flat scaling residue (BASELINE.md round 2); concurrently it
     * is their MAX, and the scheduler backfills idle cores of one source's
-    * barrier with another source's tasks. */
-  /** @param dedup apply a final global `distinct` across sources. The
+    * barrier with another source's tasks.
+    *
+    * @param dedup apply a final global `distinct` across sources. The
     *   public contract keeps it true; the clustering pipeline passes false —
     *   ConnectedComponents contracts duplicates away in its first pass, so
     *   a union-level distinct there is a full shuffle of the edge set for
@@ -150,7 +151,7 @@ object Dedup {
                      hashCol: Option[String] = None,
                      dedup: Boolean = true): (DataFrame, DataFrame) = {
     val features = featurize(df, cfg, hashCol)
-    val (e, m) = candidateEdgesFromFeatures(features, cfg, dedup = false)
+    val (e, m) = candidateEdgesFromFeatures(features, cfg)
     // public contract: edges over image ids, id1 < id2 — remap the run-local
     // surrogate ids back (two slim long-keyed joins) and re-orient, since
     // iid order is not image_id order
@@ -166,8 +167,7 @@ object Dedup {
   /** Candidate edges over an already-featurized slim frame (see
     * `featurize`): (edges(id1,id2) over SURROGATE iids, metrics). */
   private[graft] def candidateEdgesFromFeatures(
-      features: DataFrame, cfg: DedupConfig,
-      dedup: Boolean = true): (DataFrame, DataFrame) = {
+      features: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
     val spark = features.sparkSession
     import spark.implicits._
     import scala.concurrent.{Await, Future}
@@ -204,8 +204,7 @@ object Dedup {
     val metrics = results.flatMap(_._2).foldLeft(
       Seq.empty[(String, Long, Long)].toDF("source", "salted_buckets", "salt_groups"))(
       _ unionByName _)
-    val out = edges.select("id1", "id2")
-    (if (dedup) out.distinct() else out, metrics)
+    (edges.select("id1", "id2"), metrics)
   }
 
   /** Full clustering: every (filtered) row tagged with its duplicate
@@ -237,7 +236,7 @@ object Dedup {
   def run(df: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
     val filtered = filterRows(df, cfg.filter)
     val features = featurize(filtered, cfg)
-    val (edges, _) = candidateEdgesFromFeatures(features, cfg, dedup = false)
+    val (edges, _) = candidateEdgesFromFeatures(features, cfg)
     val cc = ConnectedComponents.runMapping(edges)
     // surrogate-id components → the public cluster naming (min image_id of
     // the component, singletons to themselves): one groupBy + join over the

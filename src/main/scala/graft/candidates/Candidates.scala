@@ -16,6 +16,12 @@ import graft.util.CacheScope
   * `captionLshEdges`): the same components as its verified pairs, not the
   * pairs themselves, and an edge may repeat across partitions.
   *
+  * One body per technique: the lazy `*In` bodies here are also the
+  * `DocOps` pair listings' (`captionLshPartsIn` + `expandRepPairs` for
+  * MinHash-LSH, `multiIndexHammingPairsIn` + `expandRepPairs` for SimHash,
+  * `containmentPairsIn` for containment); each public call only picks the
+  * output form and the sealing mode.
+  *
   * At 100 TB the invariant is: NEVER a cartesian product; every candidate
   * source is an equi-join on a blocking key (exact key, LSH band hash,
   * Hamming band, shingle block), so Spark shuffles each side once on that
@@ -188,11 +194,11 @@ object Candidates {
     *                            whose within-pairs qualify at Jaccard 1)
     * The engine edge source contracts pairs and groups into a forest
     * (`captionLshEdges`); pair-listing queries expand to member level
-    * (`expandRepPairs`). */
-  /** Lazy body of the MinHash+LSH machinery — see `pairsWithinBucketsIn`.
-    * Consumers: `captionLshEdges` (flagship, sealed concurrent mode) and
-    * DocOps.minhashLshPairs/minhashLshEdges (query surfaces, deferred
-    * mode). */
+    * (`expandRepPairs`).
+    *
+    * Lazy — see `pairsWithinBucketsIn`. Consumers: `captionLshEdges`
+    * (flagship, sealed concurrent mode) and DocOps.minhashLshPairs/
+    * minhashLshEdges (query surfaces, deferred mode). */
   private[graft] def captionLshPartsIn(df: DataFrame, idCol: String, captionCol: String,
                                        cfg: NearDupConfig,
                                        pairComplete: Boolean = false)(scope: CacheScope)
@@ -274,29 +280,36 @@ object Candidates {
     * connected groups, plus every within-group pair of groups in
     * `cliqueReps` (identical content ⇒ similarity 1 ⇒ qualifies, provided
     * the content produced a signature at all — callers pass the shingled
-    * reps). Output is Θ(listing size), inherent to pair listing; the
-    * cluster pipeline never calls this (stars suffice there).
+    * or signed reps). Columns of `repPairs` beyond (id1, id2) ride along
+    * on the cross pairs (identical content ⇒ a member pair inherits its
+    * rep pair's values); `cliqueCols` gives the same columns' values for
+    * the clique rows (e.g. SimHash's `lit(0).as("hamming_d")`). Output
+    * (id1, id2, extras…) with id1 < id2, Θ(listing size), inherent to
+    * pair listing; the cluster pipeline never calls this (stars suffice
+    * there).
     *
-    * PRECONDITION: `repPairs` is distinct (every caller's verify stage ends
-    * in a distinct candidate set joined 1:1 per side). The output is then
-    * distinct WITHOUT a final exchange: member→rep is functional, so a
-    * cross pair {m1,m2} determines its rep pair uniquely (no duplicate
-    * across rep pairs) and appears once per rep pair; cliques are ordered
-    * within-group pairs (unique); and cross (different reps) is disjoint
-    * from cliques (same rep). The old trailing `.distinct()` was a full
-    * extra shuffle of the listing — the operator's LARGEST frame. */
+    * PRECONDITION: `repPairs` is distinct (both callers' verify stages end
+    * in a distinct candidate set joined 1:1 per side — asserted by
+    * OpsSpec). The output is then distinct WITHOUT a final exchange:
+    * member→rep is functional, so a cross pair {m1,m2} determines its rep
+    * pair uniquely (no duplicate across rep pairs) and appears once per rep
+    * pair; cliques are ordered within-group pairs (unique); and cross
+    * (different reps) is disjoint from cliques (same rep). A trailing
+    * `.distinct()` would be a full extra shuffle of the listing — the
+    * operator's LARGEST frame. */
   def expandRepPairs(repPairs: DataFrame, members: DataFrame,
-                     cliqueReps: DataFrame): DataFrame = {
+                     cliqueReps: DataFrame, cliqueCols: Seq[Column] = Nil): DataFrame = {
+    val extras = repPairs.columns.filterNot(Set("id1", "id2")).map(col).toSeq
     val cross = repPairs
       .join(members.select(col("rep").as("id1"), col("id").as("_m1")), "id1")
       .join(members.select(col("rep").as("id2"), col("id").as("_m2")), "id2")
-      .select(least(col("_m1"), col("_m2")).as("id1"),
-              greatest(col("_m1"), col("_m2")).as("id2"))
+      .select((least(col("_m1"), col("_m2")).as("id1") +:
+               greatest(col("_m1"), col("_m2")).as("id2") +: extras): _*)
     val grouped = members.join(cliqueReps, Seq("rep"), "left_semi")
     val cliques = grouped.select(col("rep"), col("id").as("_a"))
       .join(grouped.select(col("rep"), col("id").as("_b")), "rep")
       .where(col("_a") < col("_b"))
-      .select(col("_a").as("id1"), col("_b").as("id2"))
+      .select((col("_a").as("id1") +: col("_b").as("id2") +: cliqueCols): _*)
     cross.unionByName(cliques)
   }
 
@@ -312,23 +325,8 @@ object Candidates {
   def multiIndexHammingPairs(df: DataFrame, idCol: String, hashCol: String,
                              bands: Int, subRadius: Int, radius: Int,
                              dfCap: Int = 256): DataFrame =
-    multiIndexHammingPairsWithStats(df, idCol, hashCol, bands, subRadius,
-      radius, dfCap)._1
-
-  /** As `multiIndexHammingPairs`, plus a 1-row metrics frame
-    * (salted_buckets = hot band buckets dropped by `dfCap`,
-    * salt_groups = index rows those buckets held). */
-  def multiIndexHammingPairsWithStats(
-      df: DataFrame, idCol: String, hashCol: String,
-      bands: Int, subRadius: Int, radius: Int,
-      dfCap: Int = 256): (DataFrame, DataFrame) = {
-    val Seq(pairs, metrics) = CacheScope.sealMany { scope =>
-      val (p, m) = multiIndexHammingPairsIn(df, idCol, hashCol, bands,
-        subRadius, radius, dfCap)(scope)
-      Seq(p, m)
-    }
-    (pairs, metrics)
-  }
+    CacheScope.seal(multiIndexHammingPairsIn(df, idCol, hashCol, bands,
+      subRadius, radius, dfCap)(_)._1)
 
   /** Lazy body of `multiIndexHammingPairs` — see `pairsWithinBucketsIn`.
     *
@@ -347,7 +345,7 @@ object Candidates {
   private[graft] def multiIndexHammingPairsIn(
       df: DataFrame, idCol: String, hashCol: String,
       bands: Int, subRadius: Int, radius: Int,
-      dfCap: Int = 256)(scope: CacheScope): (DataFrame, DataFrame) = {
+      dfCap: Int)(scope: CacheScope): (DataFrame, DataFrame) = {
     require(bands * (subRadius + 1) - 1 >= radius,
       s"multi-index guarantee ${bands * (subRadius + 1) - 1} below radius $radius")
     val width = 64 / bands
@@ -440,24 +438,39 @@ object Candidates {
     (edges, metrics)
   }
 
-  /** Contained-caption candidates: short caption is a substring of a longer
-    * one AT WORD BOUNDARIES (both sides space-padded — the same contract as
-    * DocOps.containmentPairs). Blocking: a containment pair must share every shingle of the short
-    * side, so any ONE shingle of the short side is a recall-lossless block
-    * key (for captions with ≥ k tokens) — and picking the short side's
-    * **globally least frequent** shingle (classic prefix filtering, à la
-    * PPJoin) minimizes bucket sizes: a naive "first shingle" key degenerates
-    * when many captions share a prefix (exactly the skew-block shape).
-    * Verified with an exact `instr` check — never a cartesian product. */
+  /** Contained-caption candidate edges: `containmentPairsIn`'s listing,
+    * oriented `id1 < id2`, kind `containment`. Returns (id1, id2, kind). */
   def containmentEdges(df: DataFrame, idCol: String, captionCol: String,
                        cfg: NearDupConfig): DataFrame =
     CacheScope.seal(containmentEdgesIn(df, idCol, captionCol, cfg)(_))
 
-  /** Lazy body of `containmentEdges` — see `pairsWithinBucketsIn`. */
+  /** Lazy body of `containmentEdges` — see `pairsWithinBucketsIn`. No
+    * distinct after orienting: the listing's strict length test lets a
+    * pair appear in one orientation only. */
   private[graft] def containmentEdgesIn(df: DataFrame, idCol: String, captionCol: String,
-                                        cfg: NearDupConfig)(scope: CacheScope): DataFrame = {
-    // no defensive distinct: idCol is the row identity, so (id, caption)
-    // rows are unique already — a distinct here is a full no-op shuffle.
+                                        cfg: NearDupConfig)(scope: CacheScope): DataFrame =
+    containmentPairsIn(df, idCol, captionCol, cfg.shingleK)(scope)
+      .select(least(col("short_id"), col("long_id")).as("id1"),
+              greatest(col("short_id"), col("long_id")).as("id2"),
+              lit("containment").as("kind"))
+
+  /** Contained-text pairs, the one containment body behind the flagship
+    * source (`containmentEdges`) and the pair listing
+    * (`DocOps.containmentPairs`): the shorter normalized text is a
+    * substring of the longer one AT WORD BOUNDARIES (both sides
+    * space-padded). Blocking: a containment pair must share every shingle
+    * of the short side, so any ONE shingle of the short side is a
+    * recall-lossless block key (for texts with ≥ k tokens) — and picking
+    * the short side's **globally least frequent** shingle (classic prefix
+    * filtering, à la PPJoin) minimizes bucket sizes: a naive "first
+    * shingle" key degenerates when many texts share a prefix (exactly the
+    * skew-block shape). Verified with an exact `instr` check — never a
+    * cartesian product. Lazy (intermediates persist into `scope`); output
+    * (short_id, long_id), distinct. */
+  private[graft] def containmentPairsIn(df: DataFrame, idCol: String, textCol: String,
+                                        k: Int)(scope: CacheScope): DataFrame = {
+    // no defensive distinct: idCol is the row identity, so (id, text) rows
+    // are unique already — a distinct here is a full no-op shuffle.
     // Shingles are JVM-hashed longs (Keys.shingleHashUdf): block-key joins
     // and df counts are identity-equivalent on the 8-byte hash, and the
     // substring verify below uses the strings, never the shingles.
@@ -465,8 +478,8 @@ object Candidates {
     // materializes independent exchange subtrees concurrently — a lazy
     // persist would be recomputed by each racing stage (see persistEager).
     val norm = scope.persistEager(df
-      .select(col(idCol), Keys.normCaption(col(captionCol)).as("_nc"))
-      .withColumn("_sh", Keys.shingleHashUdf(cfg.shingleK)(col("_nc")))
+      .select(col(idCol), Keys.normCaption(col(textCol)).as("_nc"))
+      .withColumn("_sh", Keys.shingleHashUdf(k)(col("_nc")))
       .where(size(col("_sh")) > 0))
     // ship (id, text-LENGTH, block) — never the text itself: the exploded
     // frame is ~shingles×docs rows and feeds the argmin and block joins;
@@ -491,33 +504,30 @@ object Candidates {
       .groupBy(col(idCol))
       .agg(min_by(struct(col("block"), col("_len")),
                   struct(coalesce(col("_df"), lit(1L)), col("block"))).as("_pick"))
-      .select(col(idCol).as("sid"), col("_pick._len").as("_slen"),
+      .select(col(idCol).as("short_id"), col("_pick._len").as("_slen"),
               col("_pick.block").as("block"))
     // the long side IS the exploded frame (same rows, renamed) — a
     // separate re-explode of `norm` here was a third full pass at 1M docs
-    val long = exploded.select(col(idCol).as("lid"), col("_len").as("_llen"),
+    val long = exploded.select(col(idCol).as("long_id"), col("_len").as("_llen"),
                                col("block"))
-    // (sid, block) is unique (one chosen block/doc) and (lid, block) is
-    // unique (array_distinct shingles), so the join emits each candidate
-    // pair at most once — no pre-verify dedup needed
+    // (short_id, block) is unique (one chosen block/doc) and (long_id,
+    // block) is unique (array_distinct shingles), so the join emits each
+    // candidate pair at most once — no pre-verify dedup needed. The text
+    // STRINGS rejoin for candidate pairs only; no join hints: AQE
+    // broadcasts the cached `norm` side at the benchmark sizes, where
+    // SHUFFLE_HASH hints forced two shuffles.
     short.join(long, "block")
-      .where(col("sid") =!= col("lid") && col("_llen") > col("_slen"))
-      .select("sid", "lid")
-      // SHUFFLE_HASH: avoid sort-merge sorting the string+array norm frame
-      .join(norm.select(col(idCol).as("sid"), col("_nc").as("s_nc"))
-                .hint("SHUFFLE_HASH"), "sid")
-      .join(norm.select(col(idCol).as("lid"), col("_nc").as("l_nc"))
-                .hint("SHUFFLE_HASH"), "lid")
-      // word-boundary containment — both sides space-padded, IDENTICAL to
-      // DocOps.containmentPairs and the DuckDB oracle: an unpadded instr
-      // admits mid-token matches ("he cat" ⊂ "the cats"), merging clusters
-      // the documented contract excludes (regression: CandidatesSpec's
-      // mid-token case)
+      .where(col("short_id") =!= col("long_id") && col("_llen") > col("_slen"))
+      .select("short_id", "long_id")
+      .join(norm.select(col(idCol).as("short_id"), col("_nc").as("s_nc")), "short_id")
+      .join(norm.select(col(idCol).as("long_id"), col("_nc").as("l_nc")), "long_id")
+      // word-boundary containment — both sides space-padded, the DuckDB
+      // oracle's contract: an unpadded instr admits mid-token matches
+      // ("he cat" ⊂ "the cats"), merging clusters the documented contract
+      // excludes (regression: CandidatesSpec's mid-token case)
       .where(instr(concat(lit(" "), col("l_nc"), lit(" ")),
                    concat(lit(" "), col("s_nc"), lit(" "))) > 0)
-      .select(least(col("sid"), col("lid")).as("id1"),
-              greatest(col("sid"), col("lid")).as("id2"),
-              lit("containment").as("kind"))
+      .select("short_id", "long_id")
       .distinct()
   }
 }

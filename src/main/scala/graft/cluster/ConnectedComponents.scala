@@ -21,10 +21,11 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *     nodes that are neither a root (every neighbour larger) nor a leaf
   *     (one neighbour, smaller). Zero such nodes means every component is a
   *     star on its minimum id, and the leaf rows ARE the mapping.
-  *   - Otherwise `roundsPerJob` rounds (three exchanges each: the two star
-  *     windows and the round's `distinct`) run in one lazily-sealed batch
-  *     that the next test's job materializes — one test job per batch,
-  *     O(log n) rounds.
+  *   - Otherwise a batch of rounds (three exchanges each: the two star
+  *     windows and the round's `distinct`; one round per batch below
+  *     `AutoChainEdges` edges, else two) runs lazily sealed, and the next
+  *     test's job materializes it — one test job per batch, O(log n)
+  *     rounds.
   *
   * The neighbourhood minimum uses a window `min`, never `collect_list`, so
   * a degenerate high-degree node (the skew block's star root) never
@@ -32,18 +33,22 @@ import org.apache.spark.sql.types.{StructField, StructType}
   */
 object ConnectedComponents {
 
-  /** Edge count below which `roundsPerJob` auto-resolves to 1 (un-chained
-    * rounds). Chaining two rounds per job QUADRUPLES the per-batch logical
-    * plan, and per-batch cost is super-linear in plan size on the driver
-    * (AQE re-optimizes the whole plan at every exchange materialization).
-    * Measured on a 250-edge graph, warm: rpj=1 2.3 s vs rpj=2 4.5 s vs
-    * rpj=4 50-145 s — below the threshold the batch is driver-planning-
-    * bound and chaining is counterproductive. Above it task execution
+  /** Edge count below which a batch is one round (un-chained rounds), and
+    * at or above which it is two. Chaining two rounds per job QUADRUPLES
+    * the per-batch logical plan, and per-batch cost is super-linear in plan
+    * size on the driver (AQE re-optimizes the whole plan at every exchange
+    * materialization). Measured on a 250-edge graph, warm, by rounds per
+    * batch: 1 → 2.3 s, 2 → 4.5 s, 4 → 50-145 s — below the threshold the
+    * batch is driver-planning-bound and chaining is counterproductive. Above it task execution
     * dominates and chaining halves the materialization barriers (the flat
     * cost that caps scaling efficiency at high core counts — the 4M-image
-    * ScalingBench regime, ~2-4M edges, keeps rpj=2). The count is the
+    * ScalingBench regime, ~2-4M edges, keeps two). The count is the
     * edge count of the graph the rounds run on (the contracted one). */
   val AutoChainEdges = 1L << 20
+
+  /** Rounds after which the loop gives up and throws: O(log n) rounds
+    * converge any graph the engine meets far below this. */
+  private val MaxRounds = 50
 
   /** Nodes a task's union-find holds before it emits its stars and starts
     * over: bounds the per-task map whatever the partition size. */
@@ -57,20 +62,13 @@ object ConnectedComponents {
     * @param edges frame whose first two columns (one id type, any
     *   `Comparable` — Long and String in the engine) name an undirected
     *   edge; nulls, self-loops and duplicates are fine.
-    * @param roundsPerJob large-star/small-star rounds chained per
-    *   materialized batch. Every materialization is a cluster barrier; 0
-    *   (default) = adaptive: 1 below `AutoChainEdges` contracted edges,
-    *   else 2.
     * @throws IllegalStateException if the rounds have not converged after
-    *   `maxIter` rounds (the mapping would be wrong). */
-  def runMapping(edges: DataFrame, maxIter: Int = 50,
-                 roundsPerJob: Int = 0): DataFrame =
-    mappingAndRounds(edges, maxIter, roundsPerJob)._1
+    *   `MaxRounds` rounds (the mapping would be wrong). */
+  def runMapping(edges: DataFrame): DataFrame = mappingAndRounds(edges)._1
 
   /** `runMapping` plus the number of large-star/small-star rounds it ran
     * (0 when the contracted input was already a star forest). */
-  private[graft] def mappingAndRounds(edges: DataFrame, maxIter: Int = 50,
-                                      roundsPerJob: Int = 0): (DataFrame, Int) =
+  private[graft] def mappingAndRounds(edges: DataFrame): (DataFrame, Int) =
     // tag every CC job for stage attribution (listeners, UIs)
     graft.util.JobDescription.tagged(edges.sparkSession.sparkContext, "graft:cc") {
       // lazy seal: the first test's job reads the caller's edges ONCE and
@@ -80,16 +78,15 @@ object ConnectedComponents {
       val (t0, v0, nEdges) = starTest(e)
       var t = t0
       var violations = v0
-      val rpj = if (roundsPerJob > 0) roundsPerJob
-                else if (nEdges < AutoChainEdges) 1 else 2
+      val rpj = if (nEdges < AutoChainEdges) 1 else 2
       var rounds = 0
       while (violations > 0) {
-        if (rounds >= maxIter)
+        if (rounds >= MaxRounds)
           throw new IllegalStateException(
-            s"connected components did not converge in $maxIter rounds")
+            s"connected components did not converge in $MaxRounds rounds")
         var cur = e
         var r = 0
-        while (r < rpj && rounds + r < maxIter) { cur = round(cur); r += 1 }
+        while (r < rpj && rounds + r < MaxRounds) { cur = round(cur); r += 1 }
         // lazy seal: truncates the plan (a persist alone leaves the tree
         // growing exponentially across batches); the test's job builds it
         e = graft.util.Seal(cur, eager = false)

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.candidates.Candidates
 import graft.keys.Keys
 import graft.schema.NearDupConfig
 import graft.util.CacheScope
@@ -31,7 +32,7 @@ object DocOps {
     * Output: (doc1, doc2, n_inter, n_union). */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    k: Int, thresholdPct: Int): DataFrame = CacheScope.deferred { scope =>
-    // distinct shingles as 8-byte JVM hashes (see Candidates.containmentEdges
+    // distinct shingles as 8-byte JVM hashes (see Candidates.containmentPairsIn
     // — set identity is preserved modulo 64-bit collisions ~1e-19/pair)
     val withSh = scope.persistEager(docs
       .select(col(idCol).as("doc_id"),
@@ -44,7 +45,7 @@ object DocOps {
     // provably): the frequency frame shrinks from |vocabulary| to |shingles
     // shared by ≥2 docs|, which AQE broadcasts on a near-dup-sparse corpus
     // — the exploded frame is then never shuffled by shingle for the
-    // lookup. Same trick as containmentPairs / containmentEdgesIn, ported
+    // lookup. Same trick as Candidates.containmentPairsIn, ported
     // round 6 (the inner join against the full frequency table was this
     // operator's largest exchange).
     val freq = exploded.groupBy("s").agg(count(lit(1)).as("_df"))
@@ -99,9 +100,9 @@ object DocOps {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       cfg: NearDupConfig): DataFrame = CacheScope.deferred { scope =>
     val (repPairs, members, shingledReps, _) =
-      graft.candidates.Candidates.captionLshPartsIn(docs, idCol, textCol, cfg,
+      Candidates.captionLshPartsIn(docs, idCol, textCol, cfg,
         pairComplete = true)(scope)
-    graft.candidates.Candidates.expandRepPairs(repPairs, members, shingledReps)
+    Candidates.expandRepPairs(repPairs, members, shingledReps)
       .select(col("id1").as("doc1"), col("id2").as("doc2"))
   }
 
@@ -118,7 +119,7 @@ object DocOps {
   def minhashLshEdges(docs: DataFrame, idCol: String, textCol: String,
                       cfg: NearDupConfig): DataFrame = CacheScope.deferred { scope =>
     val (repPairs, members, shingledReps, _) =
-      graft.candidates.Candidates.captionLshPartsIn(docs, idCol, textCol, cfg,
+      Candidates.captionLshPartsIn(docs, idCol, textCol, cfg,
         pairComplete = true)(scope)
     val stars = members.join(shingledReps, Seq("rep"), "left_semi")
       .where(col("id") =!= col("rep"))
@@ -127,58 +128,13 @@ object DocOps {
       .unionByName(stars)
   }
 
-  /** Contained-text pairs: shorter text is a substring of the longer (at
-    * word boundaries — both sides space-padded). Blocking: every shingle of
-    * the short side must appear in the long side, so any one shingle is a
-    * recall-lossless block key; picking the short side's globally LEAST
-    * FREQUENT shingle (classic prefix filtering, à la PPJoin) minimizes
-    * bucket sizes — a naive first-shingle key degenerates quadratically
-    * when many texts share a prefix. Output (short_id, long_id). */
+  /** Contained-text pairs: the shorter normalized text is a substring of
+    * the longer at word boundaries. The body is the flagship containment
+    * source's (`Candidates.containmentPairsIn`: least-frequent-shingle
+    * blocking, exact padded `instr` verify). Output (short_id, long_id). */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int): DataFrame = CacheScope.deferred { scope =>
-    // shingles are JVM-hashed longs (see Candidates.containmentEdges —
-    // block identity only; the substring verify uses the strings)
-    // eager: feeds several AQE-concurrent exchanges (see CacheScope.persistEager)
-    val norm = scope.persistEager(docs
-      .select(col(idCol).as("doc_id"), Keys.normCaption(col(textCol)).as("_nc"))
-      .withColumn("_sh", Keys.shingleHashUdf(k)(col("_nc")))
-      .where(size(col("_sh")) > 0))
-    // ship (id, text-LENGTH, block) — never the text: see
-    // Candidates.containmentEdgesIn (3.6 GB → ~0.7 GB shuffle at 1M docs)
-    val exploded = norm.select(col("doc_id"), length(col("_nc")).as("_len"),
-                               explode(col("_sh")).as("block"))
-    // per-doc argmin by (df, shingle): frequency table filtered to df ≥ 2
-    // blocks (absent ⇒ df = 1 — same ordering, provably) so the df lookup
-    // left-joins a small broadcastable frame instead of shuffling the
-    // ~(shingles×docs) exploded frame by block — see containmentEdgesIn.
-    // min_by, NOT a row_number window: the hash aggregate map-side-combines
-    // each partition down to one row per doc before the shuffle.
-    val freq = exploded.groupBy("block").agg(count(lit(1)).as("_df"))
-      .where(col("_df") > 1)
-    val short = exploded.join(freq, Seq("block"), "left")
-      .groupBy(col("doc_id"))
-      .agg(min_by(struct(col("block"), col("_len")),
-                  struct(coalesce(col("_df"), lit(1L)), col("block"))).as("_pick"))
-      .select(col("doc_id").as("short_id"), col("_pick._len").as("_slen"),
-              col("_pick.block").as("block"))
-    // the block join ships only (id, caption-length, block); the caption
-    // STRINGS rejoin below for candidate pairs only — the ~shingles×docs
-    // exploded shuffle carries ~45 B/row instead of the full text payload.
-    // (short_id, block) and (long_id, block) are both unique, so the join
-    // emits each candidate pair at most once. The long side IS the exploded
-    // frame — no separate re-explode pass.
-    val long = exploded.select(col("doc_id").as("long_id"),
-                               col("_len").as("_llen"), col("block"))
-    short.join(long, "block")
-      .where(col("short_id") =!= col("long_id") && col("_llen") > col("_slen"))
-      .select("short_id", "long_id")
-      .join(norm.select(col("doc_id").as("short_id"), col("_nc").as("s_nc")), "short_id")
-      .join(norm.select(col("doc_id").as("long_id"), col("_nc").as("l_nc")), "long_id")
-      .where(instr(concat(lit(" "), col("l_nc"), lit(" ")),
-                   concat(lit(" "), col("s_nc"), lit(" "))) > 0)
-      .select("short_id", "long_id")
-      .distinct()
-  }
+                       k: Int): DataFrame =
+    CacheScope.deferred(Candidates.containmentPairsIn(docs, idCol, textCol, k)(_))
 
   /** SimHash near-dup pairs — the classic web-dedup contract (Manku et
     * al., WWW'07): all pairs whose 64-bit SimHash signatures sit within
@@ -221,31 +177,15 @@ object DocOps {
     // dfCap disabled: this operator's contract is EXACT (every pair within
     // the radius, SQL-oracle-checked bit-for-bit), unlike the phash
     // candidate source where hot degenerate buckets are droppable
-    val (repPairs, _) = graft.candidates.Candidates.multiIndexHammingPairsIn(
+    val (repPairs, _) = Candidates.multiIndexHammingPairsIn(
       reps, "doc_id", "_sim",
       cfg.simhashBands, cfg.simhashSubRadius, cfg.simhashRadius,
       dfCap = Int.MaxValue)(scope)
-    // member expansion carrying the distance: cross pairs inherit the rep
-    // distance (identical text ⇒ identical signature); identical-text
-    // groups pair at distance 0
-    val cross = repPairs
-      .join(members.select(col("rep").as("id1"), col("id").as("_m1")), "id1")
-      .join(members.select(col("rep").as("id2"), col("id").as("_m2")), "id2")
-      .select(least(col("_m1"), col("_m2")).as("doc1"),
-              greatest(col("_m1"), col("_m2")).as("doc2"), col("hamming_d"))
-    val grouped = members
-      .join(reps.select(col("doc_id").as("rep")), Seq("rep"), "left_semi")
-    val cliques = grouped.select(col("rep"), col("id").as("_a"))
-      .join(grouped.select(col("rep"), col("id").as("_b")), "rep")
-      .where(col("_a") < col("_b"))
-      .select(col("_a").as("doc1"), col("_b").as("doc2"),
-              lit(0).as("hamming_d"))
-    // no trailing distinct: repPairs is distinct (multiIndexHammingPairsIn
-    // ends in one), member→rep is functional so cross pairs are unique, and
-    // cross (different reps) is disjoint from cliques (same rep) — see
-    // Candidates.expandRepPairs' precondition note. The old `.distinct()`
-    // re-shuffled the operator's largest frame for nothing.
-    cross.unionByName(cliques)
+    // member expansion: cross pairs inherit the rep distance (identical
+    // text ⇒ identical signature); identical-text groups pair at distance 0
+    Candidates.expandRepPairs(repPairs, members,
+        reps.select(col("doc_id").as("rep")), Seq(lit(0).as("hamming_d")))
+      .select(col("id1").as("doc1"), col("id2").as("doc2"), col("hamming_d"))
   }
 
   /** BPE-ish subtoken regex: alnum runs or single non-alnum-non-space marks

@@ -95,8 +95,7 @@ object FilterConfig {
   * exact-key only — near-dup axes mandated by BASELINE.json north_rule). */
 final case class NearDupConfig(
     shingleK: Int = 3,         // word k-grams over normalized caption
-    minhashLanes: Int = 64,    // signature length
-    lshBands: Int = 16,        // bands × rowsPerBand == minhashLanes
+    lshBands: Int = 16,        // MinHash signature length = bands × rowsPerBand
     lshRowsPerBand: Int = 4,
     jaccardThreshold: Double = 0.8,   // verify-stage exact Jaccard
     // pHash blocking: multi-index Hamming (Norouzi et al., CVPR'12).
@@ -132,10 +131,8 @@ final case class NearDupConfig(
     simhashBands: Int = 4,     // 4 × 16-bit chunks
     simhashSubRadius: Int = 1, // ≤1-flip probes per chunk (17 masks)
     simhashRadius: Int = 7,    // pair contract: bit_count(xor) ≤ radius
-    maxBucketSize: Int = 256,  // LSH bucket salting threshold; salted buckets are logged
-    salts: Int = 8             // salt fan-out for hot buckets
+    maxBucketSize: Int = 256   // LSH bucket salting threshold; salted buckets are logged
 ) {
-  require(lshBands * lshRowsPerBand == minhashLanes, "bands*rows must equal lanes")
   require(64 % hammingBands == 0, "hash width must divide into equal chunks")
   require(hammingBands * (hammingSubRadius + 1) - 1 >= hammingRadius,
     "multi-index guarantee must cover the exact verify radius")

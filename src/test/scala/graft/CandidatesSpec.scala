@@ -131,15 +131,17 @@ class CandidatesSpec extends SparkSpec {
       ("a", "he cat sat"),
       ("b", "the cat sat here"),          // mid-token superstring of a — NOT a pair
       ("c", "oh he cat sat down"),        // word-boundary superstring of a — a pair
-      ("d", "unrelated words entirely here")
+      ("d", "unrelated words entirely here"),
+      ("z", "unrelated words entirely")   // contained in d, with the LARGER id
     ).toDF("image_id", "caption")
     val cfg = graft.schema.NearDupConfig()
+    // edge form orients id1 < id2; the listing keeps (short, long)
     val engine = Candidates.containmentEdges(df, "image_id", "caption", cfg)
       .select("id1", "id2").as[(String, String)].collect().toSet
-    assert(engine == Set(("a", "c")), s"engine path got $engine")
+    assert(engine == Set(("a", "c"), ("d", "z")), s"engine path got $engine")
     val query = graft.ops.DocOps.containmentPairs(df, "image_id", "caption", cfg.shingleK)
       .select("short_id", "long_id").as[(String, String)].collect().toSet
-    assert(query == Set(("a", "c")), s"query path got $query")
+    assert(query == Set(("a", "c"), ("z", "d")), s"query path got $query")
   }
 
   test("caption-LSH edges: a hot near-dup bucket leaves as a per-partition forest") {

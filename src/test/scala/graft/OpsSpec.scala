@@ -68,6 +68,43 @@ class OpsSpec extends SparkSpec {
     assert(sim == oracle, s"missing=${(oracle -- sim).take(5)} extra=${(sim -- oracle).take(5)}")
   }
 
+  test("expandRepPairs precondition: both callers' rep pairs are distinct") {
+    // expandRepPairs drops its trailing distinct on the strength of this
+    // precondition, for the MinHash-LSH and the SimHash listings alike
+    import graft.candidates.Candidates
+    import graft.util.CacheScope
+    def assertDistinct(tag: String, pairs: org.apache.spark.sql.DataFrame): Unit = {
+      val n = pairs.count()
+      assert(n > 0, s"$tag: the fixture must yield pairs")
+      assert(pairs.distinct().count() == n, s"$tag: duplicate rows")
+    }
+    // MinHash-LSH, pair-complete, over one planted bucket above the cap
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val planted = (0 until 80).map(i => (i.toLong, s"$base v$i")).toDF("id", "caption")
+    val capped = NearDupConfig(maxBucketSize = 16)
+    val Seq(lshPairs, lshMetrics) = CacheScope.sealMany { scope =>
+      val (rp, _, _, m) = Candidates.captionLshPartsIn(planted, "id", "caption", capped,
+        pairComplete = true)(scope)
+      Seq(rp, m)
+    }
+    assert(lshMetrics.first().getLong(0) > 0, "the bucket is above the cap (salted)")
+    assertDistinct("captionLshPartsIn", lshPairs)
+    // multi-index Hamming with the cap disabled, over real SimHash signatures
+    assume(haveTestdata)
+    import graft.keys.Keys
+    val sigs = docs
+      .select(col("doc_id"), Keys.tokens(Keys.normCaption(col("text"))).as("_t"))
+      .where(size(col("_t")) > 0)
+      .select(col("doc_id"), Keys.simhashMd5Udf(col("_t")).as("_sim"))
+    val hamming = CacheScope.seal(Candidates.multiIndexHammingPairsIn(sigs,
+      "doc_id", "_sim", cfg.simhashBands, cfg.simhashSubRadius,
+      cfg.simhashRadius, dfCap = Int.MaxValue)(_)._1)
+    assertDistinct("multiIndexHammingPairsIn", hamming)
+    // and the SimHash listing built on it
+    assertDistinct("simhashPairs",
+      DocOps.simhashPairs(docs, "doc_id", "text", cfg).select("doc1", "doc2"))
+  }
+
   test("token stats: subtoken regex counts match a hand example") {
     val df = Seq((1L, "Hello, world! It's 42%")).toDF("doc_id", "text")
     val r = DocOps.tokenStats(df, "doc_id", "text").first()
