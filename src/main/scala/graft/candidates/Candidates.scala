@@ -1,8 +1,9 @@
 package graft.candidates
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.cluster.ConnectedComponents
 import graft.keys.Keys
@@ -17,17 +18,19 @@ import graft.util.CacheScope
   * pairs themselves, and an edge may repeat across partitions.
   *
   * One body per technique: the lazy `*In` bodies here are also the
-  * `DocOps` pair listings' (`captionLshPartsIn` + `expandRepPairs` for
+  * `DocOps` pair listings' (`captionLshPartsIn` — grouped and verified
+  * inside each LSH bucket by `bucketPairs` — + `expandRepPairs` for
   * MinHash-LSH, `multiIndexHammingPairsIn` + `expandRepPairs` for SimHash,
   * `containmentPairsIn` for containment); each public call only picks the
   * output form and the sealing mode.
   *
   * At 100 TB the invariant is: NEVER a cartesian product; every candidate
-  * source is an equi-join on a blocking key (exact key, LSH band hash,
-  * Hamming band, shingle block), so Spark shuffles each side once on that
-  * key and AQE handles residual skew. Hot buckets are additionally capped
-  * with an explicit, logged truncation (reference analogue: the Bloom
-  * pre-filter bounded candidate work, duplicates_finder.py:70-104).
+  * source is blocked on a key (exact key, LSH band hash, Hamming band,
+  * shingle block) — an equi-join, or for caption-LSH one exchange on the
+  * bucket and an in-memory verify per bucket — and AQE handles residual
+  * skew. Hot buckets are additionally capped with an explicit, logged
+  * truncation (reference analogue: the Bloom pre-filter bounded candidate
+  * work, duplicates_finder.py:70-104).
   */
 object Candidates {
 
@@ -38,8 +41,8 @@ object Candidates {
     * is what clustering needs, and a star is the minimal edge set — turns
     * the reference's grouped-lists-by-key shape (duplicates_finder.py:161-
     * 175) into O(bucket) edges rather than O(bucket²). For *verified*
-    * near-dup sources we keep true pairs (each pair must pass its verify
-    * predicate) — see `pairsWithinBuckets`.
+    * near-dup sources each pair must pass its verify predicate — see
+    * `bucketPairs`.
     */
   def starWithinBuckets(keyed: DataFrame, idCol: String, keyCols: Seq[String],
                         kind: String): DataFrame = {
@@ -51,128 +54,126 @@ object Candidates {
       .distinct()
   }
 
-  /** All intra-bucket pairs (id1<id2), with **salting** of oversized
-    * buckets — the north_rule's explicit skew guard. `keyed` must have
-    * `idCol` + `keyCols`. Returns (pairs, metrics).
+  /** Verified near-dup pairs among LSH-banded rows, compared inside their
+    * bucket — the reference's group-then-compare shape
+    * (duplicates_finder.py:161-175), never a pair self-join. `shingled` has
+    * `idCol`, `_shh` (sorted distinct shingle hashes) and `_bands` (LSH
+    * band hashes); rows sharing a (band, band hash) bucket are candidates,
+    * kept when their integer-exact Jaccard passes (`inter·100 ≥
+    * union·thresholdPct`). Lazy. Returns (pairs(id1, id2) with id1 < id2,
+    * metrics(salted_buckets, salt_groups)).
     *
-    * Mechanics: bucket sizes come from a `groupBy().count()` (partial
-    * aggregation — skew-safe by construction); buckets ≤ `cap` produce the
-    * exact full pair set; a bucket of size s > cap is split into
-    * g = `ceil(s/cap)` salt sub-buckets by `xxhash64(keyCols, id) mod g`.
-    * The salt is BUCKET-dependent, never id-only: an id-only salt splits a
-    * pair identically in every bucket it shares, silently dropping it from
-    * pair listings; hashing (keyCols, id) makes the split independent per
-    * bucket (miss prob ≈ Π(1−1/g_k) over k shared buckets).
+    * Explode once into (id, _shh, band); one aggregate gives each bucket's
+    * size and minimum id, and a plain join drops singleton buckets (no
+    * hint: the frame grows with the corpus, and AQE broadcasts it when
+    * small). A bucket of s > `cap` rows is salted into g = ceil(s/cap)
+    * groups by pmod(xxhash64(band, band_hash, id), g) — bucket-dependent,
+    * so a pair split in one bucket is not split alike in the others. Then
+    * ONE exchange on the group key, a sort within partitions by (key, id),
+    * and a pass that holds one group at a time in memory (a salt group, or
+    * a listing tile of two).
     *
-    * Two modes:
-    *   - connectivity (default, `pairComplete = false`): pairs within each
-    *     salt group + a chain over per-salt minimum ids stitching the
-    *     groups — O(s·cap) pairs per bucket, one connected component, the
-    *     right shape for the CLUSTERING pipeline where stars/subsets
-    *     suffice.
-    *   - pair-complete (`pairComplete = true`): triangular tiling — each
-    *     pair of salt groups (i ≤ j) becomes one join tile, so the FULL
-    *     clique is produced while no task ever holds more than ~2·cap rows.
-    *     Total work is O(s²) — inherent to listing a quadratic output —
-    *     but memory-bounded and evenly spread. Pair-listing operators use
-    *     this mode; output size, not skew, is then the only cost.
-    *
-    * The bucket-size frame is tiny (one row per oversized bucket) so the
-    * size join broadcasts. */
-  def pairsWithinBuckets(keyed: DataFrame, idCol: String, keyCols: Seq[String],
-                         cap: Int, kind: String,
-                         pairComplete: Boolean = false,
-                         assumeDistinct: Boolean = false): (DataFrame, DataFrame) = {
-    val Seq(pairs, metrics) = CacheScope.sealMany { scope =>
-      val (p, m) = pairsWithinBucketsIn(keyed, idCol, keyCols, cap, kind,
-        pairComplete, assumeDistinct)(scope)
-      Seq(p, m)
-    }
-    (pairs, metrics)
+    * Two forms, differing only inside the group:
+    *   - connectivity (`pairComplete = false`): a union-find per salt group
+    *     verifies a pair only when its ends are not yet connected and emits
+    *     the union edges; each other salt group of a salted bucket also
+    *     gets the bucket minimum as a stitch-only row, verified against that
+    *     group's minimum. The candidates are the within-group pairs plus
+    *     that stitch (a star, diameter 2), so the components are those of
+    *     verifying them all, at about s verifies for a hot clique of s rows,
+    *     not s²/2. An edge may repeat across buckets.
+    *   - listing (`pairComplete = true`): triangular tiles — a row of salt
+    *     i joins tile (min(i,t), max(i,t)) for every t < g, on the tile's
+    *     left side when i ≤ t and its right side when i ≥ t — so each pair
+    *     of a bucket meets in exactly one tile; every left × right pair is
+    *     verified. A pair is emitted only in the lowest band where the two
+    *     rows' band arrays agree, so the listing is distinct with no
+    *     `distinct` exchange. */
+  private[graft] def bucketPairs(shingled: DataFrame, idCol: String, cap: Int,
+                                 thresholdPct: Int, pairComplete: Boolean)
+      : (DataFrame, DataFrame) = {
+    val (groups, metrics) = bucketGroups(shingled, idCol, cap, pairComplete)
+    val t = shingled.schema(idCol).dataType
+    val schema = StructType(Seq("id1", "id2").map(StructField(_, t, nullable = false)))
+    (groups.flatMapSortedGroups(col("_id"))((_, rows) =>
+      verifyGroup(rows.toIndexedSeq, thresholdPct, pairComplete))(Encoders.row(schema)), metrics)
   }
 
-  /** Lazy body of `pairsWithinBuckets`: intermediates persist into `scope`;
-    * the caller seals its own outputs and closes the scope. */
-  private[graft] def pairsWithinBucketsIn(
-      keyed: DataFrame, idCol: String, keyCols: Seq[String],
-      cap: Int, kind: String,
-      pairComplete: Boolean = false,
-      assumeDistinct: Boolean = false)(scope: CacheScope): (DataFrame, DataFrame) = {
-    val ks = keyCols.map(col)
-    // persisted: read once for bucket sizes (inside the broadcast build,
-    // which must finish within spark.sql.broadcastTimeout) and once for the
-    // salted self-join — without it the exploded frame computes twice and
-    // the broadcast races its timeout against the full upstream plan.
-    // `assumeDistinct` skips the defensive dedup — a full extra shuffle of
-    // the exploded frame — when the caller's (keyCols, id) rows are unique
-    // by construction (e.g. posexplode of a per-row band array).
-    val base = keyed.select((keyCols :+ idCol).map(col): _*)
-    val rows = scope.persistEager(if (assumeDistinct) base else base.distinct())
-    val sizes = rows.groupBy(ks: _*).agg(count(lit(1)).as("_bsz"))
-    val oversized = sizes.where(col("_bsz") > cap)
-      .withColumn("_nsalt", ceil(col("_bsz").cast("double") / cap).cast("int"))
-      .select((ks :+ col("_nsalt")): _*)
-    val salted = rows
-      .join(broadcast(oversized), keyCols, "left")
-      .withColumn("_g", coalesce(col("_nsalt"), lit(1)))
+  /** (`bucketPairs`' groups — keyed (band_id, band_hash, _gi, _gj), rows
+    * (key, `_l`, `_r`, `_id`, `_shh`, and `_bands` in the listing form) —
+    * metrics). Visible to specs, which bound the groups' sizes. */
+  private[graft] def bucketGroups(shingled: DataFrame, idCol: String, cap: Int, pairComplete: Boolean)
+      : (KeyValueGroupedDataset[Row, Row], DataFrame) = {
+    val bucket = Seq("band_id", "band_hash")
+    val exploded = shingled.select(col(idCol).as("_id"), col("_shh"), col("_bands"),
+      posexplode(col("_bands")).as(bucket))
+    val sizes = exploded.groupBy(bucket.map(col): _*)
+      .agg(count(lit(1)).as("_bsz"), min("_id").as("_bmin"))
+      .where(col("_bsz") > 1)
+      .withColumn("_g", ceil(col("_bsz").cast("double") / cap).cast("int"))
+    val salted = exploded.join(sizes, bucket)
       .withColumn("_salt",
-        pmod(xxhash64((keyCols :+ idCol).map(col): _*), col("_g")).cast("int"))
-    val intra =
-      if (pairComplete) {
-        // triangular tiles: left row (salt i) replicates to tiles (i, i..g-1),
-        // right row (salt j) to tiles (0..j, j); tile (i,j) joins group i
-        // against group j — every unordered pair lands in exactly one tile.
-        // (Round-6 note: a one-exchange union+collect_list+explode variant
-        // was tried and reverted — the two tile exchanges below are
-        // INDEPENDENT, so AQE materializes them concurrently and the join
-        // form adds no sequential barrier, while collect_list forces
-        // ObjectHashAggregate, whose sort-based fallback past 128 groups
-        // per partition re-sorts the whole exchange output.)
-        val tileKeys = keyCols :+ "_i" :+ "_j"
-        val left = salted
-          .withColumn("_i", col("_salt"))
-          .withColumn("_j", explode(sequence(col("_salt"), col("_g") - 1)))
-          .select((tileKeys.map(col) :+ col(idCol).as("id1")): _*)
-        val right = salted
-          .withColumn("_i", explode(sequence(lit(0), col("_salt"))))
-          .withColumn("_j", col("_salt"))
-          .select((tileKeys.map(col) :+ col(idCol).as("id2")): _*)
-        // no `<` filter here: in a cross tile (i,j) the group-i member may
-        // carry the larger id and the mirrored tile (j,i) does not exist —
-        // normalize with least/greatest instead (distinct dedups diagonals)
-        left.join(right, tileKeys)
-          .where(col("id1") =!= col("id2"))
-          .select(least(col("id1"), col("id2")).as("id1"),
-                  greatest(col("id1"), col("id2")).as("id2"))
-      } else {
-        val saltKeys = keyCols :+ "_salt"
-        val a = salted.select((saltKeys.map(col) :+ col(idCol).as("id1")): _*)
-        val b = salted.select((saltKeys.map(col) :+ col(idCol).as("id2")): _*)
-        val within = a.join(b, saltKeys)
-          .where(col("id1") < col("id2"))
-          .select(col("id1"), col("id2"))
-        // stitch: STAR the per-salt minimum ids of each oversized bucket
-        // onto the bucket minimum (≤ nsalt rows per bucket — the window is
-        // trivially small). A star, not a chain: a chain of g salt groups
-        // adds graph diameter g, costing the downstream connected-
-        // components loop extra O(log g) iterations — each a full
-        // shuffle-round barrier; a star keeps the bucket's diameter at 2.
-        val reps = salted.where(col("_nsalt").isNotNull)
-          .groupBy((saltKeys).map(col): _*).agg(min(idCol).as("_rep"))
-        val wB = Window.partitionBy(ks: _*)
-        val stitch = reps
-          .withColumn("_bmin", min(col("_rep")).over(wB))
-          .where(col("_rep") =!= col("_bmin"))
-          .select(col("_bmin").as("id1"), col("_rep").as("id2"))
-        within.unionByName(stitch)
-      }
-    val pairs = intra
-      .select(col("id1"), col("id2"), lit(kind).as("kind"))
-      .distinct()
-    val metrics = oversized
+        pmod(xxhash64(col("band_id"), col("band_hash"), col("_id")), col("_g")).cast("int"))
+    val all = sequence(lit(0), col("_g") - 1)
+    val (s, t) = (col("_salt"), col("_t"))
+    val tiles = // connectivity: `_r` false marks the bucket minimum's stitch-only copies
+      if (pairComplete) salted.withColumn("_t", explode(all))
+        .select(col("*"), least(s, t).as("_gi"), greatest(s, t).as("_gj"),
+                (s <= t).as("_l"), (s >= t).as("_r"))
+      else salted.withColumn("_t", explode(when(col("_id") === col("_bmin"), all)
+                                             .otherwise(array(s))))
+        .select(col("*"), t.as("_gi"), t.as("_gj"), lit(true).as("_l"), (t === s).as("_r"))
+    val key = Seq("band_id", "band_hash", "_gi", "_gj").map(col)
+    val rows = tiles.select(key ++ Seq("_l", "_r", "_id", "_shh").map(col) ++
+                            (if (pairComplete) Seq(col("_bands")) else Nil): _*)
+    val groups = rows.groupBy(key: _*)
+      .as(Encoders.row(rows.select(key: _*).schema), Encoders.row(rows.schema))
+    val metrics = sizes.where(col("_bsz") > cap)
       .agg(coalesce(count(lit(1)), lit(0L)).as("salted_buckets"),
-           coalesce(sum(col("_nsalt").cast("long")), lit(0L)).as("salt_groups"))
-    (pairs, metrics)
+           coalesce(sum(col("_g").cast("long")), lit(0L)).as("salt_groups"))
+    (groups, metrics)
+  }
+
+  /** `bucketPairs`' verified pairs of one held group (rows in id order,
+    * so a pair of positions a < b is the pair (id1, id2)). */
+  private def verifyGroup(g: IndexedSeq[Row], pct: Int, pairComplete: Boolean): Seq[Row] = {
+    val n = g.length
+    val sh = g.map(_.getSeq[Long](7).toArray)
+    def similar(a: Int, b: Int): Boolean = { // merge count over sorted sets
+      val (x, y) = (sh(a), sh(b))
+      var i = 0; var j = 0; var inter = 0
+      while (i < x.length && j < y.length)
+        if (x(i) < y(j)) i += 1
+        else if (x(i) > y(j)) j += 1
+        else { inter += 1; i += 1; j += 1 }
+      inter * 100L >= (x.length + y.length - inter) * pct.toLong
+    }
+    val out = Seq.newBuilder[Row]
+    def emit(a: Int, b: Int): Unit =
+      out += Row(g(math.min(a, b)).get(6), g(math.max(a, b)).get(6))
+    if (pairComplete) {
+      val bands = g.map(_.getSeq[Long](8).toArray)
+      def lowestShared(a: Int, b: Int) = bands(a).indices.find(k => bands(a)(k) == bands(b)(k))
+      val diagonal = g.head.getInt(2) == g.head.getInt(3)
+      for (a <- 0 until n if g(a).getBoolean(4);
+           b <- (if (diagonal) a + 1 else 0) until n if g(b).getBoolean(5)
+           if lowestShared(a, b).contains(g.head.getInt(0)) && similar(a, b)) emit(a, b)
+    } else {
+      val parent = Array.range(0, n)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+        r
+      }
+      val (members, stitch) = (0 until n).partition(g(_).getBoolean(5))
+      // a stitch row is the bucket minimum: it pairs with the group minimum only
+      for (s <- stitch; m <- members.headOption if similar(s, m)) emit(s, m)
+      for (a <- members; b <- members if a < b) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb && similar(a, b)) { parent(rb) = ra; emit(a, b) }
+      }
+    }
+    out.result()
   }
 
   /** Exact-duplicate edges: rows sharing the match key (already a struct
@@ -183,12 +184,14 @@ object Candidates {
 
   /** Shared MinHash+LSH near-dup machinery: collapse identical normalized
     * captions to one representative (skew guard — the 1000-copy block costs
-    * one signature, not 10⁶ bucket pairs), band-explode via the JVM-native
-    * UDF (see Keys.minhashBandUdf), salted bucket pairs, exact-Jaccard
-    * verify.
+    * one signature, not 10⁶ bucket pairs), shingle and band each rep in one
+    * JVM pass (`Keys.shingleLshUdf`), then group and verify inside each LSH
+    * bucket (`bucketPairs`).
     *
     * Returns (repPairs, members, shingledReps, metrics):
-    *   repPairs     (id1, id2)  verified near-dup pairs among representatives
+    *   repPairs     (id1, id2)  verified near-dup pairs among representatives:
+    *                            all of them, once each, when `pairComplete`;
+    *                            else a subset with the same components
     *   members      (id, rep)   every input row → its identical-caption rep
     *   shingledReps (rep)       reps whose caption yields ≥1 shingle (groups
     *                            whose within-pairs qualify at Jaccard 1)
@@ -196,7 +199,7 @@ object Candidates {
     * (`captionLshEdges`); pair-listing queries expand to member level
     * (`expandRepPairs`).
     *
-    * Lazy — see `pairsWithinBucketsIn`. Consumers: `captionLshEdges`
+    * Lazy (intermediates persist into `scope`). Consumers: `captionLshEdges`
     * (flagship, sealed concurrent mode) and DocOps.minhashLshPairs/
     * minhashLshEdges (query surfaces, deferred mode). */
   private[graft] def captionLshPartsIn(df: DataFrame, idCol: String, captionCol: String,
@@ -205,47 +208,30 @@ object Candidates {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val norm = df.select(col(idCol), Keys.normCaption(col(captionCol)).as("_nc"))
     val repW = Window.partitionBy(col("_nc"))
-    // LAZY persist: the one eager barrier of this operator is
-    // pairsWithinBucketsIn's `rows` count, whose linear compute chain
-    // (rows ← exploded ← shingled ← withRep) populates this cache and
-    // shingled's in the same job — an eager count here was a redundant
-    // barrier (part of the round-3 eager-seal regression). By seal time the
-    // cache is built, so the concurrent seal jobs only read it.
+    // LAZY persist: `shingled`'s eager count below is this operator's one
+    // barrier, and its linear chain (shingled ← withRep) builds this cache
+    // in the same job — an eager count here was a redundant barrier (part
+    // of the round-3 eager-seal regression). By seal time the cache is
+    // built, so the concurrent seal jobs only read it.
     val withRep = scope.persist(norm.withColumn("_rep", min(idCol).over(repW)))
     val members = withRep.select(col(idCol).as("id"), col("_rep").as("rep"))
-    // ONE fused JVM pass per rep computes the distinct shingle hashes AND
-    // the LSH band hashes (Keys.shingleLshUdf): shingling via the
+    // ONE fused JVM pass per rep computes the sorted distinct shingle hashes
+    // AND the LSH band hashes (Keys.shingleLshUdf): shingling via the
     // interpreted higher-order-function expression was measured at
     // ~1.3 ms/doc — the single largest LSH cost — and shipping hashed
-    // shingles (~8 B each) instead of k-gram strings cuts the verify-join
+    // shingles (~8 B each) instead of k-gram strings cuts the bucket
     // payload ~4×. Exact Jaccard over the hashed sets equals string-set
     // Jaccard unless two distinct shingles of one compared pair collide in
-    // 64 bits (~1e-19 per pair).
+    // 64 bits (~1e-19 per pair). EAGER: read by the bucket aggregate, the
+    // bucket rows and the seals; its cached size also lets the planner
+    // broadcast the bucket-size frame.
     val sbUdf = Keys.shingleLshUdf(cfg.shingleK, cfg.lshBands, cfg.lshRowsPerBand)
-    // lazy for the same reason as withRep (built by the `rows` count chain)
-    val shingled = scope.persist(withRep.where(col(idCol) === col("_rep"))
+    val shingled = scope.persistEager(withRep.where(col(idCol) === col("_rep"))
       .select(col(idCol), sbUdf(col("_nc")).as("_sb"))
       .where(size(col("_sb._1")) > 0)
       .select(col(idCol), col("_sb._1").as("_shh"), col("_sb._2").as("_bands")))
-    val exploded = shingled
-      .select(col(idCol),
-              posexplode(col("_bands")).as(Seq("band_id", "band_hash")))
-    val (cand, metrics) = pairsWithinBucketsIn(
-      exploded, idCol, Seq("band_id", "band_hash"), cfg.maxBucketSize,
-      "caption_lsh", pairComplete, assumeDistinct = true)(scope)
-    // verify: join hashed shingle sets back, exact Jaccard (integer-exact).
-    // SHUFFLE_HASH: sort-merge would SORT the array-payload shingle frame
-    // twice; hash-building it per partition is cheap and unsorted.
-    val verified = cand
-      .join(shingled.select(col(idCol).as("id1"), col("_shh").as("_sh1"))
-                    .hint("SHUFFLE_HASH"), "id1")
-      .join(shingled.select(col(idCol).as("id2"), col("_shh").as("_sh2"))
-                    .hint("SHUFFLE_HASH"), "id2")
-    val (inter, union) = Keys.jaccardInterUnion(col("_sh1"), col("_sh2"))
-    val thresholdPct = math.round(cfg.jaccardThreshold * 100).toInt
-    val repPairs = verified
-      .where(inter * 100 >= union * thresholdPct)
-      .select(col("id1"), col("id2"))
+    val (repPairs, metrics) = bucketPairs(shingled, idCol, cfg.maxBucketSize,
+      math.round(cfg.jaccardThreshold * 100).toInt, pairComplete)
     (repPairs, members, shingled.select(col(idCol).as("rep")), metrics)
   }
 
@@ -288,15 +274,17 @@ object Candidates {
     * pair listing; the cluster pipeline never calls this (stars suffice
     * there).
     *
-    * PRECONDITION: `repPairs` is distinct (both callers' verify stages end
-    * in a distinct candidate set joined 1:1 per side — asserted by
-    * OpsSpec). The output is then distinct WITHOUT a final exchange:
-    * member→rep is functional, so a cross pair {m1,m2} determines its rep
-    * pair uniquely (no duplicate across rep pairs) and appears once per rep
-    * pair; cliques are ordered within-group pairs (unique); and cross
-    * (different reps) is disjoint from cliques (same rep). A trailing
-    * `.distinct()` would be a full extra shuffle of the listing — the
-    * operator's LARGEST frame. */
+    * PRECONDITION: `repPairs` is distinct — SimHash's through
+    * `multiIndexHammingPairsIn`'s `distinct`, caption-LSH's because
+    * `bucketPairs`' listing form emits each pair only in the lowest band
+    * its two rows share (asserted by OpsSpec and CandidatesSpec). The
+    * output is then distinct WITHOUT a final exchange: member→rep is
+    * functional, so a cross pair {m1,m2} determines its rep pair uniquely
+    * (no duplicate across rep pairs) and appears once per rep pair;
+    * cliques are ordered within-group pairs (unique); and cross (different
+    * reps) is disjoint from cliques (same rep). A trailing `.distinct()`
+    * would be a full extra shuffle of the listing — the operator's LARGEST
+    * frame. */
   def expandRepPairs(repPairs: DataFrame, members: DataFrame,
                      cliqueReps: DataFrame, cliqueCols: Seq[Column] = Nil): DataFrame = {
     val extras = repPairs.columns.filterNot(Set("id1", "id2")).map(col).toSeq
@@ -321,14 +309,9 @@ object Candidates {
     * radius ≤ bands×(subRadius+1)−1 (enforced). Callers should collapse
     * identical hashes first (the degenerate mass); residual hot chunk
     * values are AQE skew-join territory. Input `df(idCol, hashCol)`;
-    * output (id1, id2, hamming_d) with id1 < id2, distinct. */
-  def multiIndexHammingPairs(df: DataFrame, idCol: String, hashCol: String,
-                             bands: Int, subRadius: Int, radius: Int,
-                             dfCap: Int = 256): DataFrame =
-    CacheScope.seal(multiIndexHammingPairsIn(df, idCol, hashCol, bands,
-      subRadius, radius, dfCap)(_)._1)
-
-  /** Lazy body of `multiIndexHammingPairs` — see `pairsWithinBucketsIn`.
+    * output (pairs(id1, id2, hamming_d) with id1 < id2, distinct, metrics).
+    * Lazy: intermediates persist into `scope`; the caller seals its own
+    * outputs and closes the scope.
     *
     * `dfCap` guards the quadratic: the probe join's cost is
     * Σ over probe rows of the hit bucket's density, and a band value shared
@@ -407,7 +390,7 @@ object Candidates {
 
   /** pHash Hamming candidate edges: identical-phash collapse up front (the
     * degenerate mass — 60% of re-encode pairs in the fixture become stars),
-    * then `multiIndexHammingPairs` over the representatives. Defaults
+    * then `multiIndexHammingPairsIn` over the representatives. Defaults
     * (4 × 16-bit chunks, 1-flip probes) guarantee blocking recall for the
     * full exact-verify radius 7 — see NearDupConfig for the selectivity
     * story. Returns (edges, metrics). */
@@ -444,7 +427,7 @@ object Candidates {
                        cfg: NearDupConfig): DataFrame =
     CacheScope.seal(containmentEdgesIn(df, idCol, captionCol, cfg)(_))
 
-  /** Lazy body of `containmentEdges` — see `pairsWithinBucketsIn`. No
+  /** Lazy body of `containmentEdges` — see `multiIndexHammingPairsIn`. No
     * distinct after orienting: the listing's strict length test lets a
     * pair appear in one orientation only. */
   private[graft] def containmentEdgesIn(df: DataFrame, idCol: String, captionCol: String,

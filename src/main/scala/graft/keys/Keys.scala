@@ -212,9 +212,9 @@ object Keys {
     * ONE JVM pass — the hot-path replacement for `shingles` (an interpreted
     * higher-order-function expression measured at ~1.3 ms/doc, the single
     * largest LSH cost) feeding `minhashBandUdf`. Returns a struct of
-    *   `_shh`  array<long>: h1 of each DISTINCT word k-gram (the verify
-    *           stage intersects these — set-identical to distinct k-gram
-    *           strings modulo 64-bit collisions),
+    *   `_shh`  array<long>: h1 of each DISTINCT word k-gram, ascending
+    *           (the verify stage merge-intersects these — set-identical to
+    *           distinct k-gram strings modulo 64-bit collisions),
     *   `bands` array<long>: LSH band hashes from the (h1, h2) double-hash
     *           MinHash, same construction as `minhashBandUdf`.
     * Texts with < k tokens return empty arrays (no signature — same
@@ -257,7 +257,9 @@ object Keys {
           out(b) = h
           b += 1
         }
-        (shh.result(), out)
+        val sorted = shh.result()
+        java.util.Arrays.sort(sorted)
+        (sorted, out)
       }
     }
 

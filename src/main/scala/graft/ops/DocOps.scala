@@ -89,14 +89,17 @@ object DocOps {
   }
 
   /** MinHash+LSH near-dup pairs, verified with exact Jaccard — the
-    * at-scale path: candidate generation is O(rows × bands) + bucket joins
-    * instead of the shared-shingle join of `jaccardPairs`. Identical
-    * normalized texts collapse to one representative before signatures;
-    * the rep-level pair set is then expanded back to the full member-level
-    * listing (cross pairs + within-group cliques — what `jaccardPairs`
-    * emits for duplicate texts). Output (doc1, doc2) — equal to
-    * `jaccardPairs` ids whenever LSH recall is 1 (the S-curve at the
-    * corpus' planted similarities makes misses ~1e-8). */
+    * at-scale path: candidate generation is O(rows × bands) plus one
+    * grouped pass that verifies each LSH bucket in memory
+    * (`Candidates.bucketPairs`, listing form: every pair once, in the
+    * lowest band its two texts share), instead of the shared-shingle join
+    * of `jaccardPairs`. Identical normalized texts collapse to one
+    * representative before signatures; the rep-level pair set is then
+    * expanded back to the full member-level listing (cross pairs +
+    * within-group cliques — what `jaccardPairs` emits for duplicate texts).
+    * Output (doc1, doc2) — equal to `jaccardPairs` ids whenever LSH recall
+    * is 1 (the S-curve at the corpus' planted similarities makes misses
+    * ~1e-8). */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       cfg: NearDupConfig): DataFrame = CacheScope.deferred { scope =>
     val (repPairs, members, shingledReps, _) =

@@ -154,7 +154,7 @@ object EmbeddingOps {
     * nTables rows per vector, shuffle keyed on (table, bucket) only — never
     * a cross join.
     *
-    * Hot-bucket guard (`cap`, same role as Candidates.pairsWithinBuckets):
+    * Hot-bucket guard (`cap`, same role as the salting in Candidates.bucketPairs):
     * a bucket of size s > cap would cost s² comparisons in one task. For
     * top-1 the bound is per-PROBE candidates, not pair completeness, so the
     * INDEX side of an oversized bucket is down-sampled to ≈cap members by a

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.CacheScope
+
 /** CSV duplicate report — reference `create_csv_file`
   * (/root/reference/duplicate_files_in_folders/duplicates_finder.py:226-246):
   * one row per duplicate file with columns (key, path, size, modified_time),
@@ -25,14 +27,15 @@ object Report {
     * frame (one row per partition) broadcasts the cumulative offsets.
     * Global key = partition offset + local rank; no task ever holds more
     * than one partition of cluster ids. */
-  def clusterReport(dupRows: DataFrame): DataFrame = {
+  def clusterReport(dupRows: DataFrame): DataFrame = CacheScope.deferred { scope =>
     // persisted: _pid must come from ONE materialized range-sort — the
     // offsets branch and the rank branch re-deriving it independently could
-    // sample different range boundaries and disagree on partition ids
-    val sorted = dupRows.select("cluster_id").distinct()
+    // sample different range boundaries and disagree on partition ids. The
+    // deferred scope releases it once the caller's action has consumed the
+    // report.
+    val sorted = scope.persist(dupRows.select("cluster_id").distinct()
       .orderBy("cluster_id")
-      .withColumn("_pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_pid", spark_partition_id()))
     val offsets = sorted.groupBy("_pid").agg(count(lit(1)).as("_n"))
       .withColumn("_offset",
         coalesce(sum("_n").over(

@@ -1,22 +1,43 @@
 package graft
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 import graft.candidates.Candidates
 import graft.schema.NearDupConfig
 import graft.util.CacheScope
 
-/** Candidate generation: exact pair semantics for small buckets, salting
-  * behavior (connectivity + bounded pair count + metrics) for hot buckets. */
+/** Candidate generation: exact verified pairs for small buckets, salting
+  * behavior (connectivity + bounded pair count + bounded groups + metrics)
+  * for hot buckets. */
 class CandidatesSpec extends SparkSpec {
   import spark.implicits._
 
+  // `bucketPairs` input rows: (id, sorted shingle hashes, LSH band hashes)
+  private def banded(rows: Seq[(String, Seq[Long], Seq[Long])]) =
+    rows.toDF("id", "_shh", "_bands")
+  // one band: every row with key k shares bucket (0, k); identical shingles
+  private def oneBand(keys: Seq[(String, Long)]) =
+    banded(keys.map { case (id, k) => (id, Seq(1L, 2L, 3L), Seq(k)) })
+  private def bucketPairs(df: org.apache.spark.sql.DataFrame, cap: Int,
+                          pairComplete: Boolean) = {
+    val Seq(p, m) = CacheScope.sealMany { _ =>
+      val (p, m) = Candidates.bucketPairs(df, "id", cap, 80, pairComplete)
+      Seq(p, m)
+    }
+    (p, m)
+  }
+  // bucket 1 holds a path a ~ b ~ c whose ends fail the Jaccard test
+  // (J(a,b) = J(b,c) = 9/11, J(a,c) = 8/12); bucket 2 an identical pair
+  private def smallBuckets = banded(Seq(
+    ("a", (1L to 10L).toList, Seq(1L)), ("b", (2L to 11L).toList, Seq(1L)),
+    ("c", (3L to 12L).toList, Seq(1L)),
+    ("x", Seq(7L, 8L), Seq(2L)), ("y", Seq(7L, 8L), Seq(2L)), ("z", Seq(7L, 8L), Seq(3L))))
+
   test("small buckets produce the exact full pair set") {
-    val keyed = Seq(("a", 1L), ("b", 1L), ("c", 1L), ("x", 2L), ("y", 2L), ("z", 3L))
-      .toDF("id", "k")
-    val (pairs, metrics) = Candidates.pairsWithinBuckets(keyed, "id", Seq("k"), cap = 16, "t")
-    val got = pairs.select("id1", "id2").as[(String, String)].collect().toSet
-    assert(got == Set(("a", "b"), ("a", "c"), ("b", "c"), ("x", "y")))
+    val (pairs, metrics) = bucketPairs(smallBuckets, cap = 16, pairComplete = false)
+    val got = pairs.as[(String, String)].collect().toSeq
+    assert(got.sorted == Seq(("a", "b"), ("b", "c"), ("x", "y")))
     val m = metrics.first()
     assert(m.getLong(0) == 0 && m.getLong(1) == 0, "no salting below the cap")
   }
@@ -24,8 +45,8 @@ class CandidatesSpec extends SparkSpec {
   test("hot bucket is salted: connected, bounded, reported — nothing dropped") {
     val n = 200
     val cap = 16
-    val keyed = (0 until n).map(i => (f"id_$i%04d", 1L)).toDF("id", "k")
-    val (pairs, metrics) = Candidates.pairsWithinBuckets(keyed, "id", Seq("k"), cap, "t")
+    val (pairs, metrics) = bucketPairs(oneBand((0 until n).map(i => (f"id_$i%04d", 1L))),
+      cap, pairComplete = false)
     val p = pairs.cache()
     val nPairs = p.count()
     // far below the full clique, at most ~n*cap intra + stitch edges
@@ -43,8 +64,8 @@ class CandidatesSpec extends SparkSpec {
 
   test("every id appears in some pair (salting loses no rows)") {
     val n = 100
-    val keyed = (0 until n).map(i => (f"id_$i%04d", 1L)).toDF("id", "k")
-    val (pairs, _) = Candidates.pairsWithinBuckets(keyed, "id", Seq("k"), cap = 8, "t")
+    val (pairs, _) = bucketPairs(oneBand((0 until n).map(i => (f"id_$i%04d", 1L))),
+      cap = 8, pairComplete = false)
     val seen = pairs.select(col("id1").as("id")).union(pairs.select(col("id2")))
       .distinct().count()
     assert(seen == n, s"only $seen of $n ids present in salted pairs")
@@ -55,21 +76,70 @@ class CandidatesSpec extends SparkSpec {
     // split across salt groups must still list every pair
     val n = 120
     val cap = 16
-    val keyed = (0 until n).map(i => (f"id_$i%04d", 1L)).toDF("id", "k")
-    val (pairs, metrics) = Candidates.pairsWithinBuckets(
-      keyed, "id", Seq("k"), cap, "t", pairComplete = true)
+    val (pairs, metrics) = bucketPairs(oneBand((0 until n).map(i => (f"id_$i%04d", 1L))),
+      cap, pairComplete = true)
     assert(pairs.count() == n.toLong * (n - 1) / 2, "full clique required")
+    assert(pairs.distinct().count() == n.toLong * (n - 1) / 2, "each pair once")
     assert(metrics.first().getLong(0) == 1, "bucket reported as salted")
   }
 
   test("pair-complete mode matches plain mode on small buckets") {
-    val keyed = Seq(("a", 1L), ("b", 1L), ("c", 1L), ("x", 2L), ("y", 2L))
-      .toDF("id", "k")
-    val (pairs, _) = Candidates.pairsWithinBuckets(
-      keyed, "id", Seq("k"), cap = 16, "t", pairComplete = true)
-    val got = pairs.select("id1", "id2").as[(String, String)].collect().toSet
-    assert(got == Set(("a", "b"), ("a", "c"), ("b", "c"), ("x", "y")))
+    val (pairs, _) = bucketPairs(smallBuckets, cap = 16, pairComplete = true)
+    val got = pairs.as[(String, String)].collect().toSeq
+    assert(got.sorted == Seq(("a", "b"), ("b", "c"), ("x", "y")))
   }
+
+  test("pair-complete mode lists a pair once however many bands it shares") {
+    // three bands: a pair shares none, one, two or all three buckets, and
+    // every bucket (13-20 rows) is salted at cap 8
+    val bands = (0 until 40).map(i => Seq((i % 3).toLong, (i % 4).toLong, (i % 2).toLong))
+    val rows = bands.zipWithIndex.map { case (b, i) => (f"id_$i%02d", Seq(1L, 2L, 3L), b) }
+    val (pairs, m) = bucketPairs(banded(rows), cap = 8, pairComplete = true)
+    val got = pairs.as[(String, String)].collect().toSeq
+    val duplicates = got.size - got.distinct.size
+    assert(duplicates == 0, "duplicate pairs in the listing")
+    val expected = for (i <- 0 until 40; j <- i + 1 until 40
+                        if bands(i).zip(bands(j)).exists { case (x, y) => x == y })
+      yield (f"id_$i%02d", f"id_$j%02d")
+    assert(got.toSet == expected.toSet)
+    assert(m.first().getLong(0) == 9, "every bucket is above the cap")
+  }
+
+  // 300 near-identical captions (3-shingle Jaccard 18/20) in one hot bucket
+  private def plantedBucket = {
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val udf = graft.keys.Keys.shingleLshUdf(3, 16, 4)
+    (0 until 300).map(i => (i.toLong, s"$base v$i")).toDF("id", "caption")
+      .select(col("id"), udf(graft.keys.Keys.normCaption(col("caption"))).as("_sb"))
+      .select(col("id"), col("_sb._1").as("_shh"), col("_sb._2").as("_bands"))
+  }
+
+  test("bucket verify holds at most two salt groups in memory at once") {
+    val cap = 16
+    val shingled = plantedBucket.cache()
+    def heldGroupRows(pairComplete: Boolean) =
+      Candidates.bucketGroups(shingled, "id", cap, pairComplete)._1
+        .flatMapSortedGroups(col("_id"))((_, rows) => Iterator(rows.size))(Encoders.scalaInt)
+        .collect().toSeq
+    val salt = heldGroupRows(pairComplete = false)
+    val tile = heldGroupRows(pairComplete = true)
+    // salting bounds a group's size on average only: a hard `<= cap` is false
+    assert(salt.nonEmpty && salt.max <= 2 * cap, s"largest salt group ${salt.max}")
+    assert(tile.nonEmpty && tile.max <= 4 * cap, s"largest tile ${tile.max}")
+    // the connectivity form keeps the listing form's components
+    def clusters(pairComplete: Boolean) = {
+      val (pairs, _) = bucketPairs(shingled, cap, pairComplete)
+      CcTestKit.run(pairs).as[(Long, Long)].collect().toMap
+    }
+    val listing = clusters(pairComplete = true)
+    assert(listing.size == 300 && listing.values.toSet == Set(0L))
+    assert(clusters(pairComplete = false) == listing)
+    shingled.unpersist()
+  }
+
+  private def hammingPairs(df: org.apache.spark.sql.DataFrame, dfCap: Int) =
+    CacheScope.sealMany(scope => Seq(Candidates.multiIndexHammingPairsIn(df, "id", "h",
+      bands = 4, subRadius = 1, radius = 7, dfCap)(scope)._1)).head
 
   test("multi-index Hamming: exact recall to the guaranteed radius") {
     val base = 0x0f0f0f0f0f0f0f0fL
@@ -79,8 +149,7 @@ class CandidatesSpec extends SparkSpec {
       (s"id_$d", h)
     } :+ (("far", ~base)) // distance 64-ish: never a candidate pair with base
     val df = rows.toDF("id", "h")
-    val pairs = Candidates.multiIndexHammingPairs(df, "id", "h",
-      bands = 4, subRadius = 1, radius = 7)
+    val pairs = hammingPairs(df, dfCap = 256)
       .select("id1", "id2").as[(String, String)].collect().toSet
     // every (id_0, id_d) pair has distance d ≤ 7 → must be present
     (1 to 7).foreach { d =>
@@ -102,8 +171,7 @@ class CandidatesSpec extends SparkSpec {
     val aHash = bHash ^ (0x3L | (0x3L << 16) | (0x3L << 32) | (1L << 48))
     val rows = Seq(("a_small", aHash), ("z_big", bHash)) ++
       (1 to 6).map(i => (s"f_$i", bHash)) // fillers make every zBig bucket hot
-    val pairs = Candidates.multiIndexHammingPairs(rows.toDF("id", "h"), "id", "h",
-      bands = 4, subRadius = 1, radius = 7, dfCap = 4)
+    val pairs = hammingPairs(rows.toDF("id", "h"), dfCap = 4)
       .select("id1", "id2", "hamming_d")
       .as[(String, String, Int)].collect().toSet
     assert(pairs.contains(("a_small", "z_big", 7)),

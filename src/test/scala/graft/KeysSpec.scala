@@ -107,4 +107,33 @@ class KeysSpec extends SparkSpec {
     val r = df.select(i.as("i"), u.as("u")).first()
     assert(r.getInt(0) == 2 && r.getInt(1) == 4)
   }
+
+  test("shingleLshUdf: band matches follow the LSH S-curve, 16·J⁴ at J 0.85 and 0.6") {
+    // per pair: a shared run of random tokens and a private tail on each
+    // side, so the 3-shingle Jaccard is exact: shared / (shared + 2·tail)
+    val rng = new scala.util.Random(20261019L)
+    def word() = rng.alphanumeric.filter(_.isLetter).take(8).mkString.toLowerCase
+    def pairs(run: Int, tail: Int, n: Int) = (0 until n).map { _ =>
+      val shared = Seq.fill(run)(word())
+      ((shared ++ Seq.fill(tail)(word())).mkString(" "),
+       (shared ++ Seq.fill(tail)(word())).mkString(" "))
+    }
+    val udf = Keys.shingleLshUdf(3, 16, 4)
+    for ((run, tail, jaccard) <- Seq((36, 3, 0.85), (20, 6, 0.6))) {
+      val n = 75
+      val got = pairs(run, tail, n).toDF("a", "b")
+        .select(udf(col("a")).as("x"), udf(col("b")).as("y"))
+        .select(col("x._1"), col("x._2"), col("y._2"))
+        .as[(Seq[Long], Seq[Long], Seq[Long])].collect()
+      // the verify stage merge-intersects `_shh`: distinct and ascending
+      got.foreach { case (shh, _, _) =>
+        assert(shh == shh.distinct.sorted && shh.size == run + tail - 2) }
+      val shared = got.map { case (_, a, b) => a.zip(b).count { case (x, y) => x == y } }
+      val p = math.pow(jaccard, 4)
+      val mean = shared.sum.toDouble / n
+      val sigma = math.sqrt(16 * p * (1 - p) / n)
+      assert(math.abs(mean - 16 * p) <= 3 * sigma,
+        f"J $jaccard: mean shared bands $mean%.2f, expected ${16 * p}%.2f ± ${3 * sigma}%.2f")
+    }
+  }
 }

@@ -136,6 +136,9 @@ class PlanShapeSpec extends SparkSpec {
     val corpus = graft.gen.Corpus.generate(spark, nClusters = 10).toDF()
     assertClean("Dedup.run")(
       Dedup.run(corpus, graft.schema.DedupConfig()))
+    assertClean("clusterReport")(
+      graft.resolve.Report.clusterReport(corpus.selectExpr("truth_cluster AS cluster_id",
+        "image_id AS path", "length(bytes) AS size", "mtime")))
     assertClean("Resolver copy_to_all")(
       graft.resolve.Resolver.resolve(
         corpus.selectExpr("image_id", "role", "image_id AS cluster_id"),
