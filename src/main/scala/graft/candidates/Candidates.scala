@@ -3,7 +3,7 @@ package graft.candidates
 import org.apache.spark.sql.{Column, DataFrame, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.cluster.ConnectedComponents
 import graft.keys.Keys
@@ -20,19 +20,60 @@ import graft.util.CacheScope
   * One body per technique: the lazy `*In` bodies here are also the
   * `DocOps` pair listings' (`captionLshPartsIn` — grouped and verified
   * inside each LSH bucket by `bucketPairs` — + `expandRepPairs` for
-  * MinHash-LSH, `multiIndexHammingPairsIn` + `expandRepPairs` for SimHash,
-  * `containmentPairsIn` for containment); each public call only picks the
-  * output form and the sealing mode.
+  * MinHash-LSH, `multiIndexHammingPairsIn` — grouped and verified inside
+  * each band bucket — + `expandRepPairs` for SimHash, `containmentPairsIn`
+  * for containment); each public call only picks the output form and the
+  * sealing mode. A flagship source seals ONE frame, its edges; its bucket
+  * statistics are observed inside that frame's job (`BucketStats`), never
+  * aggregated by a job of their own.
   *
   * At 100 TB the invariant is: NEVER a cartesian product; every candidate
   * source is blocked on a key (exact key, LSH band hash, Hamming band,
-  * shingle block) — an equi-join, or for caption-LSH one exchange on the
-  * bucket and an in-memory verify per bucket — and AQE handles residual
-  * skew. Hot buckets are additionally capped with an explicit, logged
-  * truncation (reference analogue: the Bloom pre-filter bounded candidate
-  * work, duplicates_finder.py:70-104).
+  * shingle block) — an equi-join, or for the LSH and Hamming buckets one
+  * exchange on the bucket key and an in-memory verify per bucket — and AQE
+  * handles residual skew. Hot buckets are additionally capped with an
+  * explicit, logged truncation (reference analogue: the Bloom pre-filter
+  * bounded candidate work, duplicates_finder.py:70-104).
   */
 object Candidates {
+
+  /** A source's bucket statistics (salted_buckets, salt_groups: the
+    * buckets over the cap and the groups or index rows they held),
+    * observed inside the job that runs the source's plan. `observe` tags a
+    * frame on the plan's main path — a node AQE prunes once it finds it
+    * empty (e.g. an anti-join's build side) records nothing. So after the
+    * plan ran, an absent row means only that the observed frame was empty:
+    * (0, 0). Each instance has its own name, so one plan may compose any
+    * number of sources. */
+  private[graft] final class BucketStats {
+    private val name = s"graft_bucket_stats_${BucketStats.next.incrementAndGet()}"
+
+    def observe(df: DataFrame, over: Column, groups: Column): DataFrame =
+      df.observe(name,
+        coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L)).as("salted_buckets"),
+        coalesce(sum(when(over, groups.cast("long")).otherwise(0L)), lit(0L)).as("salt_groups"))
+
+    /** The one-row (salted_buckets, salt_groups) frame `ran`'s execution
+      * observed; `ran` is the frame whose action ran the observed plan. */
+    def metrics(ran: DataFrame): DataFrame = {
+      val (b, g) = ran.queryExecution.observedMetrics.get(name)
+        .fold((0L, 0L))(r => (r.getLong(0), r.getLong(1)))
+      import ran.sparkSession.implicits._
+      Seq((b, g)).toDF("salted_buckets", "salt_groups")
+    }
+  }
+  private object BucketStats { val next = new java.util.concurrent.atomic.AtomicLong }
+
+  /** Build one source inside a fresh scope, seal its output, release the
+    * scope: (sealed output, the bucket statistics its seal job observed). */
+  private[graft] def sealObserved(body: CacheScope => (DataFrame, BucketStats))
+      : (DataFrame, DataFrame) = {
+    val scope = new CacheScope
+    try {
+      val (out, stats) = body(scope)
+      (graft.util.Seal(out), stats.metrics(out))
+    } finally scope.close()
+  }
 
   /** Pairs sharing an exact blocking key, bucket-capped.
     *
@@ -61,7 +102,8 @@ object Candidates {
     * band hashes); rows sharing a (band, band hash) bucket are candidates,
     * kept when their integer-exact Jaccard passes (`inter·100 ≥
     * union·thresholdPct`). Lazy. Returns (pairs(id1, id2) with id1 < id2,
-    * metrics(salted_buckets, salt_groups)).
+    * the salted buckets' statistics, observed on the bucket-size aggregate
+    * when the pairs' plan runs).
     *
     * Explode once into (id, _shh, band); one aggregate gives each bucket's
     * size and minimum id, and a plain join drops singleton buckets (no
@@ -91,26 +133,29 @@ object Candidates {
     *     `distinct` exchange. */
   private[graft] def bucketPairs(shingled: DataFrame, idCol: String, cap: Int,
                                  thresholdPct: Int, pairComplete: Boolean)
-      : (DataFrame, DataFrame) = {
-    val (groups, metrics) = bucketGroups(shingled, idCol, cap, pairComplete)
+      : (DataFrame, BucketStats) = {
+    val (groups, stats) = bucketGroups(shingled, idCol, cap, pairComplete)
     val t = shingled.schema(idCol).dataType
     val schema = StructType(Seq("id1", "id2").map(StructField(_, t, nullable = false)))
     (groups.flatMapSortedGroups(col("_id"))((_, rows) =>
-      verifyGroup(rows.toIndexedSeq, thresholdPct, pairComplete))(Encoders.row(schema)), metrics)
+      verifyGroup(rows.toIndexedSeq, thresholdPct, pairComplete))(Encoders.row(schema)), stats)
   }
 
   /** (`bucketPairs`' groups — keyed (band_id, band_hash, _gi, _gj), rows
     * (key, `_l`, `_r`, `_id`, `_shh`, and `_bands` in the listing form) —
-    * metrics). Visible to specs, which bound the groups' sizes. */
+    * statistics). Visible to specs, which bound the groups' sizes. */
   private[graft] def bucketGroups(shingled: DataFrame, idCol: String, cap: Int, pairComplete: Boolean)
-      : (KeyValueGroupedDataset[Row, Row], DataFrame) = {
+      : (KeyValueGroupedDataset[Row, Row], BucketStats) = {
     val bucket = Seq("band_id", "band_hash")
     val exploded = shingled.select(col(idCol).as("_id"), col("_shh"), col("_bands"),
       posexplode(col("_bands")).as(bucket))
-    val sizes = exploded.groupBy(bucket.map(col): _*)
+    // the salted buckets are counted as the sizes stream into the join
+    val stats = new BucketStats
+    val sizes = stats.observe(exploded.groupBy(bucket.map(col): _*)
       .agg(count(lit(1)).as("_bsz"), min("_id").as("_bmin"))
       .where(col("_bsz") > 1)
-      .withColumn("_g", ceil(col("_bsz").cast("double") / cap).cast("int"))
+      .withColumn("_g", ceil(col("_bsz").cast("double") / cap).cast("int")),
+      col("_bsz") > cap, col("_g"))
     val salted = exploded.join(sizes, bucket)
       .withColumn("_salt",
         pmod(xxhash64(col("band_id"), col("band_hash"), col("_id")), col("_g")).cast("int"))
@@ -128,10 +173,7 @@ object Candidates {
                             (if (pairComplete) Seq(col("_bands")) else Nil): _*)
     val groups = rows.groupBy(key: _*)
       .as(Encoders.row(rows.select(key: _*).schema), Encoders.row(rows.schema))
-    val metrics = sizes.where(col("_bsz") > cap)
-      .agg(coalesce(count(lit(1)), lit(0L)).as("salted_buckets"),
-           coalesce(sum(col("_g").cast("long")), lit(0L)).as("salt_groups"))
-    (groups, metrics)
+    (groups, stats)
   }
 
   /** `bucketPairs`' verified pairs of one held group (rows in id order,
@@ -188,7 +230,7 @@ object Candidates {
     * JVM pass (`Keys.shingleLshUdf`), then group and verify inside each LSH
     * bucket (`bucketPairs`).
     *
-    * Returns (repPairs, members, shingledReps, metrics):
+    * Returns (repPairs, members, shingledReps, stats):
     *   repPairs     (id1, id2)  verified near-dup pairs among representatives:
     *                            all of them, once each, when `pairComplete`;
     *                            else a subset with the same components
@@ -199,20 +241,23 @@ object Candidates {
     * (`captionLshEdges`); pair-listing queries expand to member level
     * (`expandRepPairs`).
     *
+    * `stats` are `bucketPairs`' salted buckets, observed when repPairs'
+    * plan runs.
+    *
     * Lazy (intermediates persist into `scope`). Consumers: `captionLshEdges`
-    * (flagship, sealed concurrent mode) and DocOps.minhashLshPairs/
-    * minhashLshEdges (query surfaces, deferred mode). */
+    * (flagship, sealed mode) and DocOps.minhashLshPairs/minhashLshEdges
+    * (query surfaces, deferred mode). */
   private[graft] def captionLshPartsIn(df: DataFrame, idCol: String, captionCol: String,
                                        cfg: NearDupConfig,
                                        pairComplete: Boolean = false)(scope: CacheScope)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, BucketStats) = {
     val norm = df.select(col(idCol), Keys.normCaption(col(captionCol)).as("_nc"))
     val repW = Window.partitionBy(col("_nc"))
     // LAZY persist: `shingled`'s eager count below is this operator's one
     // barrier, and its linear chain (shingled ← withRep) builds this cache
     // in the same job — an eager count here was a redundant barrier (part
     // of the round-3 eager-seal regression). By seal time the cache is
-    // built, so the concurrent seal jobs only read it.
+    // built, so the seal job only reads it.
     val withRep = scope.persist(norm.withColumn("_rep", min(idCol).over(repW)))
     val members = withRep.select(col(idCol).as("id"), col("_rep").as("rep"))
     // ONE fused JVM pass per rep computes the sorted distinct shingle hashes
@@ -223,16 +268,18 @@ object Candidates {
     // payload ~4×. Exact Jaccard over the hashed sets equals string-set
     // Jaccard unless two distinct shingles of one compared pair collide in
     // 64 bits (~1e-19 per pair). EAGER: read by the bucket aggregate, the
-    // bucket rows and the seals; its cached size also lets the planner
-    // broadcast the bucket-size frame.
+    // bucket rows and the seal; its cached size also lets the planner
+    // broadcast the bucket-size frame. The empty-shingle filter applies to
+    // the PERSISTED frame: inside the persisted plan the optimizer pushes
+    // it below the projection and copies the UDF into it (two calls a row).
     val sbUdf = Keys.shingleLshUdf(cfg.shingleK, cfg.lshBands, cfg.lshRowsPerBand)
     val shingled = scope.persistEager(withRep.where(col(idCol) === col("_rep"))
-      .select(col(idCol), sbUdf(col("_nc")).as("_sb"))
+        .select(col(idCol), sbUdf(col("_nc")).as("_sb")))
       .where(size(col("_sb._1")) > 0)
-      .select(col(idCol), col("_sb._1").as("_shh"), col("_sb._2").as("_bands")))
-    val (repPairs, metrics) = bucketPairs(shingled, idCol, cfg.maxBucketSize,
+      .select(col(idCol), col("_sb._1").as("_shh"), col("_sb._2").as("_bands"))
+    val (repPairs, stats) = bucketPairs(shingled, idCol, cfg.maxBucketSize,
       math.round(cfg.jaccardThreshold * 100).toInt, pairComplete)
-    (repPairs, members, shingled.select(col(idCol).as("rep")), metrics)
+    (repPairs, members, shingled.select(col(idCol).as("rep")), stats)
   }
 
   /** Caption-LSH candidate edges for the cluster pipeline, in
@@ -243,23 +290,19 @@ object Candidates {
     * minimum < id2). The components are those of the verified pairs, but a
     * hot near-dup cluster of s captions leaves as at most s − 1 edges per
     * partition instead of its Θ(s²) verified pairs. Every edge has kind
-    * `caption_lsh`. Returns (edges(id1,id2,kind), metrics). */
+    * `caption_lsh`. Returns (edges(id1,id2,kind), metrics): ONE sealed
+    * frame, the edges; the salted buckets are observed inside its job. */
   def captionLshEdges(df: DataFrame, idCol: String, captionCol: String,
-                      cfg: NearDupConfig): (DataFrame, DataFrame) = {
-    // seal exactly the TWO frames the flagship consumes (edges, metrics) —
-    // sealing the four parts individually and then the union again cost
-    // four extra checkpoint jobs per run for intermediates nothing reads
-    val Seq(edges, metrics) = CacheScope.sealMany { scope =>
-      val (repPairs, members, _, mx) =
+                      cfg: NearDupConfig): (DataFrame, DataFrame) =
+    sealObserved { scope =>
+      val (repPairs, members, _, stats) =
         captionLshPartsIn(df, idCol, captionCol, cfg)(scope)
       val sameCaption = members.where(col("id") =!= col("rep"))
         .select(col("rep").as("id1"), col("id").as("id2"))
       val forest = ConnectedComponents.localStars(repPairs.unionByName(sameCaption))
         .select(col("dst").as("id1"), col("src").as("id2"), lit("caption_lsh").as("kind"))
-      Seq(forest, mx)
+      (forest, stats)
     }
-    (edges, metrics)
-  }
 
   /** Expand rep-level verified pairs back to member level — the exact pair
     * LISTING the identical-key collapse stands for: every cross pair of two
@@ -302,90 +345,104 @@ object Candidates {
   }
 
   /** Generic multi-index Hamming pair search over a 64-bit hash column
-    * (Norouzi et al., CVPR'12): split into `bands` wide chunks, explode the
-    * probe side with every ≤`subRadius`-flip neighbor of each chunk,
-    * equi-join the index side's exact chunk values, verify
-    * `bit_count(xor) ≤ radius` exactly. Pigeonhole: recall 1 for
-    * radius ≤ bands×(subRadius+1)−1 (enforced). Callers should collapse
-    * identical hashes first (the degenerate mass); residual hot chunk
-    * values are AQE skew-join territory. Input `df(idCol, hashCol)`;
-    * output (pairs(id1, id2, hamming_d) with id1 < id2, distinct, metrics).
-    * Lazy: intermediates persist into `scope`; the caller seals its own
-    * outputs and closes the scope.
+    * (Norouzi et al., CVPR'12), verified inside each band bucket. Each hash
+    * splits into `bands` wide chunks and explodes ONCE into one row per
+    * (band, ≤`subRadius`-flip mask), keyed `band_id ∥ (chunk xor mask)`:
+    * the mask-0 row is the hash's INDEX row in its own bucket, and every
+    * row PROBES the bucket its key names. Then ONE exchange on the key and
+    * a pass per bucket that holds the bucket's index rows and streams its
+    * probe rows (`probeBucket`): a pair is kept when the ids differ and
+    * `bit_count(xor) ≤ radius`, exactly. Pigeonhole: recall 1 for radius ≤
+    * bands×(subRadius+1)−1 (enforced). Callers should collapse identical
+    * hashes first (the degenerate mass). Input `df(idCol, hashCol)`; output
+    * (pairs(id1, id2, hamming_d) with id1 < id2, distinct; the hot
+    * buckets' statistics, observed when the pairs' plan runs). Lazy; it
+    * persists nothing.
     *
-    * `dfCap` guards the quadratic: the probe join's cost is
-    * Σ over probe rows of the hit bucket's density, and a band value shared
-    * by more than `dfCap` hashes is a degenerate hash region that carries no
-    * discriminative signal (measured on the 1M-image corpus: the 0.6% of
-    * band buckets above 256 members held HALF of Σ df² — ~10⁹ join rows).
-    * Hot buckets are dropped from the INDEX side only (the PPJoin
-    * stop-shingle convention; the drop is counted and surfaced by
-    * `phashHammingEdges` metrics): every hash still probes all its keys,
-    * both orientations of a pair are probed, so a qualifying pair is lost
-    * only if EVERY band bucket within flip distance of either side is hot.
+    * `dfCap` guards the quadratic: a bucket costs its index rows times its
+    * probe rows, and a band value shared by more than `dfCap` hashes is a
+    * degenerate hash region that carries no discriminative signal
+    * (measured on the 1M-image corpus: the 0.6% of band buckets above 256
+    * members held HALF of Σ df² — ~10⁹ join rows). Such a bucket emits no
+    * pairs — its index side is dropped, the PPJoin stop-shingle
+    * convention — but one marker row carrying its index-row count; the
+    * statistics are observed from the markers, which are then filtered
+    * out. Every hash still probes all its other buckets, and both
+    * orientations of a pair are probed, so a qualifying pair is lost only
+    * if EVERY band bucket within flip distance of either side is hot.
     * Recall against planted re-encode near-dups is asserted ≥ 0.99 by
-    * RecallSpec. */
+    * RecallSpec. `dfCap = Int.MaxValue` disables the cap (the
+    * exact-contract SimHash listing). */
   private[graft] def multiIndexHammingPairsIn(
       df: DataFrame, idCol: String, hashCol: String,
       bands: Int, subRadius: Int, radius: Int,
-      dfCap: Int)(scope: CacheScope): (DataFrame, DataFrame) = {
+      dfCap: Int): (DataFrame, BucketStats) = {
     require(bands * (subRadius + 1) - 1 >= radius,
       s"multi-index guarantee ${bands * (subRadius + 1) - 1} below radius $radius")
     val width = 64 / bands
-    // single packed join key (band_id ∥ band_val): one long compare/hash in
-    // the hot join instead of a two-column composite
-    val key = (shiftleft(col("band_id").cast("long"), width).bitwiseOR(col("band_val"))).as("_k")
-    val indexed = scope.persistEager(df.select(col(idCol), col(hashCol),
-        posexplode(Keys.hammingBands(col(hashCol), bands))
-          .as(Seq("band_id", "band_val")))
-      .select(col(idCol), col(hashCol), col("band_id"), col("band_val"), key))
-    // dfCap = Int.MaxValue ⇒ the cap is DISABLED (the exact-contract
-    // callers, e.g. SimHash): `hot` is empty by construction, so the
-    // bucket-frequency aggregate and the anti-join it fed are dead plan
-    // weight — two extra jobs per run at the driver's scale. Skip them and
-    // report a literal zero-truncation metrics row.
-    val capped = dfCap != Int.MaxValue
-    val hot = indexed.groupBy("_k").agg(count(lit(1)).as("_df"))
-      .where(col("_df") > dfCap)
-    val cold = if (capped) indexed.join(hot, Seq("_k"), "left_anti") else indexed
-    val masks = Keys.flipMasks(width, subRadius)
-    val probe = indexed.select(col(idCol).as("_pid"), col(hashCol).as("_ph"),
-        col("band_id"),
-        explode(array(masks.map(m => col("band_val").bitwiseXOR(lit(m))): _*))
-          .as("band_val"))
-      .select(col("_pid"), col("_ph"),
-              (shiftleft(col("band_id").cast("long"), width).bitwiseOR(col("band_val"))).as("_k"))
-    val pairs = probe
-      // shuffled hash join: both sides are tens of millions of slim rows and
-      // the output is filtered to a trickle — the SMJ sort of the probe side
-      // was pure overhead
-      .join(cold.select(col(idCol).as("_iid"), col(hashCol).as("_ih"), col("_k"))
-                .hint("SHUFFLE_HASH"),
-            Seq("_k"))
-      // least/greatest, NOT a `_pid < _iid` filter: a qualifying pair must
-      // survive if EITHER side's band bucket is cold (the dfCap drops hot
-      // buckets from the index side only, so when the smaller id sits in
-      // hot buckets for every qualifying band, the larger id's probe into
-      // the smaller id's cold bucket is the pair's only surviving
-      // orientation — an ordered filter lost it). distinct dedups the
-      // double-found pairs.
-      .where(col("_pid") =!= col("_iid") &&
-             Keys.hammingDist(col("_ph"), col("_ih")) <= radius)
-      .select(least(col("_pid"), col("_iid")).as("id1"),
-              greatest(col("_pid"), col("_iid")).as("id2"),
-              Keys.hammingDist(col("_ph"), col("_ih")).as("hamming_d"))
+    // position 0 is mask 0 (Keys.flipMasks): the index row
+    val flips = array(Keys.flipMasks(width, subRadius).map(m => col("_v").bitwiseXOR(lit(m))): _*)
+    val rows = df.select(col(idCol).as("_id"), col(hashCol).as("_h"),
+        posexplode(Keys.hammingBands(col(hashCol), bands)).as(Seq("_band", "_v")))
+      .select(col("_id"), col("_h"), col("_band"), posexplode(flips).as(Seq("_m", "_pv")))
+      // single packed key (band_id ∥ chunk value): one long hash and compare
+      .select(shiftleft(col("_band").cast("long"), width).bitwiseOR(col("_pv")).as("_k"),
+              (col("_m") === 0).as("_ix"), col("_id"), col("_h"))
+    val t = df.schema(idCol).dataType
+    val found = StructType(Seq(StructField("_a", t), StructField("_b", t),
+      StructField("hamming_d", IntegerType, nullable = false),
+      StructField("_hot", LongType, nullable = false)))
+    // index rows sort first in their bucket, so the pass holds them before
+    // the first probe row arrives
+    val verified = rows.groupBy(col("_k"))
+      .as(Encoders.row(rows.select("_k").schema), Encoders.row(rows.schema))
+      .flatMapSortedGroups(col("_ix").desc)((_, it) =>
+        probeBucket(it, radius, dfCap))(Encoders.row(found))
+    val stats = new BucketStats
+    // least/greatest, NOT an ordered filter: a qualifying pair must survive
+    // if EITHER side's band bucket is cold (when the smaller id sits in hot
+    // buckets for every qualifying band, the larger id's probe into the
+    // smaller id's cold bucket is the pair's only surviving orientation);
+    // distinct dedups the pairs found in several buckets or orientations
+    val pairs = stats.observe(verified, col("_hot") > 0, col("_hot"))
+      .where(col("_hot") === 0)
+      .select(least(col("_a"), col("_b")).as("id1"), greatest(col("_a"), col("_b")).as("id2"),
+              col("hamming_d"))
       .distinct()
-    // the logged truncation for the no-silent-caps rule (reads cached
-    // `indexed`; coalesce covers the no-hot-buckets empty aggregate)
-    val metrics =
-      if (capped)
-        hot.agg(coalesce(count(lit(1)), lit(0L)).as("salted_buckets"),
-                coalesce(sum(col("_df")), lit(0L)).as("salt_groups"))
-      else {
-        import df.sparkSession.implicits._
-        Seq((0L, 0L)).toDF("salted_buckets", "salt_groups")
+    (pairs, stats)
+  }
+
+  /** `multiIndexHammingPairsIn`'s pass over one band bucket, rows (_k, _ix,
+    * _id, _h) with the index rows first. Emits (a, b, d, 0) for every probe
+    * row a within `radius` of an index row b with another id — each
+    * index × index pair once — or, for a bucket of more than `dfCap` index
+    * rows, only the marker (null, null, 0, index rows). Holds at most
+    * min(index rows, dfCap) rows. */
+  private def probeBucket(rows: Iterator[Row], radius: Int, dfCap: Int): Iterator[Row] = {
+    val it = rows.buffered
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var hs = new Array[Long](16)
+    var index = 0L
+    while (it.hasNext && it.head.getBoolean(1)) {
+      val r = it.next()
+      index += 1
+      if (index <= dfCap) {
+        if (ids.length == hs.length) hs = java.util.Arrays.copyOf(hs, hs.length * 2)
+        hs(ids.length) = r.getLong(3)
+        ids += r.get(2)
       }
-    (pairs, metrics)
+    }
+    // the unread probe rows of a hot bucket are skipped by the grouping
+    if (index > dfCap) Iterator.single(Row(null, null, 0, index))
+    else {
+      def near(id: Any, h: Long, upTo: Int): Iterator[Row] =
+        Iterator.range(0, upTo).flatMap { j =>
+          val d = java.lang.Long.bitCount(h ^ hs(j))
+          if (d <= radius && ids(j) != id) Some(Row(id, ids(j), d, 0L)) else None
+        }
+      Iterator.range(0, ids.length).flatMap(i => near(ids(i), hs(i), i)) ++
+        it.flatMap(r => near(r.get(2), r.getLong(3), ids.length))
+    }
   }
 
   /** pHash Hamming candidate edges: identical-phash collapse up front (the
@@ -393,33 +450,26 @@ object Candidates {
     * then `multiIndexHammingPairsIn` over the representatives. Defaults
     * (4 × 16-bit chunks, 1-flip probes) guarantee blocking recall for the
     * full exact-verify radius 7 — see NearDupConfig for the selectivity
-    * story. Returns (edges, metrics). */
+    * story. Returns (edges, metrics): ONE sealed frame, the edges; the hot
+    * band buckets are observed inside its job. */
   def phashHammingEdges(df: DataFrame, idCol: String, phashCol: String,
-                        cfg: NearDupConfig): (DataFrame, DataFrame) = {
-    val Seq(edges, metrics) = CacheScope.sealMany { scope =>
-      // collapse identical phash first (same reasoning as captions); LAZY
-      // persist — the collapse window previously ran TWICE (once for the
-      // exact-star edges, once under the Hamming index) because the two
-      // consumers lived in separate plans; here the index side's eager
-      // `indexed` count builds this cache and the sealed union reads it
+                        cfg: NearDupConfig): (DataFrame, DataFrame) =
+    sealObserved { _ =>
+      // collapse identical phash first (same reasoning as captions). No
+      // persist: both branches read the one window exchange (AQE reuses
+      // it); a lazy persist here cost two cache-building jobs per call
       val repW = Window.partitionBy(col(phashCol))
-      val withRep = scope.persist(df.select(col(idCol), col(phashCol))
-        .withColumn("_rep", min(idCol).over(repW)))
+      val withRep = df.select(col(idCol), col(phashCol))
+        .withColumn("_rep", min(idCol).over(repW))
       val samePhash = withRep.where(col(idCol) =!= col("_rep"))
         .select(col("_rep").as("id1"), col(idCol).as("id2"), lit("phash_exact").as("kind"))
       val reps = withRep.where(col(idCol) === col("_rep"))
         .select(col(idCol), col(phashCol))
-      // metrics: hot band buckets dropped by the df cap + the index rows they
-      // held (no-silent-caps rule)
-      val (pairs, m) = multiIndexHammingPairsIn(reps, idCol, phashCol,
-          cfg.hammingBands, cfg.hammingSubRadius, cfg.hammingRadius,
-          cfg.hammingDfCap)(scope)
-      val e = pairs.select(col("id1"), col("id2"), lit("phash_hamming").as("kind"))
-        .unionByName(samePhash)
-      Seq(e, m)
+      val (pairs, stats) = multiIndexHammingPairsIn(reps, idCol, phashCol,
+          cfg.hammingBands, cfg.hammingSubRadius, cfg.hammingRadius, cfg.hammingDfCap)
+      (pairs.select(col("id1"), col("id2"), lit("phash_hamming").as("kind"))
+         .unionByName(samePhash), stats)
     }
-    (edges, metrics)
-  }
 
   /** Contained-caption candidate edges: `containmentPairsIn`'s listing,
     * oriented `id1 < id2`, kind `containment`. Returns (id1, id2, kind). */
@@ -427,8 +477,8 @@ object Candidates {
                        cfg: NearDupConfig): DataFrame =
     CacheScope.seal(containmentEdgesIn(df, idCol, captionCol, cfg)(_))
 
-  /** Lazy body of `containmentEdges` — see `multiIndexHammingPairsIn`. No
-    * distinct after orienting: the listing's strict length test lets a
+  /** Lazy body of `containmentEdges` (intermediates persist into `scope`).
+    * No distinct after orienting: the listing's strict length test lets a
     * pair appear in one orientation only. */
   private[graft] def containmentEdgesIn(df: DataFrame, idCol: String, captionCol: String,
                                         cfg: NearDupConfig)(scope: CacheScope): DataFrame =
@@ -460,10 +510,12 @@ object Candidates {
     // EAGER: this frame feeds several downstream exchanges, and AQE
     // materializes independent exchange subtrees concurrently — a lazy
     // persist would be recomputed by each racing stage (see persistEager).
+    // The empty-shingle filter applies to the persisted frame: inside it,
+    // the optimizer would copy the UDF into the pushed-down filter.
     val norm = scope.persistEager(df
-      .select(col(idCol), Keys.normCaption(col(textCol)).as("_nc"))
-      .withColumn("_sh", Keys.shingleHashUdf(k)(col("_nc")))
-      .where(size(col("_sh")) > 0))
+        .select(col(idCol), Keys.normCaption(col(textCol)).as("_nc"))
+        .withColumn("_sh", Keys.shingleHashUdf(k)(col("_nc"))))
+      .where(size(col("_sh")) > 0)
     // ship (id, text-LENGTH, block) — never the text itself: the exploded
     // frame is ~shingles×docs rows and feeds the argmin and block joins;
     // carrying the string payload there was measured at 3.6 GB shuffled for
@@ -493,9 +545,11 @@ object Candidates {
     // separate re-explode of `norm` here was a third full pass at 1M docs
     val long = exploded.select(col(idCol).as("long_id"), col("_len").as("_llen"),
                                col("block"))
-    // (short_id, block) is unique (one chosen block/doc) and (long_id,
-    // block) is unique (array_distinct shingles), so the join emits each
-    // candidate pair at most once — no pre-verify dedup needed. The text
+    // No distinct anywhere below: `idCol` is the row identity, each short
+    // doc picks ONE block, and `_sh` is distinct, so (short_id, block) and
+    // (long_id, block) are unique and `short ⋈ long` emits each (short,
+    // long) pair at most once; the two text rejoins match one `norm` row
+    // per id, so they keep it that way (asserted by OpsSpec). The text
     // STRINGS rejoin for candidate pairs only; no join hints: AQE
     // broadcasts the cached `norm` side at the benchmark sizes, where
     // SHUFFLE_HASH hints forced two shuffles.
@@ -511,6 +565,5 @@ object Candidates {
       .where(instr(concat(lit(" "), col("l_nc"), lit(" ")),
                    concat(lit(" "), col("s_nc"), lit(" "))) > 0)
       .select("short_id", "long_id")
-      .distinct()
   }
 }

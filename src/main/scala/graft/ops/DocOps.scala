@@ -31,13 +31,20 @@ object DocOps {
     * verified with exact integer Jaccard over the full shingle sets.
     * Output: (doc1, doc2, n_inter, n_union). */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int, thresholdPct: Int): DataFrame = CacheScope.deferred { scope =>
+                   k: Int, thresholdPct: Int): DataFrame =
+    CacheScope.deferred(jaccardPairsIn(docs, idCol, textCol, k, thresholdPct)(_))
+
+  /** Lazy body of `jaccardPairs` (intermediates persist into `scope`). */
+  private[graft] def jaccardPairsIn(docs: DataFrame, idCol: String, textCol: String,
+                                    k: Int, thresholdPct: Int)(scope: CacheScope): DataFrame = {
     // distinct shingles as 8-byte JVM hashes (see Candidates.containmentPairsIn
-    // — set identity is preserved modulo 64-bit collisions ~1e-19/pair)
+    // — set identity is preserved modulo 64-bit collisions ~1e-19/pair); the
+    // empty-set filter applies to the persisted frame, so the UDF runs once
+    // a row (inside it, the optimizer copies the UDF into the filter)
     val withSh = scope.persistEager(docs
-      .select(col(idCol).as("doc_id"),
-              Keys.shingleHashUdf(k)(Keys.normCaption(col(textCol))).as("_sh"))
-      .where(size(col("_sh")) > 0))
+        .select(col(idCol).as("doc_id"),
+                Keys.shingleHashUdf(k)(Keys.normCaption(col(textCol))).as("_sh")))
+      .where(size(col("_sh")) > 0)
     val exploded = withSh.select(col("doc_id"), size(col("_sh")).as("nt"),
                                  explode(col("_sh")).as("s"))
     // df lookup joins only the REPEATED shingles (absent ⇒ df = 1 — the
@@ -166,14 +173,13 @@ object DocOps {
     // collapse identical normalized texts to one representative (skew guard,
     // same as the LSH path)
     val repW = Window.partitionBy(col("_nc"))
-    // LAZY persists: multiIndexHammingPairsIn's eager `indexed` count is the
-    // operator's one barrier, and its linear chain (indexed ← reps ← withRep)
-    // builds both caches in that same job — eager counts here were redundant
-    // barriers (round-3 eager-seal regression). Every later consumer (the
-    // verify joins, member expansion, cliques) reads the built caches.
+    // `reps`' eager count is the operator's one barrier: its linear chain
+    // (reps ← withRep) builds both caches in that job, so the Hamming
+    // buckets, member expansion and cliques all read built caches (a lazy
+    // `reps` would be raced into by those exchanges; see persistEager)
     val withRep = scope.persist(base.withColumn("_rep", min("doc_id").over(repW)))
     val members = withRep.select(col("doc_id").as("id"), col("_rep").as("rep"))
-    val reps = scope.persist(withRep.where(col("doc_id") === col("_rep"))
+    val reps = scope.persistEager(withRep.where(col("doc_id") === col("_rep"))
       .select(col("doc_id"), Keys.tokens(col("_nc")).as("_t"))
       .where(size(col("_t")) > 0)
       .select(col("doc_id"), Keys.simhashMd5Udf(col("_t")).as("_sim")))
@@ -183,7 +189,7 @@ object DocOps {
     val (repPairs, _) = Candidates.multiIndexHammingPairsIn(
       reps, "doc_id", "_sim",
       cfg.simhashBands, cfg.simhashSubRadius, cfg.simhashRadius,
-      dfCap = Int.MaxValue)(scope)
+      dfCap = Int.MaxValue)
     // member expansion: cross pairs inherit the rep distance (identical
     // text ⇒ identical signature); identical-text groups pair at distance 0
     Candidates.expandRepPairs(repPairs, members,

@@ -103,10 +103,12 @@ final case class NearDupConfig(
     // the verify stage (`bit_count(xor) ≤ hammingRadius`) is exact either
     // way, so the guarantee must COVER hammingRadius or blocking silently
     // loses qualifying pairs. Defaults (4 × 16-bit chunks, 1-flip probes):
-    // guarantee d ≤ 7 = hammingRadius, 17 masks/chunk (68 probe rows/hash).
+    // guarantee d ≤ 7 = hammingRadius, 17 masks/chunk: 68 bucket rows per
+    // hash, one exchange — the 4 mask-0 rows index the hash in its own
+    // band buckets, and all 68 probe the buckets they name.
     // Chunk width (64/bands) is the selectivity lever: random-bucket
     // density is n/2^width, so 16-bit chunks stay sparse to n ≈ 10⁷ reps;
-    // past that the probe join fattens quadratically — at 10⁹⁺ rows the
+    // past that the buckets fatten quadratically — at 10⁹⁺ rows the
     // design note is a 128-bit perceptual hash (8 × 16-bit chunks keep both
     // the guarantee and the selectivity) or sharding by a coarse content
     // descriptor first.
@@ -114,8 +116,8 @@ final case class NearDupConfig(
     hammingSubRadius: Int = 1, // flip-enumeration bits per chunk probe
     hammingRadius: Int = 7,    // exact verify: bit_count(xor) ≤ radius
     // A band value shared by more than this many hashes is a degenerate
-    // hash region (solid-color-like inputs): it is dropped from the index
-    // side of the probe join, WITH a logged count — the quadratic guard.
+    // hash region (solid-color-like inputs): its bucket emits no pairs (its
+    // index side is dropped), WITH a logged count — the quadratic guard.
     // Measured at 1M images: 0.6% of buckets above 256 held half of Σ df².
     hammingDfCap: Int = 256,
     // SimHash near-dup radius, same multi-index machinery. The operator's

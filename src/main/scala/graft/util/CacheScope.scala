@@ -12,13 +12,15 @@ import org.apache.spark.storage.StorageLevel
   * executor storage out from under the shuffles that need it. Two
   * lifecycles make the leak structurally impossible:
   *
-  *   - CONCURRENT mode (`seal`/`sealMany`): the operator's OUTPUT is
+  *   - SEALED mode (`seal`/`sealMany`): the operator's OUTPUT is
   *     materialized eagerly (`Seal` — localCheckpoint by default, a
   *     reliable checkpoint when spark.graft.checkpoint.dir is set), which
   *     truncates its lineage off the scoped frames; the scope then releases
   *     every registered persist synchronously (try/finally). This is the
-  *     mode for the flagship pipeline, where independent candidate sources
-  *     run as concurrent jobs over shared frames.
+  *     mode for the flagship pipeline, whose candidate sources run
+  *     concurrently, each in its own scope, and each seals ONE frame: its
+  *     edges, with the bucket statistics observed inside that seal's job.
+  *     `sealMany` seals several outputs of one scope one after another.
   *   - DEFERRED mode (`deferred`): the operator returns its LAZY plan —
   *     no checkpoint job (the flat seal cost measured round 4 as 0.6-0.77
   *     idle at 32 cores on the pair-listing queries) — and the scope parks
@@ -30,32 +32,32 @@ import org.apache.spark.storage.StorageLevel
   *     never heard of `flushDeferred` cannot leak persists past its own
   *     action (round-5 "What's wrong" #1). Multi-exchange intermediates
   *     keep their eager `persistEager` barrier even here — AQE races
-  *     sub-stages of a single action into unbuilt caches just like
-  *     concurrent seal jobs (see persistEager).
+  *     sub-stages of a single action into unbuilt caches (see
+  *     persistEager).
   *
   * Checkpointed outputs live as plain RDD blocks outside the SQL cache
   * manager and are reclaimed by the ContextCleaner once unreferenced, so
-  * after any concurrent-mode operator returns — and after any consumer's
+  * after any sealed-mode operator returns — and after any consumer's
   * deferred-scope release — the session's cache manager is empty (asserted
   * by PlanShapeSpec).
   */
 final class CacheScope {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private val lazyFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
   /** Persist `df` (MEMORY_AND_DISK) for the life of this scope. */
   def persist(df: DataFrame): DataFrame = {
     frames += df
-    lazyFrames += df
     df.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** The frames persisted into this scope, in order (for plan specs). */
+  private[graft] def persisted: Seq[DataFrame] = frames.toSeq
+
   /** Persist `df`, MATERIALIZING it before returning. A lazy persist is
     * not enough when the frame feeds two or more downstream EXCHANGES: AQE
-    * materializes every ready shuffle-map stage CONCURRENTLY — across the
-    * seal jobs of a concurrent-mode scope AND across the sub-stages of one
-    * single consumer action — and jobs racing into a not-yet-built cache
-    * each recompute the full subtree (measured twice: the containment
+    * materializes every ready shuffle-map stage of one action
+    * CONCURRENTLY, and jobs racing into a not-yet-built cache each
+    * recompute the full subtree (measured twice: the containment
     * source's scan+shingle pass ran 2-3× per query, ~500 CPU core-s each
     * at 1M captions, with its persist never hit; and an experiment making
     * this lazy in deferred mode doubled q_doc_pipeline/q_dup_clusters at
@@ -64,107 +66,29 @@ final class CacheScope {
     * future, overlapped with the other candidate sources. */
   def persistEager(df: DataFrame): DataFrame = {
     val p = persist(df)
-    lazyFrames.remove(lazyFrames.length - 1)
     p.count()
     p
   }
-
-  /** Lazily-persisted frames whose cache has NOT been built yet — i.e. no
-    * eager barrier's lineage covered them. Uses the InMemoryRelation's
-    * cache-builder state (reflective: `cacheBuilder` /
-    * `isCachedColumnBuffersLoaded` are private[sql], which is public in
-    * bytecode). A frame with no cache entry at all also reports unbuilt. */
-  private[util] def unbuiltLazyPersists(): Seq[DataFrame] =
-    lazyFrames.toSeq.filterNot { df =>
-      try {
-        df.queryExecution.withCachedData.collectFirst {
-          case r if r.getClass.getSimpleName == "InMemoryRelation" =>
-            val cb = r.getClass.getMethod("cacheBuilder").invoke(r)
-            cb.getClass.getMethod("isCachedColumnBuffersLoaded")
-              .invoke(cb).asInstanceOf[Boolean]
-        }.getOrElse(false)
-      } catch { case _: Throwable => true }
-    }
 
   // synchronized: a deferred scope can be closed concurrently by the
   // consumer's manual flushDeferred() and the async auto-release listener
   def close(): Unit = synchronized {
     frames.foreach(_.unpersist(blocking = false))
     frames.clear()
-    lazyFrames.clear()
   }
 }
 
-object CacheScope extends org.apache.spark.internal.Logging {
+object CacheScope {
   /** Build one output inside a fresh scope, seal it, release the scope. */
   def seal(body: CacheScope => DataFrame): DataFrame =
     sealMany(s => Seq(body(s))).head
 
-  // seal jobs of ONE sealMany call run concurrently (they are independent
-  // reads of already-materialized scoped caches); a small shared daemon pool
-  // bounds the extra scheduler pressure.
-  private lazy val sealEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
-        val t = new Thread(r, "graft-seal"); t.setDaemon(true); t
-      }))
-
-  /** Conf key for the concurrent-seal barrier check: "warn" (default) logs
-    * when a lazily-persisted frame is still unbuilt as concurrent seals
-    * submit; "throw" fails fast (specs/CI); "off" skips the check. */
-  val CheckSealBarriersKey = "spark.graft.checkSealBarriers"
-
-  /** Count of barrier violations detected (monotonic; for specs/metrics). */
-  private val barrierViolations = new java.util.concurrent.atomic.AtomicLong
-  def sealBarrierViolations: Long = barrierViolations.get()
-
   /** Build several outputs inside ONE fresh scope (they may share scoped
-    * intermediates), seal each eagerly, release the scope.
-    *
-    * The seals are submitted CONCURRENTLY. Safety invariant: the scope must
-    * contain at least one EAGER barrier (`persistEager`) whose lineage
-    * covers every lazy `persist` in it — the barrier's count() builds all
-    * covered caches in one job, so by seal time the concurrent checkpoint
-    * jobs only READ built caches. (Lazy persists whose materialization
-    * relied on "some downstream job will traverse them first" are exactly
-    * the race `persistEager` exists to prevent.) Sequential seals paid the
-    * sum of their barriers — the round-3 eager-seal regression on the
-    * pair-listing queries; concurrent seals pay roughly the max.
-    *
-    * The invariant is CHECKED at runtime (round-5 ask #2): before the
-    * concurrent seals submit, any lazily-persisted frame whose cache is
-    * still unbuilt is reported per `spark.graft.checkSealBarriers`
-    * ("warn" default / "throw" / "off"). */
+    * intermediates), seal each eagerly in turn, release the scope. */
   def sealMany(body: CacheScope => Seq[DataFrame]): Seq[DataFrame] = {
     val scope = new CacheScope
-    try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = sealEc
-      val outs = body(scope)
-      if (outs.sizeIs <= 1) outs.map(Seal(_))
-      else {
-        checkBarriers(scope, outs.head.sparkSession)
-        Await.result(
-          Future.sequence(outs.map(df => Future(Seal(df)))),
-          Duration.Inf)
-      }
-    } finally scope.close()
-  }
-
-  private def checkBarriers(scope: CacheScope, spark: SparkSession): Unit = {
-    val mode = spark.conf.getOption(CheckSealBarriersKey).getOrElse("warn")
-    if (mode == "off") return
-    val unbuilt = scope.unbuiltLazyPersists()
-    if (unbuilt.nonEmpty) {
-      barrierViolations.addAndGet(unbuilt.size)
-      val msg = s"sealMany: ${unbuilt.size} lazily-persisted frame(s) are " +
-        "unbuilt as concurrent seals submit — no persistEager barrier's " +
-        "lineage covers them, so racing seal jobs will recompute their " +
-        "subtrees (see CacheScope.persistEager). First schema: " +
-        unbuilt.head.schema.simpleString.take(200)
-      if (mode == "throw") throw new AssertionError(msg) else logWarning(msg)
-    }
+    try body(scope).map(Seal(_))
+    finally scope.close()
   }
 
   // -------- deferred scopes --------
@@ -200,7 +124,7 @@ object CacheScope extends org.apache.spark.internal.Logging {
     * consumer action is not one traversal under AQE.
     *
     * This is the single-consumer fast path: a query surface skips the
-    * output materialization the flagship needs (its sources race
+    * output materialization the flagship needs (its sources run
     * concurrently over shared frames, so their OUTPUTS must be sealed
     * before the scope releases; a deferred output is consumed after the
     * scope would have closed, hence the parked release instead). */

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.util.{CacheScope, Seal}
 
 /** Round-6 lifecycle hardening of the persist scopes:
   *   - deferred scopes auto-release when the consumer's action completes,
   *     even if the consumer never calls flushDeferred (misuse-proofing);
-  *   - sealMany detects a lazily-persisted frame no eager barrier covered
-  *     (the concurrent-seal recompute race) at runtime;
   *   - reliable seal mode warns once when checkpoint files would leak. */
 class CacheScopeSpec extends SparkSpec {
 
@@ -57,30 +53,6 @@ class CacheScopeSpec extends SparkSpec {
     // now the real consumer runs — auto-release drains
     edges.count()
     assert(eventually(10000)(cacheManagerEmpty))
-  }
-
-  test("sealMany flags a lazily-persisted frame no eager barrier covered") {
-    import spark.implicits._
-    spark.conf.set(CacheScope.CheckSealBarriersKey, "throw")
-    try {
-      val df = (1 to 100).toDF("x")
-      // uncovered lazy persist: nothing materializes `shared` before the
-      // two seals race into it
-      val planted = intercept[AssertionError] {
-        CacheScope.sealMany { scope =>
-          val shared = scope.persist(df.groupBy(col("x") % 7).count())
-          Seq(shared.where(col("count") > 0), shared.where(col("count") > 1))
-        }
-      }
-      assert(planted.getMessage.contains("persistEager"))
-      // covered case: an eager barrier builds the cache first — no throw
-      val outs = CacheScope.sealMany { scope =>
-        val shared = scope.persist(df.groupBy(col("x") % 7).count())
-        scope.persistEager(shared.where(col("count") >= 0)) // lineage covers shared
-        Seq(shared.where(col("count") > 0), shared.where(col("count") > 1))
-      }
-      assert(outs.size == 2)
-    } finally spark.conf.unset(CacheScope.CheckSealBarriersKey)
   }
 
   test("reliable seal mode warns once on the checkpoint-file leak, silenced by ack") {

@@ -20,13 +20,8 @@ class CandidatesSpec extends SparkSpec {
   private def oneBand(keys: Seq[(String, Long)]) =
     banded(keys.map { case (id, k) => (id, Seq(1L, 2L, 3L), Seq(k)) })
   private def bucketPairs(df: org.apache.spark.sql.DataFrame, cap: Int,
-                          pairComplete: Boolean) = {
-    val Seq(p, m) = CacheScope.sealMany { _ =>
-      val (p, m) = Candidates.bucketPairs(df, "id", cap, 80, pairComplete)
-      Seq(p, m)
-    }
-    (p, m)
-  }
+                          pairComplete: Boolean) =
+    Candidates.sealObserved(_ => Candidates.bucketPairs(df, "id", cap, 80, pairComplete))
   // bucket 1 holds a path a ~ b ~ c whose ends fail the Jaccard test
   // (J(a,b) = J(b,c) = 9/11, J(a,c) = 8/12); bucket 2 an identical pair
   private def smallBuckets = banded(Seq(
@@ -137,9 +132,11 @@ class CandidatesSpec extends SparkSpec {
     shingled.unpersist()
   }
 
+  private def hammingPairsAndMetrics(df: org.apache.spark.sql.DataFrame, dfCap: Int) =
+    Candidates.sealObserved(_ => Candidates.multiIndexHammingPairsIn(df, "id", "h",
+      bands = 4, subRadius = 1, radius = 7, dfCap))
   private def hammingPairs(df: org.apache.spark.sql.DataFrame, dfCap: Int) =
-    CacheScope.sealMany(scope => Seq(Candidates.multiIndexHammingPairsIn(df, "id", "h",
-      bands = 4, subRadius = 1, radius = 7, dfCap)(scope)._1)).head
+    hammingPairsAndMetrics(df, dfCap)._1
 
   test("multi-index Hamming: exact recall to the guaranteed radius") {
     val base = 0x0f0f0f0f0f0f0f0fL
@@ -176,6 +173,50 @@ class CandidatesSpec extends SparkSpec {
       .as[(String, String, Int)].collect().toSet
     assert(pairs.contains(("a_small", "z_big", 7)),
       s"orientation-dependent pair lost: $pairs")
+  }
+
+  private def saltRow(metrics: org.apache.spark.sql.DataFrame) =
+    metrics.as[(Long, Long)].collect().toSeq
+
+  test("observed bucket statistics: caption-LSH at cap 16 equals the bucket sizes") {
+    // 300 near-identical captions share most LSH buckets; 5 unrelated ones don't
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val df = ((0 until 300).map(i => (i.toLong, s"$base v$i")) ++
+              (0 until 5).map(i => (1000L + i, s"other words $i here now"))).toDF("id", "caption")
+    val udf = graft.keys.Keys.shingleLshUdf(3, 16, 4)
+    val bands = df.select(udf(graft.keys.Keys.normCaption(col("caption")))("_2"))
+      .as[Seq[Long]].collect().toSeq
+    val sizes = bands.flatMap(_.zipWithIndex).groupBy(identity).values.map(_.size)
+    val hot = sizes.filter(_ > 16).toSeq
+    assert(hot.nonEmpty, "the fixture must salt")
+    val (_, metrics) = Candidates.captionLshEdges(df, "id", "caption",
+      NearDupConfig(maxBucketSize = 16))
+    assert(saltRow(metrics) == Seq((hot.size.toLong, hot.map(s => (s + 15) / 16).sum.toLong)))
+    // no shared bucket at all: the observed frame is empty, and reads (0, 0)
+    val (_, none) = Candidates.captionLshEdges(df.where(col("id") >= 1000), "id", "caption",
+      NearDupConfig(maxBucketSize = 16))
+    assert(saltRow(none) == Seq((0L, 0L)))
+  }
+
+  test("observed bucket statistics: pHash hot band buckets at dfCap 4") {
+    // multi-index body, z_big's fixture: every band bucket of the shared
+    // hash holds 7 index rows > 4, a_small's hold one
+    val bHash = 0x7777777777777777L
+    val aHash = bHash ^ (0x3L | (0x3L << 16) | (0x3L << 32) | (1L << 48))
+    val rows = (Seq(("a_small", aHash), ("z_big", bHash)) ++
+      (1 to 6).map(i => (s"f_$i", bHash))).toDF("id", "h")
+    assert(saltRow(hammingPairsAndMetrics(rows, dfCap = 4)._2) == Seq((4L, 28L)))
+    // the flagship source: five distinct hashes that differ in chunk 3 only
+    // share three band buckets of 5 index rows each
+    val near = (1 to 5).map(i => (i.toLong, bHash ^ (i.toLong << 48))).toDF("id", "phash")
+    val cfg = NearDupConfig(hammingDfCap = 4)
+    val (edges, metrics) = Candidates.phashHammingEdges(near, "id", "phash", cfg)
+    assert(saltRow(metrics) == Seq((3L, 15L)))
+    assert(edges.count() > 0, "the chunk-3 probes still pair them")
+    // hashes far apart share no bucket: (0, 0)
+    val far = Seq((1L, 0L), (2L, -1L), (3L, 0x00ff00ff00ff00ffL)).toDF("id", "phash")
+    val (farEdges, farMetrics) = Candidates.phashHammingEdges(far, "id", "phash", cfg)
+    assert(farEdges.isEmpty && saltRow(farMetrics) == Seq((0L, 0L)))
   }
 
   test("containment edges: short ⊂ long found via first-shingle block") {

@@ -70,9 +70,10 @@ class OpsSpec extends SparkSpec {
 
   test("expandRepPairs precondition: both callers' rep pairs are distinct") {
     // expandRepPairs drops its trailing distinct on the strength of this
-    // precondition, for the MinHash-LSH and the SimHash listings alike
+    // precondition, for the MinHash-LSH and the SimHash listings alike; the
+    // containment listing and edges carry no distinct either
     import graft.candidates.Candidates
-    import graft.util.CacheScope
+    import graft.util.Seal
     def assertDistinct(tag: String, pairs: org.apache.spark.sql.DataFrame): Unit = {
       val n = pairs.count()
       assert(n > 0, s"$tag: the fixture must yield pairs")
@@ -82,13 +83,22 @@ class OpsSpec extends SparkSpec {
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
     val planted = (0 until 80).map(i => (i.toLong, s"$base v$i")).toDF("id", "caption")
     val capped = NearDupConfig(maxBucketSize = 16)
-    val Seq(lshPairs, lshMetrics) = CacheScope.sealMany { scope =>
-      val (rp, _, _, m) = Candidates.captionLshPartsIn(planted, "id", "caption", capped,
+    val (lshPairs, lshMetrics) = Candidates.sealObserved { scope =>
+      val (rp, _, _, stats) = Candidates.captionLshPartsIn(planted, "id", "caption", capped,
         pairComplete = true)(scope)
-      Seq(rp, m)
+      (rp, stats)
     }
     assert(lshMetrics.first().getLong(0) > 0, "the bucket is above the cap (salted)")
     assertDistinct("captionLshPartsIn", lshPairs)
+    // containment: each short text shares ≥ 2 shingles with each of several
+    // longer texts that contain it, and the longer texts contain each other
+    val nested = Seq((1L, "a b c d"), (2L, "a b c d e"), (3L, "z a b c d e"),
+      (4L, "a b c d e f"), (5L, "y a b c d e f"), (6L, "b c d e f g")).toDF("id", "text")
+    val contained = graft.ops.DocOps.containmentPairs(nested, "id", "text", 3)
+    assert(contained.count() >= 8, "the fixture must yield many pairs per short text")
+    assertDistinct("containmentPairs", contained)
+    assertDistinct("containmentEdges",
+      Candidates.containmentEdges(nested, "id", "text", NearDupConfig()).select("id1", "id2"))
     // multi-index Hamming with the cap disabled, over real SimHash signatures
     assume(haveTestdata)
     import graft.keys.Keys
@@ -96,9 +106,9 @@ class OpsSpec extends SparkSpec {
       .select(col("doc_id"), Keys.tokens(Keys.normCaption(col("text"))).as("_t"))
       .where(size(col("_t")) > 0)
       .select(col("doc_id"), Keys.simhashMd5Udf(col("_t")).as("_sim"))
-    val hamming = CacheScope.seal(Candidates.multiIndexHammingPairsIn(sigs,
+    val hamming = Seal(Candidates.multiIndexHammingPairsIn(sigs,
       "doc_id", "_sim", cfg.simhashBands, cfg.simhashSubRadius,
-      cfg.simhashRadius, dfCap = Int.MaxValue)(_)._1)
+      cfg.simhashRadius, dfCap = Int.MaxValue)._1)
     assertDistinct("multiIndexHammingPairsIn", hamming)
     // and the SimHash listing built on it
     assertDistinct("simhashPairs",

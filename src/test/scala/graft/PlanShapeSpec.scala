@@ -98,6 +98,38 @@ class PlanShapeSpec extends SparkSpec {
     } finally { scope.close(); spark.catalog.clearCache() }
   }
 
+  test("each shingle UDF runs once a row: the plan building its persisted frame calls it once") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.util.CacheScope
+    // a cache scan is a leaf: an upstream persisted frame counts on its own
+    def udfCalls(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => udfCalls(a.inputPlan)
+      case _ => p.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum +
+                p.children.map(udfCalls).sum
+    }
+    val corpus = graft.gen.Corpus.generate(spark, nClusters = 10).toDF()
+    val cfg = graft.schema.NearDupConfig()
+    def callsOnce(tag: String)(body: CacheScope => Any): Unit = {
+      val scope = new CacheScope
+      try {
+        body(scope)
+        val calls = scope.persisted.map(_.queryExecution.withCachedData
+          .collectFirst { case r: InMemoryRelation => udfCalls(r.cacheBuilder.cachedPlan) })
+        assert(calls.forall(_.isDefined) && calls.flatten.sum == 1,
+          s"$tag: UDF calls in the plans of its persisted frames: $calls")
+      } finally scope.close()
+    }
+    callsOnce("captionLshPartsIn (shingleLshUdf)")(
+      graft.candidates.Candidates.captionLshPartsIn(corpus, "image_id", "caption", cfg)(_))
+    callsOnce("containmentPairsIn (shingleHashUdf)")(
+      graft.candidates.Candidates.containmentPairsIn(corpus, "image_id", "caption", 3)(_))
+    callsOnce("jaccardPairs (shingleHashUdf)")(
+      graft.ops.DocOps.jaccardPairsIn(corpus, "image_id", "caption", 3, 80)(_))
+  }
+
   test("operators leave the session cache manager empty (scoped persists)") {
     assume(haveTestdata)
     spark.catalog.clearCache()
@@ -115,7 +147,7 @@ class PlanShapeSpec extends SparkSpec {
       body.count()
       // deferred-mode operators hold their scoped persists until the
       // consumer's post-action flush — the contract every consumer
-      // (Bench, Verify, specs) follows; concurrent-mode operators must be
+      // (Bench, Verify, specs) follows; sealed-mode operators must be
       // clean with no flush at all, and the flush is a no-op for them
       graft.util.CacheScope.flushDeferred()
       assert(cacheManagerEmpty,
