@@ -253,13 +253,6 @@ object Candidates {
       : (DataFrame, DataFrame, DataFrame, BucketStats) = {
     val norm = df.select(col(idCol), Keys.normCaption(col(captionCol)).as("_nc"))
     val repW = Window.partitionBy(col("_nc"))
-    // LAZY persist: `shingled`'s eager count below is this operator's one
-    // barrier, and its linear chain (shingled ← withRep) builds this cache
-    // in the same job — an eager count here was a redundant barrier (part
-    // of the round-3 eager-seal regression). By seal time the cache is
-    // built, so the seal job only reads it.
-    val withRep = scope.persist(norm.withColumn("_rep", min(idCol).over(repW)))
-    val members = withRep.select(col(idCol).as("id"), col("_rep").as("rep"))
     // ONE fused JVM pass per rep computes the sorted distinct shingle hashes
     // AND the LSH band hashes (Keys.shingleLshUdf): shingling via the
     // interpreted higher-order-function expression was measured at
@@ -267,15 +260,22 @@ object Candidates {
     // shingles (~8 B each) instead of k-gram strings cuts the bucket
     // payload ~4×. Exact Jaccard over the hashed sets equals string-set
     // Jaccard unless two distinct shingles of one compared pair collide in
-    // 64 bits (~1e-19 per pair). EAGER: read by the bucket aggregate, the
-    // bucket rows and the seal; its cached size also lets the planner
-    // broadcast the bucket-size frame. The empty-shingle filter applies to
-    // the PERSISTED frame: inside the persisted plan the optimizer pushes
-    // it below the projection and copies the UDF into it (two calls a row).
+    // 64 bits (~1e-19 per pair).
+    // ONE cached frame for the rep-collapse chain: (id, _rep, _sb), `_sb`
+    // computed for reps only. `members` and `shingled` are projections of
+    // it, so the operator's one barrier builds one cache.
+    // EAGER: read by the members, the bucket aggregate, the bucket rows and
+    // the seal; its cached size also lets the planner broadcast the
+    // bucket-size frame. The empty-shingle filter (which also drops the
+    // members' null `_sb`) applies to the PERSISTED frame: inside the
+    // persisted plan the optimizer pushes it below the projection and
+    // copies the UDF into it (two calls a row).
     val sbUdf = Keys.shingleLshUdf(cfg.shingleK, cfg.lshBands, cfg.lshRowsPerBand)
-    val shingled = scope.persistEager(withRep.where(col(idCol) === col("_rep"))
-        .select(col(idCol), sbUdf(col("_nc")).as("_sb")))
-      .where(size(col("_sb._1")) > 0)
+    val parts = scope.persistEager(norm.withColumn("_rep", min(idCol).over(repW))
+      .select(col(idCol), col("_rep"),
+              when(col(idCol) === col("_rep"), sbUdf(col("_nc"))).as("_sb")))
+    val members = parts.select(col(idCol).as("id"), col("_rep").as("rep"))
+    val shingled = parts.where(size(col("_sb._1")) > 0)
       .select(col(idCol), col("_sb._1").as("_shh"), col("_sb._2").as("_bands"))
     val (repPairs, stats) = bucketPairs(shingled, idCol, cfg.maxBucketSize,
       math.round(cfg.jaccardThreshold * 100).toInt, pairComplete)

@@ -173,16 +173,20 @@ object DocOps {
     // collapse identical normalized texts to one representative (skew guard,
     // same as the LSH path)
     val repW = Window.partitionBy(col("_nc"))
-    // `reps`' eager count is the operator's one barrier: its linear chain
-    // (reps ← withRep) builds both caches in that job, so the Hamming
-    // buckets, member expansion and cliques all read built caches (a lazy
-    // `reps` would be raced into by those exchanges; see persistEager)
-    val withRep = scope.persist(base.withColumn("_rep", min("doc_id").over(repW)))
-    val members = withRep.select(col("doc_id").as("id"), col("_rep").as("rep"))
-    val reps = scope.persistEager(withRep.where(col("doc_id") === col("_rep"))
-      .select(col("doc_id"), Keys.tokens(col("_nc")).as("_t"))
-      .where(size(col("_t")) > 0)
-      .select(col("doc_id"), Keys.simhashMd5Udf(col("_t")).as("_sim")))
+    // ONE cached frame for the rep-collapse chain: (doc_id, _rep, _sim), the
+    // signature computed for reps with ≥1 token only (null otherwise).
+    // `members` and `reps` are projections of it, so the operator's one
+    // barrier builds one cache before the Hamming buckets, member expansion
+    // and cliques read it (see persistEager). The `when` guard, not a
+    // filter, keeps the persisted plan to one UDF call a rep; the rep
+    // filter applies to the persisted frame.
+    val toks = Keys.tokens(col("_nc"))
+    val parts = scope.persistEager(base.withColumn("_rep", min("doc_id").over(repW))
+      .select(col("doc_id"), col("_rep"),
+              when(col("doc_id") === col("_rep") && size(toks) > 0,
+                   Keys.simhashMd5Udf(toks)).as("_sim")))
+    val members = parts.select(col("doc_id").as("id"), col("_rep").as("rep"))
+    val reps = parts.where(col("_sim").isNotNull).select(col("doc_id"), col("_sim"))
     // dfCap disabled: this operator's contract is EXACT (every pair within
     // the radius, SQL-oracle-checked bit-for-bit), unlike the phash
     // candidate source where hot degenerate buckets are droppable

@@ -2,7 +2,9 @@ package graft
 
 import graft.util.{CacheScope, Seal}
 
-/** Round-6 lifecycle hardening of the persist scopes:
+/** Lifecycle of the persist scopes:
+  *   - an eager persist builds its cache in one job, whose tasks see the
+  *     session's SQL confs, and later actions read that cache;
   *   - deferred scopes auto-release when the consumer's action completes,
   *     even if the consumer never calls flushDeferred (misuse-proofing);
   *   - reliable seal mode warns once when checkpoint files would leak. */
@@ -21,6 +23,35 @@ class CacheScopeSpec extends SparkSpec {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
     cond
+  }
+
+  test("persistEager builds the cache in one job; a following action only reads it") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions.{col, udf}
+    import org.apache.spark.sql.internal.SQLConf
+    val built = spark.sparkContext.longAccumulator("persistEager-rows")
+    val seen = spark.sparkContext.collectionAccumulator[String]("persistEager-conf")
+    val probe = "spark.graft.test.barrierConf"
+    val tally = udf { (x: Long) =>
+      built.add(1); seen.add(SQLConf.get.getConfString(probe, "unset")); x
+    }
+    val df = spark.range(0, 1000, 1, 4).select(tally(col("id")).as("x")) // no exchange
+    val scope = new CacheScope
+    spark.conf.set(probe, "set")
+    try {
+      var p: DataFrame = null
+      assert(JobKit.jobsIn(spark) { p = scope.persistEager(df) } == 1)
+      assert(built.value == 1000)
+      // the build's tasks read the session's SQL confs, as an action's do
+      assert(seen.value.asScala.toSet == Set("set"))
+      val relation = p.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }
+      assert(relation.exists(_.cacheBuilder.isCachedColumnBuffersLoaded))
+      // the result job alone: no cache-building job, and no row recomputed
+      assert(JobKit.jobsIn(spark)(assert(p.collect().length == 1000)) == 1)
+      assert(built.value == 1000)
+    } finally { scope.close(); spark.conf.unset(probe) }
   }
 
   test("deferred scope releases WITHOUT a manual flush (auto-release listener)") {

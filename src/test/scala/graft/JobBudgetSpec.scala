@@ -1,16 +1,21 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.candidates.Candidates
 import graft.gen.Corpus
+import graft.ops.DocOps
 import graft.schema.{DedupConfig, NearDupConfig}
-import graft.util.Seal
+import graft.util.{CacheScope, Seal}
 
-/** The job budget of each flagship candidate source: on a small fixture
-  * with a salted caption bucket, every source submits a pinned number of
-  * Spark jobs, and the same number on a second call (a lazily persisted
-  * frame read by two branches of one seal races two cache builds, which
-  * shows as an extra job on some calls only). A job costs 60-100 ms of
-  * fixed overhead on a 4-core box, so an extra barrier is a regression. */
+/** The job budget of each flagship candidate source and each `DocOps` pair
+  * listing: on a small fixture with a salted caption bucket, every call
+  * submits a pinned number of Spark jobs, and the same number on a second
+  * call (a lazily persisted frame read by two branches of one seal races
+  * two cache builds, which shows as an extra job on some calls only). A
+  * job costs 60-100 ms of fixed overhead on a 4-core box, so an extra
+  * barrier — e.g. an eager persist that materializes with `count()` — is a
+  * regression. */
 class JobBudgetSpec extends SparkSpec {
 
   private lazy val features = {
@@ -26,11 +31,30 @@ class JobBudgetSpec extends SparkSpec {
       "caption_lsh" -> (() => Candidates.captionLshEdges(features, "iid", "caption", near): Unit),
       "phash_hamming" -> (() => Candidates.phashHammingEdges(features, "iid", "phash", near): Unit),
       "containment" -> (() => Candidates.containmentEdges(features, "iid", "caption", near): Unit))
+    assertBudget(sources,
+      Seq("exact" -> 3, "caption_lsh" -> 5, "phash_hamming" -> 4, "containment" -> 8))
+  }
+
+  test("each DocOps pair listing submits a fixed number of jobs, every call") {
+    val docLsh = NearDupConfig(jaccardThreshold = 0.8)
+    // a consumer's call: one action over the deferred listing, then the flush
+    def listing(q: => DataFrame): () => Unit =
+      () => { q.collect(); CacheScope.flushDeferred() }
+    val listings: Seq[(String, () => Unit)] = Seq(
+      "simhashPairs" -> listing(DocOps.simhashPairs(features, "iid", "caption", docLsh)),
+      "minhashLshPairs" -> listing(DocOps.minhashLshPairs(features, "iid", "caption", docLsh)),
+      "containmentPairs" -> listing(DocOps.containmentPairs(features, "iid", "caption", 3)),
+      "jaccardPairs" -> listing(DocOps.jaccardPairs(features, "iid", "caption", 3, 80)))
+    assertBudget(listings, Seq("simhashPairs" -> 10, "minhashLshPairs" -> 10,
+                               "containmentPairs" -> 8, "jaccardPairs" -> 9))
+  }
+
+  /** Each call's jobs, counted on two calls, equal its budget both times. */
+  private def assertBudget(calls: Seq[(String, () => Unit)], budget: Seq[(String, Int)]): Unit = {
     features.count() // the fixture's own jobs stay outside the counts
-    val jobs = sources.map { case (name, call) =>
+    val jobs = calls.map { case (name, call) =>
       name -> Seq.fill(2)(JobKit.jobsIn(spark)(call()))
     }
-    val budget = Seq("exact" -> 3, "caption_lsh" -> 8, "phash_hamming" -> 4, "containment" -> 10)
     assert(jobs == budget.map { case (name, n) => name -> Seq(n, n) })
   }
 }

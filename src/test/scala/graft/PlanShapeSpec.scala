@@ -128,6 +128,8 @@ class PlanShapeSpec extends SparkSpec {
       graft.candidates.Candidates.containmentPairsIn(corpus, "image_id", "caption", 3)(_))
     callsOnce("jaccardPairs (shingleHashUdf)")(
       graft.ops.DocOps.jaccardPairsIn(corpus, "image_id", "caption", 3, 80)(_))
+    callsOnce("simhashPairsIn (simhashMd5Udf)")(
+      graft.ops.DocOps.simhashPairsIn(corpus, "image_id", "caption", cfg)(_))
   }
 
   test("operators leave the session cache manager empty (scoped persists)") {
