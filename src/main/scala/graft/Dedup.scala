@@ -54,14 +54,6 @@ object Dedup {
       df.where(col("bytes").isNotNull)
     else df
 
-  // Candidate sources run as CONCURRENT jobs on the shared session: a small
-  // daemon pool submits them; Spark's scheduler interleaves their stages.
-  private lazy val sourceEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
-        val t = new Thread(r, "graft-candidate-source"); t.setDaemon(true); t
-      }))
-
   /** One-pass featurization — the ONLY stage that touches `bytes`.
     *
     * Every candidate source previously planned its own scan of the input,
@@ -135,8 +127,8 @@ object Dedup {
     *
     * The sources are independent Spark jobs over the shared featurized
     * frame (each operator seals its output eagerly — CacheScope), so
-    * they are submitted CONCURRENTLY and the union consumes each as it
-    * lands. Serially, total wall-clock is the SUM of every source's
+    * they are submitted CONCURRENTLY, each from its own thread, and the
+    * union consumes each as it lands. Serially, total wall-clock is the SUM of every source's
     * barriers and fixed per-stage costs — the dominant term of the
     * measured flat scaling residue (BASELINE.md round 2); concurrently it
     * is their MAX, and the scheduler backfills idle cores of one source's
@@ -165,14 +157,34 @@ object Dedup {
   }
 
   /** Candidate edges over an already-featurized slim frame (see
-    * `featurize`): (edges(id1,id2) over SURROGATE iids, metrics). */
+    * `featurize`): (edges(id1,id2) over SURROGATE iids, metrics).
+    *
+    * The sources run on threads of this call's own, created by the calling
+    * thread before any source starts, so they inherit its Spark local
+    * properties (job group, scheduler pool, description) — every job of
+    * the call carries the caller's group, not that of whichever caller
+    * first created a shared pool — and are shut down on return. */
   private[graft] def candidateEdgesFromFeatures(
       features: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
+    val nSources = 1 + Seq(cfg.enableCaptionLsh, cfg.enablePhashHamming,
+                           cfg.enableContainment).count(identity)
+    val pool = new java.util.concurrent.ThreadPoolExecutor(nSources, nSources,
+      0L, java.util.concurrent.TimeUnit.MILLISECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable], (r: Runnable) => {
+        val t = new Thread(r, "graft-candidate-source"); t.setDaemon(true); t
+      })
+    pool.prestartAllCoreThreads()
+    try candidateSources(features, cfg)(scala.concurrent.ExecutionContext.fromExecutor(pool))
+    finally pool.shutdown()
+  }
+
+  private def candidateSources(features: DataFrame, cfg: DedupConfig)
+                              (implicit ec: scala.concurrent.ExecutionContext)
+      : (DataFrame, DataFrame) = {
     val spark = features.sparkSession
     import spark.implicits._
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = sourceEc
     val keyed = features
     def srcMetrics(name: String, m: DataFrame): DataFrame =
       m.select(lit(name).as("source"), col("salted_buckets"), col("salt_groups"))
@@ -183,6 +195,8 @@ object Dedup {
       graft.util.JobDescription.tagged(spark.sparkContext, s"graft:source:$name")(body)
     val tasks: Seq[Future[(DataFrame, Option[DataFrame])]] = Seq(
       Future { tagged("exact") {
+        // featurize's `iid` is the row identity: its (rep, iid) edges are
+        // distinct without a `distinct` (starWithinBuckets' precondition)
         (graft.util.Seal(Candidates.exactEdges(keyed, "iid", "key")), None)
       }}) ++
       (if (cfg.enableCaptionLsh) Seq(Future { tagged("caption_lsh") {

@@ -308,6 +308,8 @@ object SparkEntry {
                 when(pmod(col("n_chars"), lit(2)) === 0, "ref")
                   .otherwise("scan").as("role"),
                 col("text"))
+      // doc_id is the documents table's row identity, so the (rep, doc)
+      // star edges are distinct (starWithinBuckets' precondition)
       val exact = graft.candidates.Candidates.starWithinBuckets(
           docs.withColumn("k40", substring(col("text"), 1, 40)),
           "image_id", Seq("k40"), "exact")

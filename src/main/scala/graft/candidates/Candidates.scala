@@ -23,9 +23,13 @@ import graft.util.CacheScope
   * MinHash-LSH, `multiIndexHammingPairsIn` — grouped and verified inside
   * each band bucket — + `expandRepPairs` for SimHash, `containmentPairsIn`
   * for containment); each public call only picks the output form and the
-  * sealing mode. A flagship source seals ONE frame, its edges; its bucket
-  * statistics are observed inside that frame's job (`BucketStats`), never
-  * aggregated by a job of their own.
+  * sealing mode. Both listing forms emit each pair once, in the lowest
+  * band that finds it, so no listing runs a `distinct`; a rep-collapse
+  * frame carries a `_sig` flag (the text yields a signature), from which
+  * `expandRepPairs` builds its cliques with no semi-join. A flagship
+  * source seals ONE frame, its edges; its bucket statistics are observed
+  * inside that frame's job (`BucketStats`), never aggregated by a job of
+  * their own.
   *
   * At 100 TB the invariant is: NEVER a cartesian product; every candidate
   * source is blocked on a key (exact key, LSH band hash, Hamming band,
@@ -84,6 +88,10 @@ object Candidates {
     * 175) into O(bucket) edges rather than O(bucket²). For *verified*
     * near-dup sources each pair must pass its verify predicate — see
     * `bucketPairs`.
+    *
+    * PRECONDITION: `idCol` is unique in `keyed`. Each row then emits at
+    * most one edge, (its bucket's minimum, itself), so the edges are
+    * distinct with no `distinct` exchange.
     */
   def starWithinBuckets(keyed: DataFrame, idCol: String, keyCols: Seq[String],
                         kind: String): DataFrame = {
@@ -92,7 +100,6 @@ object Candidates {
       .withColumn("_rep", min(idCol).over(w))
       .where(col(idCol) =!= col("_rep"))
       .select(col("_rep").as("id1"), col(idCol).as("id2"), lit(kind).as("kind"))
-      .distinct()
   }
 
   /** Verified near-dup pairs among LSH-banded rows, compared inside their
@@ -220,7 +227,9 @@ object Candidates {
 
   /** Exact-duplicate edges: rows sharing the match key (already a struct
     * column named `keyCol`). Star edges — exact groups can be huge (the
-    * skew block) and stars keep them linear. */
+    * skew block) and stars keep them linear. `idCol` must be the row
+    * identity (`starWithinBuckets`' precondition), which makes the edges
+    * distinct. */
   def exactEdges(df: DataFrame, idCol: String, keyCol: String): DataFrame =
     starWithinBuckets(df.select(col(idCol), col(keyCol)), idCol, Seq(keyCol), "exact")
 
@@ -230,13 +239,16 @@ object Candidates {
     * JVM pass (`Keys.shingleLshUdf`), then group and verify inside each LSH
     * bucket (`bucketPairs`).
     *
-    * Returns (repPairs, members, shingledReps, stats):
-    *   repPairs     (id1, id2)  verified near-dup pairs among representatives:
-    *                            all of them, once each, when `pairComplete`;
-    *                            else a subset with the same components
-    *   members      (id, rep)   every input row → its identical-caption rep
-    *   shingledReps (rep)       reps whose caption yields ≥1 shingle (groups
-    *                            whose within-pairs qualify at Jaccard 1)
+    * Returns (repPairs, members, stats):
+    *   repPairs (id1, id2)        verified near-dup pairs among
+    *                              representatives: all of them, once each,
+    *                              when `pairComplete`; else a subset with the
+    *                              same components
+    *   members  (id, rep, _sig)   every input row → its identical-caption
+    *                              rep; `_sig`: the caption yields ≥1 shingle
+    *                              (`hasShingles` — identical captions agree,
+    *                              and a group's within-pairs qualify at
+    *                              Jaccard 1 exactly when it holds)
     * The engine edge source contracts pairs and groups into a forest
     * (`captionLshEdges`); pair-listing queries expand to member level
     * (`expandRepPairs`).
@@ -250,7 +262,7 @@ object Candidates {
   private[graft] def captionLshPartsIn(df: DataFrame, idCol: String, captionCol: String,
                                        cfg: NearDupConfig,
                                        pairComplete: Boolean = false)(scope: CacheScope)
-      : (DataFrame, DataFrame, DataFrame, BucketStats) = {
+      : (DataFrame, DataFrame, BucketStats) = {
     val norm = df.select(col(idCol), Keys.normCaption(col(captionCol)).as("_nc"))
     val repW = Window.partitionBy(col("_nc"))
     // ONE fused JVM pass per rep computes the sorted distinct shingle hashes
@@ -261,9 +273,10 @@ object Candidates {
     // payload ~4×. Exact Jaccard over the hashed sets equals string-set
     // Jaccard unless two distinct shingles of one compared pair collide in
     // 64 bits (~1e-19 per pair).
-    // ONE cached frame for the rep-collapse chain: (id, _rep, _sb), `_sb`
-    // computed for reps only. `members` and `shingled` are projections of
-    // it, so the operator's one barrier builds one cache.
+    // ONE cached frame for the rep-collapse chain: (id, _rep, _sb, _sig),
+    // `_sb` computed for reps only, `_sig` for every row. `members` and
+    // `shingled` are projections of it, so the operator's one barrier
+    // builds one cache.
     // EAGER: read by the members, the bucket aggregate, the bucket rows and
     // the seal; its cached size also lets the planner broadcast the
     // bucket-size frame. The empty-shingle filter (which also drops the
@@ -273,14 +286,22 @@ object Candidates {
     val sbUdf = Keys.shingleLshUdf(cfg.shingleK, cfg.lshBands, cfg.lshRowsPerBand)
     val parts = scope.persistEager(norm.withColumn("_rep", min(idCol).over(repW))
       .select(col(idCol), col("_rep"),
-              when(col(idCol) === col("_rep"), sbUdf(col("_nc"))).as("_sb")))
-    val members = parts.select(col(idCol).as("id"), col("_rep").as("rep"))
+              when(col(idCol) === col("_rep"), sbUdf(col("_nc"))).as("_sb"),
+              hasShingles(col("_nc"), cfg.shingleK).as("_sig")))
+    val members = parts.select(col(idCol).as("id"), col("_rep").as("rep"), col("_sig"))
     val shingled = parts.where(size(col("_sb._1")) > 0)
       .select(col(idCol), col("_sb._1").as("_shh"), col("_sb._2").as("_bands"))
     val (repPairs, stats) = bucketPairs(shingled, idCol, cfg.maxBucketSize,
       math.round(cfg.jaccardThreshold * 100).toInt, pairComplete)
-    (repPairs, members, shingled.select(col(idCol).as("rep")), stats)
+    (repPairs, members, stats)
   }
+
+  /** A normalized text `nc` yields ≥1 word k-shingle: it has ≥ k tokens.
+    * The same split as `Keys.shingleLshUdf`, so this holds exactly when the
+    * UDF's shingle array is non-empty (asserted by KeysSpec); null for a
+    * null text, which a filter drops as false. */
+  private[graft] def hasShingles(nc: Column, k: Int): Column =
+    size(Keys.tokens(nc)) >= k
 
   /** Caption-LSH candidate edges for the cluster pipeline, in
     * connectivity form: the verified rep pairs ∪ a rep—member star per
@@ -295,7 +316,7 @@ object Candidates {
   def captionLshEdges(df: DataFrame, idCol: String, captionCol: String,
                       cfg: NearDupConfig): (DataFrame, DataFrame) =
     sealObserved { scope =>
-      val (repPairs, members, _, stats) =
+      val (repPairs, members, stats) =
         captionLshPartsIn(df, idCol, captionCol, cfg)(scope)
       val sameCaption = members.where(col("id") =!= col("rep"))
         .select(col("rep").as("id1"), col("id").as("id2"))
@@ -306,39 +327,40 @@ object Candidates {
 
   /** Expand rep-level verified pairs back to member level — the exact pair
     * LISTING the identical-key collapse stands for: every cross pair of two
-    * connected groups, plus every within-group pair of groups in
-    * `cliqueReps` (identical content ⇒ similarity 1 ⇒ qualifies, provided
-    * the content produced a signature at all — callers pass the shingled
-    * or signed reps). Columns of `repPairs` beyond (id1, id2) ride along
-    * on the cross pairs (identical content ⇒ a member pair inherits its
-    * rep pair's values); `cliqueCols` gives the same columns' values for
-    * the clique rows (e.g. SimHash's `lit(0).as("hamming_d")`). Output
-    * (id1, id2, extras…) with id1 < id2, Θ(listing size), inherent to
-    * pair listing; the cluster pipeline never calls this (stars suffice
-    * there).
+    * connected groups, plus every within-group pair of groups whose rows
+    * carry `_sig` (identical content ⇒ similarity 1 ⇒ qualifies, provided
+    * the content produced a signature at all; identical content agrees on
+    * the flag). `members` is (id, rep, _sig). Columns of `repPairs` beyond
+    * (id1, id2) ride along on the cross pairs (identical content ⇒ a
+    * member pair inherits its rep pair's values); `cliqueCols` gives the
+    * same columns' values for the clique rows (e.g. SimHash's
+    * `lit(0).as("hamming_d")`). Output (id1, id2, extras…) with id1 < id2,
+    * Θ(listing size), inherent to pair listing; the cluster pipeline never
+    * calls this (stars suffice there).
     *
-    * PRECONDITION: `repPairs` is distinct — SimHash's through
-    * `multiIndexHammingPairsIn`'s `distinct`, caption-LSH's because
-    * `bucketPairs`' listing form emits each pair only in the lowest band
-    * its two rows share (asserted by OpsSpec and CandidatesSpec). The
-    * output is then distinct WITHOUT a final exchange: member→rep is
-    * functional, so a cross pair {m1,m2} determines its rep pair uniquely
-    * (no duplicate across rep pairs) and appears once per rep pair;
-    * cliques are ordered within-group pairs (unique); and cross (different
-    * reps) is disjoint from cliques (same rep). A trailing `.distinct()`
-    * would be a full extra shuffle of the listing — the operator's LARGEST
-    * frame. */
+    * PRECONDITION: `repPairs` is distinct — both listing forms emit each
+    * pair only in the lowest band that finds it: caption-LSH's
+    * (`bucketPairs`) the lowest band its two rows share, SimHash's
+    * (`multiIndexHammingPairsIn`) the lowest band whose chunks differ by
+    * at most `subRadius` bits, in one probe orientation (asserted by
+    * OpsSpec and CandidatesSpec). The output is then distinct WITHOUT a
+    * final exchange: member→rep is functional, so a cross pair {m1,m2}
+    * determines its rep pair uniquely (no duplicate across rep pairs) and
+    * appears once per rep pair; cliques are ordered within-group pairs
+    * (unique); and cross (different reps) is disjoint from cliques (same
+    * rep). A trailing `.distinct()` would be a full extra shuffle of the
+    * listing — the operator's LARGEST frame. */
   def expandRepPairs(repPairs: DataFrame, members: DataFrame,
-                     cliqueReps: DataFrame, cliqueCols: Seq[Column] = Nil): DataFrame = {
+                     cliqueCols: Seq[Column] = Nil): DataFrame = {
     val extras = repPairs.columns.filterNot(Set("id1", "id2")).map(col).toSeq
     val cross = repPairs
       .join(members.select(col("rep").as("id1"), col("id").as("_m1")), "id1")
       .join(members.select(col("rep").as("id2"), col("id").as("_m2")), "id2")
       .select((least(col("_m1"), col("_m2")).as("id1") +:
                greatest(col("_m1"), col("_m2")).as("id2") +: extras): _*)
-    val grouped = members.join(cliqueReps, Seq("rep"), "left_semi")
-    val cliques = grouped.select(col("rep"), col("id").as("_a"))
-      .join(grouped.select(col("rep"), col("id").as("_b")), "rep")
+    val signed = members.where(col("_sig"))
+    val cliques = signed.select(col("rep"), col("id").as("_a"))
+      .join(signed.select(col("rep"), col("id").as("_b")), "rep")
       .where(col("_a") < col("_b"))
       .select((col("_a").as("id1") +: col("_b").as("id2") +: cliqueCols): _*)
     cross.unionByName(cliques)
@@ -359,6 +381,19 @@ object Candidates {
     * buckets' statistics, observed when the pairs' plan runs). Lazy; it
     * persists nothing.
     *
+    * A qualifying pair meets in every band whose chunks differ by at most
+    * `subRadius` bits — as two index rows, or twice as a probe, once from
+    * each side. Two forms make the pairs distinct:
+    *   - `listing = false`: a `distinct` exchange after the pass;
+    *   - `listing = true`: by construction — a bucket keeps a pair only
+    *     when its band (`_k >>> width`) is the LOWEST band whose chunks
+    *     differ by at most `subRadius` bits (`probeBucket` holds both full
+    *     hashes), and a probe match only from the probe whose chunk in
+    *     that band is the smaller (the two probes of a pair differ there;
+    *     two index rows share it). It needs every bucket
+    *     (`dfCap = Int.MaxValue`): a dropped hot bucket could be the lowest
+    *     band, and the pair would be lost.
+    *
     * `dfCap` guards the quadratic: a bucket costs its index rows times its
     * probe rows, and a band value shared by more than `dfCap` hashes is a
     * degenerate hash region that carries no discriminative signal
@@ -376,9 +411,11 @@ object Candidates {
   private[graft] def multiIndexHammingPairsIn(
       df: DataFrame, idCol: String, hashCol: String,
       bands: Int, subRadius: Int, radius: Int,
-      dfCap: Int): (DataFrame, BucketStats) = {
+      dfCap: Int, listing: Boolean = false): (DataFrame, BucketStats) = {
     require(bands * (subRadius + 1) - 1 >= radius,
       s"multi-index guarantee ${bands * (subRadius + 1) - 1} below radius $radius")
+    require(!listing || (dfCap == Int.MaxValue && bands > 1),
+      "the listing form needs every bucket (dfCap = Int.MaxValue) and ≥ 2 bands")
     val width = 64 / bands
     // position 0 is mask 0 (Keys.flipMasks): the index row
     val flips = array(Keys.flipMasks(width, subRadius).map(m => col("_v").bitwiseXOR(lit(m))): _*)
@@ -392,33 +429,43 @@ object Candidates {
     val found = StructType(Seq(StructField("_a", t), StructField("_b", t),
       StructField("hamming_d", IntegerType, nullable = false),
       StructField("_hot", LongType, nullable = false)))
+    // band b's chunk of a hash, as Keys.hammingBands cuts it
+    val mask = (1L << width) - 1
+    def chunk(h: Long, b: Int): Long = (h >>> (b * width)) & mask
     // index rows sort first in their bucket, so the pass holds them before
     // the first probe row arrives
     val verified = rows.groupBy(col("_k"))
       .as(Encoders.row(rows.select("_k").schema), Encoders.row(rows.schema))
-      .flatMapSortedGroups(col("_ix").desc)((_, it) =>
-        probeBucket(it, radius, dfCap))(Encoders.row(found))
+      .flatMapSortedGroups(col("_ix").desc) { (k, it) =>
+        val band = (k.getLong(0) >>> width).toInt
+        def lowest(x: Long) =
+          (0 until bands).indexWhere(b => java.lang.Long.bitCount(chunk(x, b)) <= subRadius)
+        probeBucket(it, radius, dfCap,
+          if (listing) (h, ix) => lowest(h ^ ix) == band && chunk(h, band) <= chunk(ix, band)
+          else (_, _) => true)
+      }(Encoders.row(found))
     val stats = new BucketStats
     // least/greatest, NOT an ordered filter: a qualifying pair must survive
     // if EITHER side's band bucket is cold (when the smaller id sits in hot
     // buckets for every qualifying band, the larger id's probe into the
     // smaller id's cold bucket is the pair's only surviving orientation);
-    // distinct dedups the pairs found in several buckets or orientations
+    // without the listing rule, distinct dedups the pairs found in several
+    // buckets or orientations
     val pairs = stats.observe(verified, col("_hot") > 0, col("_hot"))
       .where(col("_hot") === 0)
       .select(least(col("_a"), col("_b")).as("id1"), greatest(col("_a"), col("_b")).as("id2"),
               col("hamming_d"))
-      .distinct()
-    (pairs, stats)
+    (if (listing) pairs else pairs.distinct(), stats)
   }
 
   /** `multiIndexHammingPairsIn`'s pass over one band bucket, rows (_k, _ix,
     * _id, _h) with the index rows first. Emits (a, b, d, 0) for every probe
-    * row a within `radius` of an index row b with another id — each
-    * index × index pair once — or, for a bucket of more than `dfCap` index
-    * rows, only the marker (null, null, 0, index rows). Holds at most
-    * min(index rows, dfCap) rows. */
-  private def probeBucket(rows: Iterator[Row], radius: Int, dfCap: Int): Iterator[Row] = {
+    * row a within `radius` of an index row b with another id whose hashes
+    * (a's, b's) pass `keep` — each index × index pair once — or, for a
+    * bucket of more than `dfCap` index rows, only the marker (null, null,
+    * 0, index rows). Holds at most min(index rows, dfCap) rows. */
+  private def probeBucket(rows: Iterator[Row], radius: Int, dfCap: Int,
+                          keep: (Long, Long) => Boolean): Iterator[Row] = {
     val it = rows.buffered
     val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
     var hs = new Array[Long](16)
@@ -438,7 +485,8 @@ object Candidates {
       def near(id: Any, h: Long, upTo: Int): Iterator[Row] =
         Iterator.range(0, upTo).flatMap { j =>
           val d = java.lang.Long.bitCount(h ^ hs(j))
-          if (d <= radius && ids(j) != id) Some(Row(id, ids(j), d, 0L)) else None
+          if (d <= radius && ids(j) != id && keep(h, hs(j))) Some(Row(id, ids(j), d, 0L))
+          else None
         }
       Iterator.range(0, ids.length).flatMap(i => near(ids(i), hs(i), i)) ++
         it.flatMap(r => near(r.get(2), r.getLong(3), ids.length))

@@ -109,10 +109,10 @@ object DocOps {
     * ~1e-8). */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       cfg: NearDupConfig): DataFrame = CacheScope.deferred { scope =>
-    val (repPairs, members, shingledReps, _) =
+    val (repPairs, members, _) =
       Candidates.captionLshPartsIn(docs, idCol, textCol, cfg,
         pairComplete = true)(scope)
-    Candidates.expandRepPairs(repPairs, members, shingledReps)
+    Candidates.expandRepPairs(repPairs, members)
       .select(col("id1").as("doc1"), col("id2").as("doc2"))
   }
 
@@ -128,11 +128,10 @@ object DocOps {
     * Output (doc1, doc2). */
   def minhashLshEdges(docs: DataFrame, idCol: String, textCol: String,
                       cfg: NearDupConfig): DataFrame = CacheScope.deferred { scope =>
-    val (repPairs, members, shingledReps, _) =
+    val (repPairs, members, _) =
       Candidates.captionLshPartsIn(docs, idCol, textCol, cfg,
         pairComplete = true)(scope)
-    val stars = members.join(shingledReps, Seq("rep"), "left_semi")
-      .where(col("id") =!= col("rep"))
+    val stars = members.where(col("_sig") && col("id") =!= col("rep"))
       .select(col("rep").as("doc1"), col("id").as("doc2"))
     repPairs.select(col("id1").as("doc1"), col("id2").as("doc2"))
       .unionByName(stars)
@@ -173,31 +172,33 @@ object DocOps {
     // collapse identical normalized texts to one representative (skew guard,
     // same as the LSH path)
     val repW = Window.partitionBy(col("_nc"))
-    // ONE cached frame for the rep-collapse chain: (doc_id, _rep, _sim), the
-    // signature computed for reps with ≥1 token only (null otherwise).
-    // `members` and `reps` are projections of it, so the operator's one
-    // barrier builds one cache before the Hamming buckets, member expansion
-    // and cliques read it (see persistEager). The `when` guard, not a
-    // filter, keeps the persisted plan to one UDF call a rep; the rep
-    // filter applies to the persisted frame.
+    // ONE cached frame for the rep-collapse chain: (doc_id, _rep, _sim,
+    // _sig), the signature computed for reps with ≥1 token only (null
+    // otherwise), `_sig` (≥1 token) for every row. `members` and `reps` are
+    // projections of it, so the operator's one barrier builds one cache
+    // before the Hamming buckets, member expansion and cliques read it (see
+    // persistEager). The `when` guard, not a filter, keeps the persisted
+    // plan to one UDF call a rep; the rep filter applies to the persisted
+    // frame.
     val toks = Keys.tokens(col("_nc"))
     val parts = scope.persistEager(base.withColumn("_rep", min("doc_id").over(repW))
       .select(col("doc_id"), col("_rep"),
               when(col("doc_id") === col("_rep") && size(toks) > 0,
-                   Keys.simhashMd5Udf(toks)).as("_sim")))
-    val members = parts.select(col("doc_id").as("id"), col("_rep").as("rep"))
+                   Keys.simhashMd5Udf(toks)).as("_sim"),
+              (size(toks) > 0).as("_sig")))
+    val members = parts.select(col("doc_id").as("id"), col("_rep").as("rep"), col("_sig"))
     val reps = parts.where(col("_sim").isNotNull).select(col("doc_id"), col("_sim"))
     // dfCap disabled: this operator's contract is EXACT (every pair within
     // the radius, SQL-oracle-checked bit-for-bit), unlike the phash
-    // candidate source where hot degenerate buckets are droppable
+    // candidate source where hot degenerate buckets are droppable; the
+    // listing form emits each rep pair once, with no distinct exchange
     val (repPairs, _) = Candidates.multiIndexHammingPairsIn(
       reps, "doc_id", "_sim",
       cfg.simhashBands, cfg.simhashSubRadius, cfg.simhashRadius,
-      dfCap = Int.MaxValue)
+      dfCap = Int.MaxValue, listing = true)
     // member expansion: cross pairs inherit the rep distance (identical
     // text ⇒ identical signature); identical-text groups pair at distance 0
-    Candidates.expandRepPairs(repPairs, members,
-        reps.select(col("doc_id").as("rep")), Seq(lit(0).as("hamming_d")))
+    Candidates.expandRepPairs(repPairs, members, Seq(lit(0).as("hamming_d")))
       .select(col("id1").as("doc1"), col("id2").as("doc2"), col("hamming_d"))
   }
 

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -233,56 +234,72 @@ object HashCache {
     * removes every staging directory it finds.
     * Returns Unit: the engine derives its working hash table from
     * hits ∪ fresh directly (see Dedup.runCheckpointed). An empty `fresh` is
-    * a no-op. */
+    * a no-op.
+    *
+    * `fresh` is read twice — by the scan for the touched partitions and by
+    * the write — and is not persisted here: callers persist and count it
+    * first (Dedup.runCheckpointed does), so both reads see the same rows,
+    * `current_timestamp()` values included, and neither recomputes them.
+    * Three jobs: the scan, the window's exchange, the write. */
   def merge(spark: SparkSession, root: String, fresh: DataFrame): Unit = {
     import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
     val freshP = fresh.withColumn("_p", partOf(col("image_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // touched partitions (≤ NumParts values — driver-safe) and the newest
-      // fresh timestamp in one aggregate
-      val stats = freshP.agg(collect_set("_p"), max("updated_at")).first()
-      val touched = stats.getSeq[Int](0).sorted
-      if (touched.isEmpty) return // nothing fresh: no horizon move, no commits
-      val freshMax = stats.getTimestamp(1)
-      require(freshMax != null, "fresh rows must carry updated_at")
-      val horizon = readHorizon(root) match {
-        case Some(h) if h.after(freshMax) => h
-        case _ => freshMax
-      }
-      val unioned = TableIO.readLatest(spark, partRoots(root, touched)) match {
-        case Some(existing) =>
-          existing.withColumn("_p", partOf(col("image_id"))).unionByName(freshP)
-        case None => freshP
-      }
-      val w = Window.partitionBy("image_id")
-        .orderBy(col("updated_at").desc, col("hash_value"))
-      val live = unioned
-        .withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1).drop("_rn")
-        .where(col("updated_at") >=
-          lit(horizon).cast("timestamp") - expr(s"INTERVAL $TtlDays DAYS"))
-      val staging = Paths.get(root, StagingPrefix + UUID.randomUUID())
-      val obs = Observation()
-      val perPart = touched.map(p => count(when(col("_p") === p, 1)).as(s"p$p"))
-      live.observe(obs, perPart.head, perPart.tail: _*)
-        .write.partitionBy("_p").parquet(staging.toString)
-      val counts = obs.get
-      mergeStep("staged")
-      val schema = live.drop("_p").schema
-      touched.foreach { p =>
-        TableIO.adopt(staging.resolve(s"_p=$p"), partRoot(root, p), "hash_cache",
-          counts(s"p$p").asInstanceOf[Long], schema)
-        mergeStep(s"adopted:$p")
-      }
-      writeHorizon(root, horizon)
-      // this merge's staging directory and any an interrupted merge left
-      val s = Files.list(Paths.get(root))
-      try s.filter(_.getFileName.toString.startsWith(StagingPrefix))
-        .forEach(d => TableIO.deleteRecursively(d))
-      finally s.close()
-    } finally freshP.unpersist()
+    // touched partitions and the newest fresh timestamp in ONE job: a fold
+    // per task over (partition, updated_at in microseconds, exact), its one
+    // row per task collected — (partition bit set, max micros); NumParts
+    // ≤ 64, so one long holds the bit set, and it is 0 for a task with no row
+    val folds = freshP.select(col("_p"), unix_micros(col("updated_at")))
+      .as[(Int, java.lang.Long)]
+      .mapPartitions { rows =>
+        var (bits, newest) = (0L, Long.MinValue)
+        rows.foreach { case (p, us) =>
+          require(us != null, "fresh rows must carry updated_at")
+          bits |= 1L << p; newest = math.max(newest, us)
+        }
+        Iterator((bits, newest))
+      }.collect().filter(_._1 != 0L)
+    if (folds.isEmpty) return // nothing fresh: no horizon move, no commits
+    val bits = folds.map(_._1).reduce(_ | _)
+    val touched = (0 until NumParts).filter(p => (bits >>> p & 1L) == 1L)
+    val freshMax = DateTimeUtils.toJavaTimestamp(folds.map(_._2).max)
+    val horizon = readHorizon(root) match {
+      case Some(h) if h.after(freshMax) => h
+      case _ => freshMax
+    }
+    val unioned = TableIO.readLatest(spark, partRoots(root, touched)) match {
+      case Some(existing) =>
+        existing.withColumn("_p", partOf(col("image_id"))).unionByName(freshP)
+      case None => freshP
+    }
+    val w = Window.partitionBy("image_id")
+      .orderBy(col("updated_at").desc, col("hash_value"))
+    val live = unioned
+      .withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1).drop("_rn")
+      .where(col("updated_at") >=
+        lit(horizon).cast("timestamp") - expr(s"INTERVAL $TtlDays DAYS"))
+    val staging = Paths.get(root, StagingPrefix + UUID.randomUUID())
+    val obs = Observation()
+    val perPart = touched.map(p => count(when(col("_p") === p, 1)).as(s"p$p"))
+    live.observe(obs, perPart.head, perPart.tail: _*)
+      .write.partitionBy("_p").parquet(staging.toString)
+    val counts = obs.get
+    mergeStep("staged")
+    val schema = live.drop("_p").schema
+    touched.foreach { p =>
+      TableIO.adopt(staging.resolve(s"_p=$p"), partRoot(root, p), "hash_cache",
+        counts(s"p$p").asInstanceOf[Long], schema)
+      mergeStep(s"adopted:$p")
+    }
+    writeHorizon(root, horizon)
+    // this merge's staging directory and any an interrupted merge left
+    val s = Files.list(Paths.get(root))
+    try s.filter(_.getFileName.toString.startsWith(StagingPrefix))
+      .forEach(d => TableIO.deleteRecursively(d))
+    finally s.close()
   }
+
 
   /** Hashes for `ids` (image_id) resolved cache-first: (cached hits,
     * miss ids). Caller computes misses and `merge`s them back.

@@ -175,6 +175,30 @@ class CandidatesSpec extends SparkSpec {
       s"orientation-dependent pair lost: $pairs")
   }
 
+  test("multi-index Hamming listing form: every pair within the radius, once") {
+    // 60 random hashes and 12 variants of each at 0..9 flipped bits (the
+    // 0-flip variants are identical copies): 780 hashes
+    val rng = new scala.util.Random(11L)
+    val hashes = (0 until 60).flatMap { f =>
+      val base = rng.nextLong()
+      base +: (0 until 12).map { v =>
+        rng.shuffle((0 until 64).toList).take(v % 10).foldLeft(base)((h, b) => h ^ (1L << b))
+      }
+    }.zipWithIndex.map { case (h, i) => (i.toLong, h) }
+    val brute = for ((a, ha) <- hashes; (b, hb) <- hashes if a < b;
+                     d = java.lang.Long.bitCount(ha ^ hb) if d <= 7) yield (a, b, d)
+    val (pairs, _) = Candidates.sealObserved(_ => Candidates.multiIndexHammingPairsIn(
+      hashes.toDF("id", "h"), "id", "h", bands = 4, subRadius = 1, radius = 7,
+      dfCap = Int.MaxValue, listing = true))
+    val got = pairs.as[(Long, Long, Int)].collect().toSeq
+    assert(brute.size > 1000 && brute.exists(_._3 == 0), "the fixture holds many pairs, copies too")
+    assert(got.size == got.distinct.size, s"${got.size - got.distinct.size} duplicate pairs")
+    assert(got.toSet == brute.toSet)
+    // the listing form needs every bucket
+    intercept[IllegalArgumentException](Candidates.multiIndexHammingPairsIn(
+      hashes.toDF("id", "h"), "id", "h", 4, 1, 7, dfCap = 256, listing = true))
+  }
+
   private def saltRow(metrics: org.apache.spark.sql.DataFrame) =
     metrics.as[(Long, Long)].collect().toSeq
 
@@ -271,7 +295,7 @@ class CandidatesSpec extends SparkSpec {
     assert(edges.select("kind").distinct().as[String].collect().toSeq == Seq("caption_lsh"))
     // the same components as the verified rep pairs ∪ member stars
     val Seq(repPairs, stars) = CacheScope.sealMany { scope =>
-      val (rp, members, _, _) = Candidates.captionLshPartsIn(df, "id", "caption", cfg)(scope)
+      val (rp, members, _) = Candidates.captionLshPartsIn(df, "id", "caption", cfg)(scope)
       Seq(rp, members.where(col("id") =!= col("rep"))
         .select(col("rep").as("id1"), col("id").as("id2")))
     }

@@ -101,6 +101,18 @@ class DedupPipelineSpec extends SparkSpec {
     assert(actions.count() == corpus.count())
   }
 
+  test("every job of a Dedup.run call carries its caller's job group") {
+    val sc = spark.sparkContext
+    for (group <- Seq("caller-1", "caller-2")) {
+      val groups = JobKit.groupsIn(spark) {
+        sc.setJobGroup(group, s"$group: dedup", interruptOnCancel = false)
+        try Dedup.run(corpus.toDF(), DedupConfig()).collect() finally sc.clearJobGroup()
+      }
+      assert(groups.nonEmpty && groups.forall(_ == group),
+        s"$group's call ran jobs under ${groups.distinct}")
+    }
+  }
+
   test("the engine leaves the caller's job description as it found it") {
     val sc = spark.sparkContext
     sc.setJobDescription("caller: nightly dedup")

@@ -178,8 +178,17 @@ class HashCacheMergeSpec extends SparkSpec {
     val merge16 = jobsIn(HashCache.merge(spark, c16, frame(ids.map(id => id -> s"n_$id"), later)))
     val merge1 = jobsIn(HashCache.merge(spark, c1, frame(onePart.map(id => id -> s"n_$id"), later)))
     assert(merge16 == merge1, s"merge touching 16 partitions ($merge16 jobs) vs one ($merge1 jobs)")
-    assert(merge16 < HashCache.NumParts)
     assert(cacheRows(c16).forall(_._2.startsWith("n_")))
+    assert(merge16 < HashCache.NumParts)
+    // the touched-partition scan, the window's exchange, the write
+    assert(merge16 == 3, s"merge ran $merge16 jobs")
+    // and so with `fresh` persisted and counted first, as its callers do
+    val fresh = frame(ids.map(id => id -> s"p_$id"), new java.sql.Timestamp(now.getTime + 2000))
+      .persist()
+    fresh.count()
+    assert(jobsIn(HashCache.merge(spark, c16, fresh)) == 3)
+    assert(cacheRows(c16).forall(_._2.startsWith("p_")))
+    fresh.unpersist()
   }
 
   test("a cache whose snapshots lack the schema record looks up and merges; merged partitions gain it") {

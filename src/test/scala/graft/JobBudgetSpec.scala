@@ -8,14 +8,14 @@ import graft.ops.DocOps
 import graft.schema.{DedupConfig, NearDupConfig}
 import graft.util.{CacheScope, Seal}
 
-/** The job budget of each flagship candidate source and each `DocOps` pair
-  * listing: on a small fixture with a salted caption bucket, every call
-  * submits a pinned number of Spark jobs, and the same number on a second
-  * call (a lazily persisted frame read by two branches of one seal races
-  * two cache builds, which shows as an extra job on some calls only). A
-  * job costs 60-100 ms of fixed overhead on a 4-core box, so an extra
-  * barrier — e.g. an eager persist that materializes with `count()` — is a
-  * regression. */
+/** The job budget of each flagship candidate source, each `DocOps` pair
+  * listing and a whole `Dedup.run` call: on a small fixture with a salted
+  * caption bucket, every call submits a pinned number of Spark jobs, and
+  * the same number on a second call (a lazily persisted frame read by two
+  * branches of one seal races two cache builds, which shows as an extra
+  * job on some calls only). A job costs 60-100 ms of fixed overhead on a
+  * 4-core box, so an extra barrier — e.g. an eager persist that
+  * materializes with `count()` — is a regression. */
 class JobBudgetSpec extends SparkSpec {
 
   private lazy val features = {
@@ -32,7 +32,7 @@ class JobBudgetSpec extends SparkSpec {
       "phash_hamming" -> (() => Candidates.phashHammingEdges(features, "iid", "phash", near): Unit),
       "containment" -> (() => Candidates.containmentEdges(features, "iid", "caption", near): Unit))
     assertBudget(sources,
-      Seq("exact" -> 3, "caption_lsh" -> 5, "phash_hamming" -> 4, "containment" -> 8))
+      Seq("exact" -> 2, "caption_lsh" -> 5, "phash_hamming" -> 4, "containment" -> 8))
   }
 
   test("each DocOps pair listing submits a fixed number of jobs, every call") {
@@ -45,8 +45,16 @@ class JobBudgetSpec extends SparkSpec {
       "minhashLshPairs" -> listing(DocOps.minhashLshPairs(features, "iid", "caption", docLsh)),
       "containmentPairs" -> listing(DocOps.containmentPairs(features, "iid", "caption", 3)),
       "jaccardPairs" -> listing(DocOps.jaccardPairs(features, "iid", "caption", 3, 80)))
-    assertBudget(listings, Seq("simhashPairs" -> 10, "minhashLshPairs" -> 10,
+    assertBudget(listings, Seq("simhashPairs" -> 7, "minhashLshPairs" -> 8,
                                "containmentPairs" -> 8, "jaccardPairs" -> 9))
+  }
+
+  test("a whole Dedup.run call submits a fixed number of jobs, every call") {
+    // the candidate sources' threads carry the caller's job group, so the
+    // count covers every job of the call
+    val corpus = Corpus.generate(spark, nClusters = 30, skewCopies = 40).toDF()
+    assertBudget(Seq("Dedup.run" -> (() => Dedup.run(corpus).collect(): Unit)),
+      Seq("Dedup.run" -> 30))
   }
 
   /** Each call's jobs, counted on two calls, equal its budget both times. */

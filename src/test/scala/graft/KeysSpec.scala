@@ -108,6 +108,28 @@ class KeysSpec extends SparkSpec {
     assert(r.getInt(0) == 2 && r.getInt(1) == 4)
   }
 
+  test("hasShingles (the rep-collapse `_sig` flag) holds exactly when shingleLshUdf shingles") {
+    // separators the normalization collapses (spaces, tabs, newlines,
+    // vertical tab) and characters it keeps inside a token (NBSP, control
+    // characters), around 0..k+1 tokens
+    val seps = Seq(" ", "  ", "\t", " \t\n ", "\u000b", "\u00a0", "\u0001", "\u001c")
+    val texts: Seq[String] = Seq(null, "", " ", "   ", "\t", "\t \n\r ", "\u00a0", "\u0001",
+      "\u0001 \u0002 \u0003", " a b c ", "A  B\r\nC") ++
+      (for (n <- 0 to 5; sep <- seps; pad <- Seq("", " ", "\t"))
+        yield pad + (1 to n).map(i => s"w$i").mkString(sep) + pad)
+    for (k <- 1 to 4) {
+      val udf = Keys.shingleLshUdf(k, 16, 4)
+      val got = texts.toDF("t").select(col("t"), Keys.normCaption(col("t")).as("_nc"))
+        .select(col("t"), coalesce(graft.candidates.Candidates.hasShingles(col("_nc"), k),
+                                   lit(false)),
+                size(udf(col("_nc"))("_1")) > 0)
+        .as[(String, Boolean, Boolean)].collect()
+      val wrong = got.filter { case (_, sig, shingled) => sig != shingled }
+      assert(wrong.isEmpty, s"k $k: flag and UDF disagree on ${wrong.map(_._1).toSeq}")
+      assert(got.exists(_._2) && got.exists(!_._2), s"k $k: both outcomes are covered")
+    }
+  }
+
   test("shingleLshUdf: band matches follow the LSH S-curve, 16·J⁴ at J 0.85 and 0.6") {
     // per pair: a shared run of random tokens and a private tail on each
     // side, so the 3-shingle Jaccard is exact: shared / (shared + 2·tail)

@@ -84,7 +84,7 @@ class OpsSpec extends SparkSpec {
     val planted = (0 until 80).map(i => (i.toLong, s"$base v$i")).toDF("id", "caption")
     val capped = NearDupConfig(maxBucketSize = 16)
     val (lshPairs, lshMetrics) = Candidates.sealObserved { scope =>
-      val (rp, _, _, stats) = Candidates.captionLshPartsIn(planted, "id", "caption", capped,
+      val (rp, _, stats) = Candidates.captionLshPartsIn(planted, "id", "caption", capped,
         pairComplete = true)(scope)
       (rp, stats)
     }
@@ -99,7 +99,13 @@ class OpsSpec extends SparkSpec {
     assertDistinct("containmentPairs", contained)
     assertDistinct("containmentEdges",
       Candidates.containmentEdges(nested, "id", "text", NearDupConfig()).select("id1", "id2"))
-    // multi-index Hamming with the cap disabled, over real SimHash signatures
+    // exact edges: ten rows on each of three keys
+    val keyed = (0 until 30).map(i => (i.toLong, s"k${i % 3}")).toDF("id", "key")
+    val exact = Candidates.exactEdges(keyed, "id", "key").select("id1", "id2")
+    assert(exact.count() == 27, "a star per key")
+    assertDistinct("exactEdges", exact)
+    // multi-index Hamming with the cap disabled, in the listing form the
+    // SimHash listing uses (no distinct), over real SimHash signatures
     assume(haveTestdata)
     import graft.keys.Keys
     val sigs = docs
@@ -108,7 +114,7 @@ class OpsSpec extends SparkSpec {
       .select(col("doc_id"), Keys.simhashMd5Udf(col("_t")).as("_sim"))
     val hamming = Seal(Candidates.multiIndexHammingPairsIn(sigs,
       "doc_id", "_sim", cfg.simhashBands, cfg.simhashSubRadius,
-      cfg.simhashRadius, dfCap = Int.MaxValue)._1)
+      cfg.simhashRadius, dfCap = Int.MaxValue, listing = true)._1)
     assertDistinct("multiIndexHammingPairsIn", hamming)
     // and the SimHash listing built on it
     assertDistinct("simhashPairs",

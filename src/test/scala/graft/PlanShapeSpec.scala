@@ -64,7 +64,7 @@ class PlanShapeSpec extends SparkSpec {
       graft.keys.Keys.matchKey(cfg.key, col("bytes"), col("caption"), col("mtime")))
     val scope = new graft.util.CacheScope
     try {
-      val (lshPairs, _, _, _) = graft.candidates.Candidates
+      val (lshPairs, _, _) = graft.candidates.Candidates
         .captionLshPartsIn(corpus, "image_id", "caption", cfg.near)(scope)
       val contain = graft.candidates.Candidates
         .containmentEdgesIn(corpus, "image_id", "caption", cfg.near)(scope)
@@ -83,11 +83,11 @@ class PlanShapeSpec extends SparkSpec {
     val cfg = graft.schema.NearDupConfig(jaccardThreshold = 0.8)
     val scope = new graft.util.CacheScope
     try {
-      val (repPairs, members, shingledReps, _) = graft.candidates.Candidates
+      val (repPairs, members, _) = graft.candidates.Candidates
         .captionLshPartsIn(docs, "doc_id", "text", cfg, pairComplete = true)(scope)
       Seq(
         graft.ops.DocOps.simhashPairsIn(docs, "doc_id", "text", cfg)(scope),
-        graft.candidates.Candidates.expandRepPairs(repPairs, members, shingledReps),
+        graft.candidates.Candidates.expandRepPairs(repPairs, members),
         graft.candidates.Candidates.containmentEdgesIn(docs, "doc_id", "text", cfg)(scope)
       ).foreach { df =>
         val plan = df.queryExecution.executedPlan.toString
