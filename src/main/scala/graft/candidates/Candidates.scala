@@ -383,16 +383,19 @@ object Candidates {
     *
     * A qualifying pair meets in every band whose chunks differ by at most
     * `subRadius` bits — as two index rows, or twice as a probe, once from
-    * each side. Two forms make the pairs distinct:
-    *   - `listing = false`: a `distinct` exchange after the pass;
-    *   - `listing = true`: by construction — a bucket keeps a pair only
-    *     when its band (`_k >>> width`) is the LOWEST band whose chunks
-    *     differ by at most `subRadius` bits (`probeBucket` holds both full
-    *     hashes), and a probe match only from the probe whose chunk in
-    *     that band is the smaller (the two probes of a pair differ there;
-    *     two index rows share it). It needs every bucket
-    *     (`dfCap = Int.MaxValue`): a dropped hot bucket could be the lowest
-    *     band, and the pair would be lost.
+    * each side. The cap picks how the pairs are made distinct:
+    *   - `dfCap = Int.MaxValue` (every bucket kept, the listing form): by
+    *     construction — a bucket keeps a pair only when its band
+    *     (`_k >>> width`) is the LOWEST band whose chunks differ by at most
+    *     `subRadius` bits (`probeBucket` holds both full hashes), and a
+    *     probe match only from the probe whose chunk in that band is the
+    *     smaller (the two probes of a pair differ there; two index rows
+    *     share it). With one band every index row sits in bucket 0
+    *     (`Keys.hammingBands`' 64-bit mask is 0), so every pair is an
+    *     index × index pair there, once;
+    *   - a finite cap: a `distinct` exchange after the pass — a dropped hot
+    *     bucket could be a pair's lowest band, so the rule above would lose
+    *     the pair.
     *
     * `dfCap` guards the quadratic: a bucket costs its index rows times its
     * probe rows, and a band value shared by more than `dfCap` hashes is a
@@ -411,11 +414,10 @@ object Candidates {
   private[graft] def multiIndexHammingPairsIn(
       df: DataFrame, idCol: String, hashCol: String,
       bands: Int, subRadius: Int, radius: Int,
-      dfCap: Int, listing: Boolean = false): (DataFrame, BucketStats) = {
+      dfCap: Int): (DataFrame, BucketStats) = {
     require(bands * (subRadius + 1) - 1 >= radius,
       s"multi-index guarantee ${bands * (subRadius + 1) - 1} below radius $radius")
-    require(!listing || (dfCap == Int.MaxValue && bands > 1),
-      "the listing form needs every bucket (dfCap = Int.MaxValue) and ≥ 2 bands")
+    val listing = dfCap == Int.MaxValue
     val width = 64 / bands
     // position 0 is mask 0 (Keys.flipMasks): the index row
     val flips = array(Keys.flipMasks(width, subRadius).map(m => col("_v").bitwiseXOR(lit(m))): _*)

@@ -190,12 +190,13 @@ object DocOps {
     val reps = parts.where(col("_sim").isNotNull).select(col("doc_id"), col("_sim"))
     // dfCap disabled: this operator's contract is EXACT (every pair within
     // the radius, SQL-oracle-checked bit-for-bit), unlike the phash
-    // candidate source where hot degenerate buckets are droppable; the
-    // listing form emits each rep pair once, with no distinct exchange
+    // candidate source where hot degenerate buckets are droppable; with
+    // every bucket kept, each rep pair is emitted once, with no distinct
+    // exchange
     val (repPairs, _) = Candidates.multiIndexHammingPairsIn(
       reps, "doc_id", "_sim",
       cfg.simhashBands, cfg.simhashSubRadius, cfg.simhashRadius,
-      dfCap = Int.MaxValue, listing = true)
+      dfCap = Int.MaxValue)
     // member expansion: cross pairs inherit the rep distance (identical
     // text ⇒ identical signature); identical-text groups pair at distance 0
     Candidates.expandRepPairs(repPairs, members, Seq(lit(0).as("hamming_d")))

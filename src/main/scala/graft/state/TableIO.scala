@@ -248,21 +248,26 @@ object HashCache {
     // touched partitions and the newest fresh timestamp in ONE job: a fold
     // per task over (partition, updated_at in microseconds, exact), its one
     // row per task collected — (partition bit set, max micros); NumParts
-    // ≤ 64, so one long holds the bit set, and it is 0 for a task with no row
+    // ≤ 64, so one long holds the bit set, and it is 0 for a task with no
+    // row. A null updated_at touches its partition but no maximum (max()
+    // semantics; the TTL filter drops the row); Long.MinValue, below every
+    // valid timestamp, stands for "no timestamp seen"
     val folds = freshP.select(col("_p"), unix_micros(col("updated_at")))
       .as[(Int, java.lang.Long)]
       .mapPartitions { rows =>
         var (bits, newest) = (0L, Long.MinValue)
         rows.foreach { case (p, us) =>
-          require(us != null, "fresh rows must carry updated_at")
-          bits |= 1L << p; newest = math.max(newest, us)
+          bits |= 1L << p
+          if (us != null) newest = math.max(newest, us)
         }
         Iterator((bits, newest))
       }.collect().filter(_._1 != 0L)
     if (folds.isEmpty) return // nothing fresh: no horizon move, no commits
     val bits = folds.map(_._1).reduce(_ | _)
     val touched = (0 until NumParts).filter(p => (bits >>> p & 1L) == 1L)
-    val freshMax = DateTimeUtils.toJavaTimestamp(folds.map(_._2).max)
+    val newest = folds.map(_._2).max
+    require(newest != Long.MinValue, "fresh rows must carry updated_at")
+    val freshMax = DateTimeUtils.toJavaTimestamp(newest)
     val horizon = readHorizon(root) match {
       case Some(h) if h.after(freshMax) => h
       case _ => freshMax

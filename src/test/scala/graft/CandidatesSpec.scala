@@ -175,28 +175,45 @@ class CandidatesSpec extends SparkSpec {
       s"orientation-dependent pair lost: $pairs")
   }
 
-  test("multi-index Hamming listing form: every pair within the radius, once") {
-    // 60 random hashes and 12 variants of each at 0..9 flipped bits (the
-    // 0-flip variants are identical copies): 780 hashes
-    val rng = new scala.util.Random(11L)
-    val hashes = (0 until 60).flatMap { f =>
+  // `families` random hashes and `variants` copies of each at 0..9 flipped
+  // bits (the 0-flip copies are identical), ids 0..
+  private def hammingFixture(seed: Long, families: Int, variants: Int): Seq[(Long, Long)] = {
+    val rng = new scala.util.Random(seed)
+    (0 until families).flatMap { _ =>
       val base = rng.nextLong()
-      base +: (0 until 12).map { v =>
+      base +: (0 until variants).map { v =>
         rng.shuffle((0 until 64).toList).take(v % 10).foldLeft(base)((h, b) => h ^ (1L << b))
       }
     }.zipWithIndex.map { case (h, i) => (i.toLong, h) }
+  }
+
+  // the listing form (dfCap = Int.MaxValue) against brute force: every pair
+  // within the radius, none twice
+  private def assertHammingListing(hashes: Seq[(Long, Long)], bands: Int,
+                                   subRadius: Int, radius: Int, minPairs: Int): Unit = {
     val brute = for ((a, ha) <- hashes; (b, hb) <- hashes if a < b;
-                     d = java.lang.Long.bitCount(ha ^ hb) if d <= 7) yield (a, b, d)
+                     d = java.lang.Long.bitCount(ha ^ hb) if d <= radius) yield (a, b, d)
     val (pairs, _) = Candidates.sealObserved(_ => Candidates.multiIndexHammingPairsIn(
-      hashes.toDF("id", "h"), "id", "h", bands = 4, subRadius = 1, radius = 7,
-      dfCap = Int.MaxValue, listing = true))
+      hashes.toDF("id", "h"), "id", "h", bands, subRadius, radius, dfCap = Int.MaxValue))
     val got = pairs.as[(Long, Long, Int)].collect().toSeq
-    assert(brute.size > 1000 && brute.exists(_._3 == 0), "the fixture holds many pairs, copies too")
+    assert(brute.size >= minPairs && brute.exists(_._3 == 0), "the fixture holds many pairs, copies too")
     assert(got.size == got.distinct.size, s"${got.size - got.distinct.size} duplicate pairs")
     assert(got.toSet == brute.toSet)
-    // the listing form needs every bucket
-    intercept[IllegalArgumentException](Candidates.multiIndexHammingPairsIn(
-      hashes.toDF("id", "h"), "id", "h", 4, 1, 7, dfCap = 256, listing = true))
+  }
+
+  test("multi-index Hamming listing form: every pair within the radius, once") {
+    // 780 hashes, 4 × 16-bit bands with 1-flip probes
+    assertHammingListing(hammingFixture(11L, 60, 12), bands = 4, subRadius = 1,
+      radius = 7, minPairs = 1000)
+  }
+
+  test("multi-index Hamming listing form with ONE band: every pair once") {
+    // one 64-bit band (legal: 64 % 1 == 0, guarantee 1 ≥ radius 1): every
+    // index row shares bucket 0, so each pair meets once, index × index.
+    // 1-flip probes: a 64-bit chunk has 65 masks at subRadius 1 but 43,745
+    // at 3, which ran a 4 GB test heap out of memory
+    assertHammingListing(hammingFixture(13L, 20, 12), bands = 1, subRadius = 1,
+      radius = 1, minPairs = 40)
   }
 
   private def saltRow(metrics: org.apache.spark.sql.DataFrame) =

@@ -104,8 +104,8 @@ class OpsSpec extends SparkSpec {
     val exact = Candidates.exactEdges(keyed, "id", "key").select("id1", "id2")
     assert(exact.count() == 27, "a star per key")
     assertDistinct("exactEdges", exact)
-    // multi-index Hamming with the cap disabled, in the listing form the
-    // SimHash listing uses (no distinct), over real SimHash signatures
+    // multi-index Hamming with the cap disabled — the listing form the
+    // SimHash listing uses (no distinct) — over real SimHash signatures
     assume(haveTestdata)
     import graft.keys.Keys
     val sigs = docs
@@ -114,7 +114,7 @@ class OpsSpec extends SparkSpec {
       .select(col("doc_id"), Keys.simhashMd5Udf(col("_t")).as("_sim"))
     val hamming = Seal(Candidates.multiIndexHammingPairsIn(sigs,
       "doc_id", "_sim", cfg.simhashBands, cfg.simhashSubRadius,
-      cfg.simhashRadius, dfCap = Int.MaxValue, listing = true)._1)
+      cfg.simhashRadius, dfCap = Int.MaxValue)._1)
     assertDistinct("multiIndexHammingPairsIn", hamming)
     // and the SimHash listing built on it
     assertDistinct("simhashPairs",

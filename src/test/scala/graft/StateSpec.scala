@@ -146,4 +146,20 @@ class StateSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m == Map("img1" -> "h1"))
   }
+
+  test("HashCache.merge: a null updated_at row is dropped; an all-null frame fails on the driver") {
+    val root = tmpDir()
+    val t0 = new java.sql.Timestamp(System.currentTimeMillis())
+    HashCache.merge(spark, root,
+      Seq(("img1", "h1", t0), ("img2", "h2", null))
+        .toDF("image_id", "hash_value", "updated_at"))
+    val m = HashCache.readAll(spark, root).get
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(m == Map("img1" -> "h1"), "the TTL filter drops the null-timestamp row")
+    // no timestamp at all: the merge has no horizon to move to
+    intercept[IllegalArgumentException](HashCache.merge(spark, root,
+      Seq(("img3", "h3", null: java.sql.Timestamp))
+        .toDF("image_id", "hash_value", "updated_at")))
+    assert(HashCache.readAll(spark, root).get.count() == 1, "the failed merge committed nothing")
+  }
 }
