@@ -390,9 +390,9 @@ object Candidates {
     *     `subRadius` bits (`probeBucket` holds both full hashes), and a
     *     probe match only from the probe whose chunk in that band is the
     *     smaller (the two probes of a pair differ there; two index rows
-    *     share it). With one band every index row sits in bucket 0
-    *     (`Keys.hammingBands`' 64-bit mask is 0), so every pair is an
-    *     index × index pair there, once;
+    *     share it). With one band the chunk is the whole hash and `_k`
+    *     carries no band bits (Java shifts wrap: `_k >>> 64 == _k`), so
+    *     the band decodes as 0;
     *   - a finite cap: a `distinct` exchange after the pass — a dropped hot
     *     bucket could be a pair's lowest band, so the rule above would lose
     *     the pair.
@@ -432,14 +432,14 @@ object Candidates {
       StructField("hamming_d", IntegerType, nullable = false),
       StructField("_hot", LongType, nullable = false)))
     // band b's chunk of a hash, as Keys.hammingBands cuts it
-    val mask = (1L << width) - 1
+    val mask = Keys.chunkMask(width)
     def chunk(h: Long, b: Int): Long = (h >>> (b * width)) & mask
     // index rows sort first in their bucket, so the pass holds them before
     // the first probe row arrives
     val verified = rows.groupBy(col("_k"))
       .as(Encoders.row(rows.select("_k").schema), Encoders.row(rows.schema))
       .flatMapSortedGroups(col("_ix").desc) { (k, it) =>
-        val band = (k.getLong(0) >>> width).toInt
+        val band = if (bands == 1) 0 else (k.getLong(0) >>> width).toInt
         def lowest(x: Long) =
           (0 until bands).indexWhere(b => java.lang.Long.bitCount(chunk(x, b)) <= subRadius)
         probeBucket(it, radius, dfCap,

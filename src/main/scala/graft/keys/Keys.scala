@@ -3,17 +3,22 @@ package graft.keys
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.schema.{KeyConfig, NearDupConfig}
+import graft.schema.KeyConfig
 
-/** Match-key and signature construction. Everything here is a pure
-  * `Column` expression tree — whole-stage-codegen'd, no UDFs — so the 100 TB
-  * plan keeps hashing/shingling inside the scan stage with zero shuffles.
+/** Match-key and signature construction, all inside the scan stage with
+  * zero shuffles. Content hashes, match keys, normalization, Hamming bands
+  * and Jaccard counts are `Column` expressions; the text signatures
+  * (`shingleLshUdf`, `shingleHashUdf`, `simhashMd5Udf`) are JVM UDFs,
+  * one per signature: Spark evaluates higher-order functions
+  * (transform/aggregate) interpreted, without whole-stage codegen, which
+  * measured ~0.8 ms/doc for a 64-lane MinHash expression against ~µs/doc
+  * for the JIT-compiled loop.
   */
 object Keys {
   val PartialHashBytes: Int = 2 * 1024 * 1024 // reference prefix, hash_manager.py:217
 
   /** Content hash — reference `compute_hash` / `compute_partial_hash`
-    * (/root/reference/duplicate_files_in_folders/hash_manager.py:193-233):
+    * (reference `hash_manager.py:193-233`):
     * sha256 of the whole payload (`fullHash`) or of the first 2 MiB
     * (default). `substring` on binary is codegen'd; pushdown-safe. */
   def contentHash(bytes: Column, fullHash: Boolean): Column =
@@ -59,122 +64,9 @@ object Keys {
         .otherwise(array().cast("array<string>")))
   }
 
-  private val Seed2 = 0x9e3779b97f4a7c15L // golden-ratio odd constant
-
-  /** Per-shingle base hashes: each shingle string is hashed exactly TWICE
-    * (h1, h2); all `lanes` MinHash functions derive from them by cheap
-    * long arithmetic (Kirsch–Mitzenmacher double hashing, here XOR-rotate
-    * so ANSI mode can't overflow) — string hashing is the dominant MinHash
-    * cost and this makes it O(shingles), not O(shingles × lanes).
-    *
-    * IMPORTANT: materialize this column behind an optimizer barrier
-    * (persist) before projecting lanes — Catalyst's project collapsing
-    * inlines the alias into each of its 64 references otherwise, re-hashing
-    * every string per lane. */
-  def shingleHashes(shingleArr: Column): Column =
-    transform(shingleArr, s =>
-      struct(xxhash64(s).as("h1"), xxhash64(lit(Seed2), s).as("h2")))
-
-  /** Lane `i`'s hash of one (h1, h2) pair: h1 XOR rotl(h2, i). Bitwise only
-    * — overflow-free under ANSI; 64 distinct mixers for i in [0, 64). */
-  private def laneMix(h: Column, lane: Int): Column = {
-    val r = lane % 64
-    val rot = if (r == 0) h.getField("h2")
-      else shiftleft(h.getField("h2"), r)
-        .bitwiseOR(shiftrightunsigned(h.getField("h2"), 64 - r))
-    h.getField("h1").bitwiseXOR(rot)
-  }
-
-  /** MinHash signature from pre-hashed shingles: lane i minimizes
-    * laneMix(h, i) over the shingle set — one projection, no shuffle,
-    * partial-agg-free (array_min over transform). Returns array<long>. */
-  def minhashSignature(hashedArr: Column, lanes: Int): Column =
-    array((0 until lanes).map { lane =>
-      array_min(transform(hashedArr, h => laneMix(h, lane)))
-    }: _*)
-
-  /** LSH band hashes from a signature: band j hashes lanes
-    * [j*r, (j+1)*r). Returns array<long> of length `bands`; null-signature
-    * (empty shingles) propagates null band hashes. */
-  def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      xxhash64(lit(b) +: (0 until rowsPerBand).map(r =>
-        element_at(sig, b * rowsPerBand + r + 1)): _*)
-    }: _*)
-
-  /** Fused pre-hashed-shingles→MinHash→LSH band hashes in ONE expression
-    * tree where every lane minimum is referenced exactly once by its band.
-    *
-    * Why not `bandHashes(minhashSignature(...))` over separate columns:
-    * Catalyst's project collapsing inlines a `withColumn` alias into each of
-    * its references, so 16 bands × 4 `element_at`s on the signature column
-    * would duplicate the 64-lane MinHash subtree 64× (≈4096 lambda
-    * expressions) — optimizer and codegen blow up. The fused form is
-    * linear: bands × rowsPerBand lane expressions total. `hashedArr` is a
-    * `shingleHashes` column, materialized behind a persist. */
-  def lshBandHashes(hashedArr: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      xxhash64(lit(b) +: (0 until rowsPerBand).map { r =>
-        array_min(transform(hashedArr, h => laneMix(h, b * rowsPerBand + r)))
-      }: _*)
-    }: _*)
-
-  /** JVM-native MinHash→LSH band hashes — the hot-path implementation used
-    * by the candidate pipeline. The expression form above is kept for
-    * documentation/tests, but Spark evaluates higher-order functions
-    * (transform/aggregate) interpreted — no whole-stage codegen — which
-    * measured ~0.8 ms/doc at 64 lanes; this plain-JVM loop JITs to ~µs/doc.
-    * Same construction (double hashing + XOR-rotate lane mix), FNV-1a 64
-    * string hashing; signatures are engine-internal, never a cross-engine
-    * contract, so hash-family choice is free. */
-  def minhashBandUdf(bands: Int, rowsPerBand: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf { (shingles: Seq[String]) =>
-      val lanes = bands * rowsPerBand
-      val sig = Array.fill(lanes)(Long.MaxValue)
-      shingles.foreach { s =>
-        var h1 = 0xcbf29ce484222325L
-        var h2 = 0x84222325cbf29ce4L
-        var i = 0
-        val n = s.length
-        while (i < n) {
-          val c = s.charAt(i)
-          h1 = (h1 ^ (c & 0xff)) * 0x100000001b3L
-          h1 = (h1 ^ (c >>> 8)) * 0x100000001b3L
-          h2 = (h2 ^ (c >>> 8)) * 0x100000001b3L
-          h2 = (h2 ^ (c & 0xff)) * 0x100000001b3L
-          i += 1
-        }
-        // final avalanche (xxhash-style) so per-lane rotations decorrelate
-        h1 ^= h1 >>> 33; h1 *= 0xff51afd7ed558ccdL; h1 ^= h1 >>> 33
-        h2 ^= h2 >>> 29; h2 *= 0xc4ceb9fe1a85ec53L; h2 ^= h2 >>> 32
-        var lane = 0
-        while (lane < lanes) {
-          val v = h1 ^ java.lang.Long.rotateLeft(h2, lane)
-          if (v < sig(lane)) sig(lane) = v
-          lane += 1
-        }
-      }
-      val out = new Array[Long](bands)
-      var b = 0
-      while (b < bands) {
-        var h = 0xcbf29ce484222325L ^ b.toLong
-        var r = 0
-        while (r < rowsPerBand) {
-          val v = sig(b * rowsPerBand + r)
-          var k = 0
-          while (k < 8) { h = (h ^ ((v >>> (k * 8)) & 0xff)) * 0x100000001b3L; k += 1 }
-          r += 1
-        }
-        out(b) = h
-        b += 1
-      }
-      out
-    }
-
-  // Shared FNV-1a(+avalanche) double hash of one word k-gram, streamed
-  // char-by-char over the window incl. single-space separators — byte-for-
-  // byte the hash minhashBandUdf computes over the materialized k-gram
-  // string, without ever building it.
+  // FNV-1a(+avalanche) double hash of one word k-gram, streamed
+  // char-by-char over the window incl. single-space separators — the hash
+  // of the space-joined k-gram string, without ever building it.
   @inline private def kgramHash(toks: Array[String], start: Int, k: Int): (Long, Long) = {
     var h1 = 0xcbf29ce484222325L
     var h2 = 0x84222325cbf29ce4L
@@ -204,45 +96,56 @@ object Keys {
     (h1, h2)
   }
 
-  @inline private def splitTokens(nc: String): Array[String] =
-    if (nc == null || nc.isEmpty) Array.empty
-    else nc.split(' ').filter(_.nonEmpty)
+  /** The DISTINCT word k-grams of a normalized text, by `kgramHash`'s h1:
+    * calls `each(h1, h2)` once per distinct k-gram and returns their h1s,
+    * both in first-seen order. Texts with < k tokens have none. */
+  @inline private def distinctKgrams(nc: String, k: Int)(each: (Long, Long) => Unit): Array[Long] = {
+    val toks = if (nc == null || nc.isEmpty) Array.empty[String] else nc.split(' ').filter(_.nonEmpty)
+    val m = toks.length - k + 1
+    if (m <= 0) Array.empty[Long]
+    else {
+      val seen = new java.util.HashSet[java.lang.Long](m * 2)
+      val shh = new scala.collection.mutable.ArrayBuilder.ofLong
+      var i = 0
+      while (i < m) {
+        val (h1, h2) = kgramHash(toks, i, k)
+        if (seen.add(h1)) { shh += h1; each(h1, h2) }
+        i += 1
+      }
+      shh.result()
+    }
+  }
 
   /** Fused normalized-text → (distinct shingle hashes, LSH band hashes) in
     * ONE JVM pass — the hot-path replacement for `shingles` (an interpreted
     * higher-order-function expression measured at ~1.3 ms/doc, the single
-    * largest LSH cost) feeding `minhashBandUdf`. Returns a struct of
+    * largest LSH cost). Returns a struct of
     *   `_shh`  array<long>: h1 of each DISTINCT word k-gram, ascending
     *           (the verify stage merge-intersects these — set-identical to
     *           distinct k-gram strings modulo 64-bit collisions),
-    *   `bands` array<long>: LSH band hashes from the (h1, h2) double-hash
-    *           MinHash, same construction as `minhashBandUdf`.
+    *   `bands` array<long>: LSH band hashes. MinHash lane i minimizes
+    *           h1 XOR rotl(h2, i) over the distinct k-grams (Kirsch–
+    *           Mitzenmacher double hashing: two string hashes per k-gram,
+    *           not one per lane), and band b FNV-hashes lanes
+    *           [b·rowsPerBand, (b+1)·rowsPerBand). Signatures are
+    *           engine-internal, never a cross-engine contract, so the hash
+    *           family is free.
     * Texts with < k tokens return empty arrays (no signature — same
     * no-key semantics as before). */
   def shingleLshUdf(k: Int, bands: Int, rowsPerBand: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf { (nc: String) =>
-      val toks = splitTokens(nc)
-      val m = toks.length - k + 1
       val lanes = bands * rowsPerBand
-      if (m <= 0) (Array.empty[Long], Array.empty[Long])
-      else {
-        val sig = Array.fill(lanes)(Long.MaxValue)
-        val seen = new java.util.HashSet[java.lang.Long](m * 2)
-        val shh = new scala.collection.mutable.ArrayBuilder.ofLong
-        var i = 0
-        while (i < m) {
-          val (h1, h2) = kgramHash(toks, i, k)
-          if (seen.add(h1)) {
-            shh += h1
-            var lane = 0
-            while (lane < lanes) {
-              val v = h1 ^ java.lang.Long.rotateLeft(h2, lane)
-              if (v < sig(lane)) sig(lane) = v
-              lane += 1
-            }
-          }
-          i += 1
+      val sig = Array.fill(lanes)(Long.MaxValue)
+      val shh = distinctKgrams(nc, k) { (h1, h2) =>
+        var lane = 0
+        while (lane < lanes) {
+          val v = h1 ^ java.lang.Long.rotateLeft(h2, lane)
+          if (v < sig(lane)) sig(lane) = v
+          lane += 1
         }
+      }
+      if (shh.isEmpty) (shh, Array.empty[Long])
+      else {
         val out = new Array[Long](bands)
         var b = 0
         while (b < bands) {
@@ -257,72 +160,26 @@ object Keys {
           out(b) = h
           b += 1
         }
-        val sorted = shh.result()
-        java.util.Arrays.sort(sorted)
-        (sorted, out)
+        java.util.Arrays.sort(shh)
+        (shh, out)
       }
     }
 
-  /** Distinct word-k-gram hashes of a normalized text (h1 of `kgramHash`) —
-    * the JVM-native replacement for `shingles` where only a blocking/set
-    * identity is needed (containment block keys): joins and document-
-    * frequency counts work identically on the 8-byte hash, and the
-    * substring verify never needs the k-gram strings. */
+  /** Distinct word-k-gram hashes of a normalized text, in first-seen order
+    * — exactly `shingleLshUdf`'s `_shh` before its sort — the JVM-native
+    * replacement for `shingles` where only a blocking/set identity is
+    * needed (containment block keys): joins and document-frequency counts
+    * work identically on the 8-byte hash, and the substring verify never
+    * needs the k-gram strings. */
   def shingleHashUdf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf { (nc: String) =>
-      val toks = splitTokens(nc)
-      val m = toks.length - k + 1
-      if (m <= 0) Array.empty[Long]
-      else {
-        val seen = new java.util.HashSet[java.lang.Long](m * 2)
-        val shh = new scala.collection.mutable.ArrayBuilder.ofLong
-        var i = 0
-        while (i < m) {
-          val h1 = kgramHash(toks, i, k)._1
-          if (seen.add(h1)) shh += h1
-          i += 1
-        }
-        shh.result()
-      }
-    }
-
-  /** JVM-native SimHash over a token array — hot-path twin of `simhash`
-    * below (HOF expressions evaluate interpreted; see minhashBandUdf).
-    * Hash family differs from the expression form (FNV-1a + avalanche vs
-    * xxhash64) — signatures are engine-internal; blocking recall is what
-    * matters and is verified downstream by exact Jaccard. */
-  val simhashUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf { (tokens: Seq[String]) =>
-      val counters = new Array[Int](64)
-      tokens.foreach { t =>
-        var h = 0xcbf29ce484222325L
-        var i = 0
-        while (i < t.length) {
-          val c = t.charAt(i)
-          h = (h ^ (c & 0xff)) * 0x100000001b3L
-          h = (h ^ (c >>> 8)) * 0x100000001b3L
-          i += 1
-        }
-        h ^= h >>> 33; h *= 0xff51afd7ed558ccdL; h ^= h >>> 33
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counters(b) += 1 else counters(b) -= 1
-          b += 1
-        }
-      }
-      var out = 0L
-      var b = 0
-      while (b < 64) { if (counters(b) > 0) out |= (1L << b); b += 1 }
-      out
-    }
+    org.apache.spark.sql.functions.udf { (nc: String) => distinctKgrams(nc, k)((_, _) => ()) }
 
   /** 64-bit SimHash over the token MULTISET with **md5 token hashes**
     * (first 8 digest bytes, big-endian): md5 exists in every SQL engine, so
-    * this signature — unlike the engine-internal FNV variant above — is
-    * oracle-reproducible bit-for-bit (DuckDB: `('0x' || substr(md5(tok),
-    * 1, 16))::UBIGINT` + the same sign-counter aggregation). Used by the
-    * simhash-radius pair operator whose contract is pairs within an exact
-    * Hamming distance. */
+    * this signature is oracle-reproducible bit-for-bit (DuckDB:
+    * `('0x' || substr(md5(tok), 1, 16))::UBIGINT` + the same sign-counter
+    * aggregation). Used by the simhash-radius pair operator whose contract
+    * is pairs within an exact Hamming distance. */
   val simhashMd5Udf: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf { (tokens: Seq[String]) =>
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -344,43 +201,19 @@ object Keys {
       out
     }
 
-  /** SimHash (64-bit) over the token multiset: bit b of the result is the
-    * sign of Σ_tokens (bit b of xxhash64(token) ? +1 : −1). Pure
-    * higher-order-function expression: aggregate over the token array with a
-    * 64-counter accumulator — no explode, no shuffle. */
-  def simhash(caption: Column): Column = {
-    val toks = tokens(caption)
-    // variable-distance shifts need the SQL function (the Scala helper only
-    // accepts a literal Int distance)
-    def shr(v: Column, n: Column) = call_function("shiftright", v, n.cast("int"))
-    def shl(v: Column, n: Column) = call_function("shiftleft", v, n.cast("int"))
-    val counters = aggregate(
-      toks,
-      array_repeat(lit(0), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (a, b) => a + when(shr(h, b).bitwiseAND(1) === 1, 1).otherwise(-1))
-      })
-    aggregate(
-      zip_with(counters, sequence(lit(0), lit(63)),
-        (c, b) => when(c > 0, shl(lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
   /** Hamming band keys for a 64-bit hash: split into `bands` equal bit
     * slices. Pigeonhole: two hashes within Hamming distance r < bands agree
     * on at least one band — blocking is recall-lossless for r ≤ bands−1. */
   def hammingBands(hash64: Column, bands: Int): Column = {
     val width = 64 / bands
-    val mask = (1L << width) - 1
     array((0 until bands).map { b =>
-      shiftright(hash64, b * width).bitwiseAND(lit(mask))
+      shiftright(hash64, b * width).bitwiseAND(lit(chunkMask(width)))
     }: _*)
   }
 
-  /** Exact Hamming distance between two 64-bit hashes (codegen builtin). */
-  def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
+  /** The low `width` bits, the mask of one Hamming band chunk. Not
+    * `(1L << width) - 1`: Java shifts wrap, so that is 0 at width 64. */
+  private[graft] def chunkMask(width: Int): Long = -1L >>> (64 - width)
 
   /** All XOR masks of a `width`-bit value with popcount ≤ subRadius —
     * the probe-expansion set of multi-index Hamming search (Norouzi et al.,

@@ -118,7 +118,7 @@ object EmbeddingOps {
     * decision exact in every engine (float association order can flip a
     * sign at the boundary); one fused loop replaces nTables × nBits
     * interpreted higher-order-function aggregates (the measured cost of the
-    * expression form — see Keys.minhashBandUdf for the precedent). */
+    * expression form — see Keys.shingleLshUdf for the precedent). */
   def hyperplaneBucketsUdf(dim: Int, nBits: Int, nTables: Int)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val signs: Array[Array[Array[Int]]] =

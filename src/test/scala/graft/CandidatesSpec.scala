@@ -208,10 +208,12 @@ class CandidatesSpec extends SparkSpec {
   }
 
   test("multi-index Hamming listing form with ONE band: every pair once") {
-    // one 64-bit band (legal: 64 % 1 == 0, guarantee 1 ≥ radius 1): every
-    // index row shares bucket 0, so each pair meets once, index × index.
-    // 1-flip probes: a 64-bit chunk has 65 masks at subRadius 1 but 43,745
-    // at 3, which ran a 4 GB test heap out of memory
+    // one 64-bit band (legal: 64 % 1 == 0, guarantee 1 ≥ radius 1): the
+    // chunk is the whole hash, so copies meet index × index in their own
+    // bucket and a pair 1 bit apart meets as two probes, one of which the
+    // listing rule keeps — only if the packed key's band decodes as 0
+    // (`_k >>> 64 == _k`). 1-flip probes: a 64-bit chunk has 65 masks at
+    // subRadius 1 but 43,745 at 3, which ran a 4 GB test heap out of memory
     assertHammingListing(hammingFixture(13L, 20, 12), bands = 1, subRadius = 1,
       radius = 1, minPairs = 40)
   }

@@ -17,18 +17,10 @@ import graft.state.{HashCache, TableIO}
   * and merge. */
 class HashCacheMergeSpec extends SparkSpec {
   import spark.implicits._
+  import SparkSpec.copyDir
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
-
-  private def copyDir(from: String, to: String): Unit = {
-    val src = Paths.get(from)
-    val s = Files.walk(src)
-    try s.iterator().asScala.foreach { f =>
-      val t = Paths.get(to).resolve(src.relativize(f).toString)
-      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
-    } finally s.close()
-  }
 
   private def stagingDirs(root: String): Seq[Path] = {
     val s = Files.list(Paths.get(root))

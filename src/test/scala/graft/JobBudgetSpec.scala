@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.candidates.Candidates
 import graft.gen.Corpus
@@ -9,13 +12,13 @@ import graft.schema.{DedupConfig, NearDupConfig}
 import graft.util.{CacheScope, Seal}
 
 /** The job budget of each flagship candidate source, each `DocOps` pair
-  * listing and a whole `Dedup.run` call: on a small fixture with a salted
-  * caption bucket, every call submits a pinned number of Spark jobs, and
-  * the same number on a second call (a lazily persisted frame read by two
-  * branches of one seal races two cache builds, which shows as an extra
-  * job on some calls only). A job costs 60-100 ms of fixed overhead on a
-  * 4-core box, so an extra barrier — e.g. an eager persist that
-  * materializes with `count()` — is a regression. */
+  * listing and a whole `Dedup.run` / `Dedup.runCheckpointed` call: on a
+  * small fixture with a salted caption bucket, every call submits a pinned
+  * number of Spark jobs, and the same number on a second call (a lazily
+  * persisted frame read by two branches of one seal races two cache builds,
+  * which shows as an extra job on some calls only). A job costs 60-100 ms
+  * of fixed overhead on a 4-core box, so an extra barrier — e.g. an eager
+  * persist that materializes with `count()` — is a regression. */
 class JobBudgetSpec extends SparkSpec {
 
   private lazy val features = {
@@ -55,6 +58,32 @@ class JobBudgetSpec extends SparkSpec {
     val corpus = Corpus.generate(spark, nClusters = 30, skewCopies = 40).toDF()
     assertBudget(Seq("Dedup.run" -> (() => Dedup.run(corpus).collect(): Unit)),
       Seq("Dedup.run" -> 30))
+  }
+
+  test("a whole Dedup.runCheckpointed call submits a fixed number of jobs, every call") {
+    // a committed state root resumes, so every call gets a fresh one. Two
+    // cache states: cold, and a fresh copy of a cache built from the first
+    // 27 of the 30 clusters (the last 3 and the skew block miss) — the call
+    // merges its misses into the cache it is given. perfbench's traced
+    // mirror re-composes this call, so a changed job sequence shows here
+    // before its traced run drifts
+    val dir = Files.createTempDirectory("graft_budget_ckpt")
+    Corpus.generate(spark, nClusters = 30, skewCopies = 40).toDF().write.parquet(s"$dir/input")
+    val all = spark.read.parquet(s"$dir/input")
+    val input = all.drop("truth_cluster")
+    val cfg = DedupConfig()
+    def fresh(name: String) = Files.createTempDirectory(dir, name).toString
+    val prefixCache = s"$dir/prefix_cache"
+    Dedup.runCheckpointed(all.where(col("truth_cluster") < 27).drop("truth_cluster"), cfg,
+      fresh("prefix_state"), Some(prefixCache))
+    assertBudget(Seq(
+      "cold cache" -> (() => Dedup.runCheckpointed(input, cfg, fresh("state")): Unit),
+      "prefix cache" -> { () =>
+        val cache = fresh("cache")
+        SparkSpec.copyDir(prefixCache, cache)
+        Dedup.runCheckpointed(input, cfg, fresh("state"), Some(cache)): Unit
+      }),
+      Seq("cold cache" -> 47, "prefix cache" -> 50))
   }
 
   /** Each call's jobs, counted on two calls, equal its budget both times. */

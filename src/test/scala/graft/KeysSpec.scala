@@ -59,40 +59,33 @@ class KeysSpec extends SparkSpec {
     assert(one(Keys.shingles(lit("x x x x"), 3)).getSeq[String](0) == Seq("x x x"))
   }
 
-  test("lshBandHashes == bandHashes(minhashSignature) — fused and unfused agree") {
-    val df = Seq("the quick brown fox jumps over the lazy dog today").toDF("c")
-      .select(Keys.shingleHashes(Keys.shingles(col("c"), 3)).as("hh"))
-      .persist()
-    val a = df.select(Keys.lshBandHashes(col("hh"), 4, 4).as("v")).first().getSeq[Long](0)
-    val b = df.select(Keys.bandHashes(Keys.minhashSignature(col("hh"), 16), 4, 4).as("v"))
-      .first().getSeq[Long](0)
-    assert(a == b)
-    // lane mixing really varies by lane: 16 distinct signature values
-    val sig = df.select(Keys.minhashSignature(col("hh"), 16).as("v")).first().getSeq[Long](0)
-    assert(sig.distinct.size > 8, s"lanes should differ: $sig")
-    df.unpersist()
-  }
-
   test("hammingBands: pigeonhole guarantee and reconstruction") {
     val x = 0x123456789abcdef0L
     // flipping r < bands bits leaves ≥ 1 band untouched
     val y = x ^ (1L << 3) ^ (1L << 40) ^ (1L << 63) // 3 flips
     val bx = one(Keys.hammingBands(lit(x), 8)).getSeq[Long](0)
     val by = one(Keys.hammingBands(lit(y), 8)).getSeq[Long](0)
+    assert(java.lang.Long.bitCount(x ^ y) == 3)
     assert(bx.zip(by).count { case (a, b) => a == b } >= 8 - 3)
-    assert(one(Keys.hammingDist(lit(x), lit(y))).getInt(0) == 3)
-    // bands reassemble to the original value
-    val rebuilt = bx.zipWithIndex.map { case (v, i) => v << (i * 8) }.reduce(_ | _)
-    assert(rebuilt == x)
+    // bands reassemble to the original value, for every legal band count
+    // (one band: the 64-bit chunk is the whole hash)
+    for (bands <- Seq(1, 2, 4, 8, 16, 32, 64)) {
+      val width = 64 / bands
+      val bs = one(Keys.hammingBands(lit(x), bands)).getSeq[Long](0)
+      assert(bs.size == bands)
+      val rebuilt = bs.zipWithIndex.map { case (v, i) => v << (i * width) }.reduce(_ | _)
+      assert(rebuilt == x, s"bands $bands: ${bs.map(_.toHexString)}")
+    }
   }
 
   test("simhash: identical texts collide, near texts are close, far texts far") {
+    // the engine's one SimHash, over the tokens DocOps.simhashPairs feeds it
     val df = Seq(
       ("a", "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16 w17 w18 w19 w20"),
       ("b", "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16 w17 w18 w19 w20"),
       ("c", "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16 w17 w18 w19 zz"),
       ("d", "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 q11 q12 q13 q14 q15 q16 q17 q18 q19 q20")
-    ).toDF("id", "t").select(col("id"), Keys.simhash(col("t")).as("s"))
+    ).toDF("id", "t").select(col("id"), Keys.simhashMd5Udf(Keys.tokens(col("t"))).as("s"))
     val m = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def hd(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(m("a") == m("b"))
@@ -108,18 +101,22 @@ class KeysSpec extends SparkSpec {
     assert(r.getInt(0) == 2 && r.getInt(1) == 4)
   }
 
-  test("hasShingles (the rep-collapse `_sig` flag) holds exactly when shingleLshUdf shingles") {
-    // separators the normalization collapses (spaces, tabs, newlines,
-    // vertical tab) and characters it keeps inside a token (NBSP, control
-    // characters), around 0..k+1 tokens
+  // separators the normalization collapses (spaces, tabs, newlines,
+  // vertical tab) and characters it keeps inside a token (NBSP, control
+  // characters), around 0..k+1 tokens
+  private lazy val edgeTexts = {
     val seps = Seq(" ", "  ", "\t", " \t\n ", "\u000b", "\u00a0", "\u0001", "\u001c")
     val texts: Seq[String] = Seq(null, "", " ", "   ", "\t", "\t \n\r ", "\u00a0", "\u0001",
       "\u0001 \u0002 \u0003", " a b c ", "A  B\r\nC") ++
       (for (n <- 0 to 5; sep <- seps; pad <- Seq("", " ", "\t"))
         yield pad + (1 to n).map(i => s"w$i").mkString(sep) + pad)
+    texts.toDF("t").select(col("t"), Keys.normCaption(col("t")).as("_nc"))
+  }
+
+  test("hasShingles (the rep-collapse `_sig` flag) holds exactly when shingleLshUdf shingles") {
     for (k <- 1 to 4) {
       val udf = Keys.shingleLshUdf(k, 16, 4)
-      val got = texts.toDF("t").select(col("t"), Keys.normCaption(col("t")).as("_nc"))
+      val got = edgeTexts
         .select(col("t"), coalesce(graft.candidates.Candidates.hasShingles(col("_nc"), k),
                                    lit(false)),
                 size(udf(col("_nc"))("_1")) > 0)
@@ -127,6 +124,18 @@ class KeysSpec extends SparkSpec {
       val wrong = got.filter { case (_, sig, shingled) => sig != shingled }
       assert(wrong.isEmpty, s"k $k: flag and UDF disagree on ${wrong.map(_._1).toSeq}")
       assert(got.exists(_._2) && got.exists(!_._2), s"k $k: both outcomes are covered")
+    }
+  }
+
+  test("shingleHashUdf, sorted, is shingleLshUdf's `_shh`") {
+    for (k <- 1 to 4) {
+      val got = edgeTexts
+        .select(col("t"), Keys.shingleHashUdf(k)(col("_nc")),
+                Keys.shingleLshUdf(k, 16, 4)(col("_nc"))("_1"))
+        .as[(String, Seq[Long], Seq[Long])].collect()
+      val wrong = got.filter { case (_, sh, shh) => sh.sorted != shh }
+      assert(wrong.isEmpty, s"k $k: the two UDFs disagree on ${wrong.map(_._1).toSeq}")
+      assert(got.exists(_._2.size > 1), s"k $k: some text has several k-grams")
     }
   }
 

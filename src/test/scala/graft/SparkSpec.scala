@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, BeforeAndAfterEach}
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,5 +30,17 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Copies the directory tree at `from` to `to`: a run merges into the
+    * hash cache it is given, so each run that must start from the same
+    * cache gets a copy. */
+  def copyDir(from: String, to: String): Unit = {
+    val src = Paths.get(from)
+    val s = Files.walk(src)
+    try s.iterator().asScala.foreach { f =>
+      val t = Paths.get(to).resolve(src.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+    } finally s.close()
   }
 }

@@ -5,19 +5,21 @@ import org.apache.spark.sql.functions._
 import graft.gen.Corpus
 import graft.keys.Keys
 
-/** Distribution sanity of the JVM-native signature UDFs: band hashes of
-  * unrelated docs must NOT collide (a broken hash would put the whole
-  * corpus in one LSH bucket and blow the candidate join up quadratically). */
+/** Distribution sanity of the JVM-native MinHash → LSH band UDF: band
+  * hashes of unrelated docs must NOT collide (a broken hash would put the
+  * whole corpus in one LSH bucket and blow the candidate join up
+  * quadratically). */
 class UdfSanitySpec extends SparkSpec {
   import spark.implicits._
 
-  test("minhashBandUdf: unrelated captions rarely share any band hash") {
+  private val bandUdf = Keys.shingleLshUdf(3, 16, 4)
+  private def bands(text: org.apache.spark.sql.Column) = bandUdf(Keys.normCaption(text))("_2")
+
+  test("shingleLshUdf: unrelated captions rarely share any band hash") {
     val caps = Corpus.generate(spark, nClusters = 100).toDF()
       .where(pmod(col("truth_cluster"), lit(10)) < 4) // singleton negatives
-      .select(col("image_id"), Keys.shingles(col("caption"), 3).as("_sh"))
-    val bandUdf = Keys.minhashBandUdf(16, 4)
     val exploded = caps.select(col("image_id"),
-      posexplode(bandUdf(col("_sh"))).as(Seq("band_id", "band_hash"))).cache()
+      posexplode(bands(col("caption"))).as(Seq("band_id", "band_hash"))).cache()
     val n = exploded.select("image_id").distinct().count()
     val maxBucket = exploded.groupBy("band_id", "band_hash").count()
       .agg(max("count")).first().getLong(0)
@@ -26,13 +28,11 @@ class UdfSanitySpec extends SparkSpec {
     exploded.unpersist()
   }
 
-  test("minhashBandUdf: near-identical captions share most bands; lanes differ") {
+  test("shingleLshUdf: near-identical captions share most bands; a doc's bands differ") {
     val a = Seq.tabulate(40)(i => s"tok$i").mkString(" ")
     val b = Seq.tabulate(40)(i => if (i == 20) "XXX" else s"tok$i").mkString(" ")
     val df = Seq(("a", a), ("b", b), ("c", "completely different words entirely another caption list")).toDF("id", "t")
-      .select(col("id"), Keys.shingles(col("t"), 3).as("_sh"))
-    val bandUdf = Keys.minhashBandUdf(16, 4)
-    val m = df.select(col("id"), bandUdf(col("_sh")).as("bands")).collect()
+    val m = df.select(col("id"), bands(col("t")).as("bands")).collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     // 1 swap in 40 tokens → shingle-Jaccard ≈ 0.854 → per-band share prob
     // s⁴ ≈ 0.53, E[shared] ≈ 8.5, σ ≈ 2 — assert well inside the tail;
@@ -42,17 +42,5 @@ class UdfSanitySpec extends SparkSpec {
     assert(sharedAB >= 3, s"near-dup captions should share several bands, got $sharedAB/16")
     assert(sharedAC == 0, s"unrelated captions should share no band, got $sharedAC")
     assert(m("a").distinct.size > 8, "band hashes within a doc must differ")
-  }
-
-  test("simhashUdf: near texts close, far texts far") {
-    val df = Seq(
-      ("a", "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16 w17 w18 w19 w20"),
-      ("b", "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15 w16 w17 w18 w19 zz"),
-      ("c", "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 q11 q12 q13 q14 q15 q16 q17 q18 q19 q20")
-    ).toDF("id", "t").select(col("id"), Keys.simhashUdf(Keys.tokens(col("t"))).as("s"))
-    val m = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    def hd(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
-    assert(hd(m("a"), m("b")) <= 12, s"near pair too far: ${hd(m("a"), m("b"))}")
-    assert(hd(m("a"), m("c")) > hd(m("a"), m("b")))
   }
 }
