@@ -17,9 +17,12 @@ import graft.schema.{DedupConfig, FilterConfig}
   *   pHash-Hamming ∪ containment) → connected components → cluster members
   *   → window-ranked canonical election → actions table
   *
-  * All stages are DataFrame transformations; the only materialization points
-  * are the CC iterations. Input must carry the §1.2 schema columns
-  * (image_id, bytes, fmt, caption, phash, role, mtime).
+  * All stages are DataFrame transformations. They materialize at the
+  * featurize checkpoint, each candidate source's seal and its eager
+  * barriers, the CC iterations, and in `runCheckpointed` also at the hash
+  * lookup's counted frames, the hash-cache merge and seven commits (three
+  * stage checkpoints, four tables). Input must carry the §1.2
+  * schema columns (image_id, bytes, fmt, caption, phash, role, mtime).
   */
 object Dedup {
 

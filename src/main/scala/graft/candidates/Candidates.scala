@@ -21,11 +21,11 @@ import graft.util.CacheScope
   * `DocOps` pair listings' (`captionLshPartsIn` — grouped and verified
   * inside each LSH bucket by `bucketPairs` — + `expandRepPairs` for
   * MinHash-LSH, `multiIndexHammingPairsIn` — grouped and verified inside
-  * each band bucket — + `expandRepPairs` for SimHash, `containmentPairsIn`
-  * for containment); each public call only picks the output form and the
-  * sealing mode. Both listing forms emit each pair once, in the lowest
-  * band that finds it, so no listing runs a `distinct`; a rep-collapse
-  * frame carries a `_sig` flag (the text yields a signature), from which
+  * each band bucket — for SimHash, `containmentPairsIn` for containment);
+  * each public call only picks the output form and the sealing mode. Both
+  * listing forms emit each pair once, in the lowest band that finds it,
+  * so no listing runs a `distinct`; the caption rep-collapse frame carries
+  * a `_sig` flag (the text yields a signature), from which
   * `expandRepPairs` builds its cliques with no semi-join. A flagship
   * source seals ONE frame, its edges; its bucket statistics are observed
   * inside that frame's job (`BucketStats`), never aggregated by a job of
@@ -325,44 +325,34 @@ object Candidates {
       (forest, stats)
     }
 
-  /** Expand rep-level verified pairs back to member level — the exact pair
-    * LISTING the identical-key collapse stands for: every cross pair of two
-    * connected groups, plus every within-group pair of groups whose rows
-    * carry `_sig` (identical content ⇒ similarity 1 ⇒ qualifies, provided
-    * the content produced a signature at all; identical content agrees on
-    * the flag). `members` is (id, rep, _sig). Columns of `repPairs` beyond
-    * (id1, id2) ride along on the cross pairs (identical content ⇒ a
-    * member pair inherits its rep pair's values); `cliqueCols` gives the
-    * same columns' values for the clique rows (e.g. SimHash's
-    * `lit(0).as("hamming_d")`). Output (id1, id2, extras…) with id1 < id2,
-    * Θ(listing size), inherent to pair listing; the cluster pipeline never
-    * calls this (stars suffice there).
+  /** Expand MinHash-LSH's rep-level verified pairs back to member level —
+    * the exact pair LISTING the identical-caption collapse stands for:
+    * every cross pair of two connected groups, plus every within-group pair
+    * of groups whose rows carry `_sig` (identical content ⇒ similarity 1 ⇒
+    * qualifies, provided the content produced a signature at all;
+    * identical content agrees on the flag). `members` is (id, rep, _sig).
+    * Output (id1, id2) with id1 < id2, Θ(listing size), inherent to pair
+    * listing; the cluster pipeline never calls this (stars suffice there).
     *
-    * PRECONDITION: `repPairs` is distinct — both listing forms emit each
-    * pair only in the lowest band that finds it: caption-LSH's
-    * (`bucketPairs`) the lowest band its two rows share, SimHash's
-    * (`multiIndexHammingPairsIn`) the lowest band whose chunks differ by
-    * at most `subRadius` bits, in one probe orientation (asserted by
-    * OpsSpec and CandidatesSpec). The output is then distinct WITHOUT a
-    * final exchange: member→rep is functional, so a cross pair {m1,m2}
-    * determines its rep pair uniquely (no duplicate across rep pairs) and
-    * appears once per rep pair; cliques are ordered within-group pairs
-    * (unique); and cross (different reps) is disjoint from cliques (same
-    * rep). A trailing `.distinct()` would be a full extra shuffle of the
-    * listing — the operator's LARGEST frame. */
-  def expandRepPairs(repPairs: DataFrame, members: DataFrame,
-                     cliqueCols: Seq[Column] = Nil): DataFrame = {
-    val extras = repPairs.columns.filterNot(Set("id1", "id2")).map(col).toSeq
+    * PRECONDITION: `repPairs` is distinct — `bucketPairs`' listing form
+    * emits each pair only in the lowest band its two rows share (asserted
+    * by OpsSpec). The output is then distinct WITHOUT a final exchange:
+    * member→rep is functional, so a cross pair {m1,m2} determines its rep
+    * pair uniquely (no duplicate across rep pairs) and appears once per rep
+    * pair; cliques are ordered within-group pairs (unique); and cross
+    * (different reps) is disjoint from cliques (same rep). A trailing
+    * `.distinct()` would be a full extra shuffle of the listing — the
+    * operator's LARGEST frame. */
+  def expandRepPairs(repPairs: DataFrame, members: DataFrame): DataFrame = {
     val cross = repPairs
       .join(members.select(col("rep").as("id1"), col("id").as("_m1")), "id1")
       .join(members.select(col("rep").as("id2"), col("id").as("_m2")), "id2")
-      .select((least(col("_m1"), col("_m2")).as("id1") +:
-               greatest(col("_m1"), col("_m2")).as("id2") +: extras): _*)
+      .select(least(col("_m1"), col("_m2")).as("id1"), greatest(col("_m1"), col("_m2")).as("id2"))
     val signed = members.where(col("_sig"))
     val cliques = signed.select(col("rep"), col("id").as("_a"))
       .join(signed.select(col("rep"), col("id").as("_b")), "rep")
       .where(col("_a") < col("_b"))
-      .select((col("_a").as("id1") +: col("_b").as("id2") +: cliqueCols): _*)
+      .select(col("_a").as("id1"), col("_b").as("id2"))
     cross.unionByName(cliques)
   }
 
@@ -375,8 +365,10 @@ object Candidates {
     * a pass per bucket that holds the bucket's index rows and streams its
     * probe rows (`probeBucket`): a pair is kept when the ids differ and
     * `bit_count(xor) ≤ radius`, exactly. Pigeonhole: recall 1 for radius ≤
-    * bands×(subRadius+1)−1 (enforced). Callers should collapse identical
-    * hashes first (the degenerate mass). Input `df(idCol, hashCol)`; output
+    * bands×(subRadius+1)−1 (enforced). A connectivity caller should
+    * collapse identical hashes first (the degenerate mass; a star per
+    * group connects it); the listing form emits their pairs itself, each
+    * once, at distance 0. Input `df(idCol, hashCol)`; output
     * (pairs(id1, id2, hamming_d) with id1 < id2, distinct; the hot
     * buckets' statistics, observed when the pairs' plan runs). Lazy; it
     * persists nothing.

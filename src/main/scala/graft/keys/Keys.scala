@@ -221,8 +221,10 @@ object Keys {
     * a pair within total distance r has, by pigeonhole, some chunk with
     * ≤ ⌊r/m⌋ errors, so probing every ≤⌊r/m⌋-flip neighborhood of each
     * chunk is recall-lossless while chunks stay wide (64/m bits) enough to
-    * be selective at 10¹² rows. Driver-side enumeration; small for
-    * subRadius ≤ 3 (width 16: 1, 17, 137, or 697 masks). */
+    * be selective at 10¹² rows. Driver-side enumeration of Σ_{i ≤
+    * subRadius} C(width, i) masks: 1, 17, 137 or 697 at width 16, but
+    * 43,745 at width 64 and subRadius 3 — `NearDupConfig` caps bands ×
+    * masks at 4,096 probe rows per hash. */
   def flipMasks(width: Int, subRadius: Int): Seq[Long] = {
     require(subRadius >= 0 && subRadius <= 3, s"flip enumeration for subRadius $subRadius is impractical")
     val bits = 0 until width

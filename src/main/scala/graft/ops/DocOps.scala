@@ -155,52 +155,29 @@ object DocOps {
     * Jaccard-complete radius is deliberately NOT the contract: on
     * vocabulary-correlated corpora ~36% of random pairs sit within
     * distance 15, so any blocking complete at 15 is inherently quadratic
-    * (see NearDupConfig). Identical normalized texts collapse to a
-    * representative and expand back afterwards (within-group cliques at
-    * distance 0 + cross pairs at the rep distance).
+    * (see NearDupConfig). Every document with ≥1 token is signed and
+    * listed as it is — no identical-text collapse: the listing form of
+    * `Candidates.multiIndexHammingPairsIn` emits each pair of identical
+    * signatures once, at distance 0, as two index rows of one band bucket,
+    * so n copies of a text cost n index rows per band and their n(n−1)/2
+    * pairs are output rows. One lazy plan, one exchange; nothing persists.
     * Output (doc1, doc2, hamming_d), doc1 < doc2. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   cfg: NearDupConfig): DataFrame =
-    CacheScope.deferred(simhashPairsIn(docs, idCol, textCol, cfg)(_))
-
-  /** Lazy body of `simhashPairs` (intermediates persist into `scope`;
-    * plan-shape tests inspect this un-sealed form). */
-  private[graft] def simhashPairsIn(docs: DataFrame, idCol: String, textCol: String,
-                                    cfg: NearDupConfig)(scope: CacheScope): DataFrame = {
-    val base = docs
-      .select(col(idCol).as("doc_id"), Keys.normCaption(col(textCol)).as("_nc"))
-    // collapse identical normalized texts to one representative (skew guard,
-    // same as the LSH path)
-    val repW = Window.partitionBy(col("_nc"))
-    // ONE cached frame for the rep-collapse chain: (doc_id, _rep, _sim,
-    // _sig), the signature computed for reps with ≥1 token only (null
-    // otherwise), `_sig` (≥1 token) for every row. `members` and `reps` are
-    // projections of it, so the operator's one barrier builds one cache
-    // before the Hamming buckets, member expansion and cliques read it (see
-    // persistEager). The `when` guard, not a filter, keeps the persisted
-    // plan to one UDF call a rep; the rep filter applies to the persisted
-    // frame.
-    val toks = Keys.tokens(col("_nc"))
-    val parts = scope.persistEager(base.withColumn("_rep", min("doc_id").over(repW))
-      .select(col("doc_id"), col("_rep"),
-              when(col("doc_id") === col("_rep") && size(toks) > 0,
-                   Keys.simhashMd5Udf(toks)).as("_sim"),
-              (size(toks) > 0).as("_sig")))
-    val members = parts.select(col("doc_id").as("id"), col("_rep").as("rep"), col("_sig"))
-    val reps = parts.where(col("_sim").isNotNull).select(col("doc_id"), col("_sim"))
+                   cfg: NearDupConfig): DataFrame = {
+    // the empty-token filter reads the tokens, never the UDF's output: a
+    // filter on the signature would be pushed below the projection with a
+    // copy of the UDF (two calls a row). `Keys.tokens` normalizes the text.
+    val signed = docs.select(col(idCol).as("doc_id"), Keys.tokens(col(textCol)).as("_t"))
+      .where(size(col("_t")) > 0)
+      .select(col("doc_id"), Keys.simhashMd5Udf(col("_t")).as("_sim"))
     // dfCap disabled: this operator's contract is EXACT (every pair within
     // the radius, SQL-oracle-checked bit-for-bit), unlike the phash
     // candidate source where hot degenerate buckets are droppable; with
-    // every bucket kept, each rep pair is emitted once, with no distinct
+    // every bucket kept, each pair is emitted once, with no distinct
     // exchange
-    val (repPairs, _) = Candidates.multiIndexHammingPairsIn(
-      reps, "doc_id", "_sim",
-      cfg.simhashBands, cfg.simhashSubRadius, cfg.simhashRadius,
-      dfCap = Int.MaxValue)
-    // member expansion: cross pairs inherit the rep distance (identical
-    // text ⇒ identical signature); identical-text groups pair at distance 0
-    Candidates.expandRepPairs(repPairs, members, Seq(lit(0).as("hamming_d")))
-      .select(col("id1").as("doc1"), col("id2").as("doc2"), col("hamming_d"))
+    val (pairs, _) = Candidates.multiIndexHammingPairsIn(signed, "doc_id", "_sim",
+      cfg.simhashBands, cfg.simhashSubRadius, cfg.simhashRadius, dfCap = Int.MaxValue)
+    pairs.select(col("id1").as("doc1"), col("id2").as("doc2"), col("hamming_d"))
   }
 
   /** BPE-ish subtoken regex: alnum runs or single non-alnum-non-space marks

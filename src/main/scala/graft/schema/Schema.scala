@@ -143,6 +143,29 @@ final case class NearDupConfig(
     "simhash multi-index guarantee must cover the blocking radius")
   require(hammingSubRadius <= 3 && simhashSubRadius <= 3,
     "flip enumeration impractical past 3 bits per chunk")
+  for ((name, bands, sub) <- Seq(("hamming", hammingBands, hammingSubRadius),
+                                 ("simhash", simhashBands, simhashSubRadius))) {
+    val rows = NearDupConfig.probeRowsPerHash(bands, sub)
+    require(rows <= NearDupConfig.MaxProbeRowsPerHash,
+      s"${name}Bands $bands × ${name}SubRadius $sub expands each hash into $rows probe rows " +
+      s"(at most ${NearDupConfig.MaxProbeRowsPerHash})")
+  }
+}
+
+object NearDupConfig {
+  /** Multi-index Hamming's probe rows per hash are built as one array of
+    * literal masks a row and exploded: the defaults take 68, one band at
+    * subRadius 3 would take 43,745. */
+  val MaxProbeRowsPerHash = 4096
+
+  /** bands × Σ_{i ≤ subRadius} C(64/bands, i): one row per band and flip
+    * mask of ≤ subRadius bits (`Keys.flipMasks`). */
+  def probeRowsPerHash(bands: Int, subRadius: Int): Long = {
+    val width = 64 / bands
+    // C(w, j+1) = C(w, j)·(w−j)/(j+1): exact at every step
+    def choose(i: Int) = (0 until i).foldLeft(1L)((c, j) => c * (width - j) / (j + 1))
+    bands * (0 to subRadius).map(choose).sum
+  }
 }
 
 /** Disposition policy — reference `process_duplicates`

@@ -68,10 +68,52 @@ class OpsSpec extends SparkSpec {
     assert(sim == oracle, s"missing=${(oracle -- sim).take(5)} extra=${(sim -- oracle).take(5)}")
   }
 
-  test("expandRepPairs precondition: both callers' rep pairs are distinct") {
+  test("SimHash listing == brute-force Hamming-radius pairs on a synthetic corpus") {
+    // groups of 2-5 identical captions (spelled with other case and
+    // spacing: one normalized text), variants 1-10 tokens off each base
+    // (some inside the radius, some beyond), one whitespace-only document
+    import graft.keys.Keys
+    val rng = new scala.util.Random(1301L)
+    def caption() = Seq.fill(30)(s"w${rng.nextInt(300)}")
+    val texts = (0 until 12).flatMap { g =>
+      val base = caption()
+      val copies = Seq.tabulate(2 + g % 4)(c =>
+        if (c % 2 == 0) base.mkString(" ") else base.mkString("  ", "\t", " ").toUpperCase)
+      val variants = Seq(1, 2, 4, 10).map { n =>
+        base.zipWithIndex.map { case (t, i) => if (i < n) s"x${rng.nextInt(300)}" else t }
+          .mkString(" ")
+      }
+      copies ++ variants
+    } :+ " \t "
+    val docs = rng.shuffle(texts).zipWithIndex.map { case (t, i) => (i.toLong * 7, t) }
+      .toDF("doc_id", "text")
+    val sigs = docs
+      .select(col("doc_id"), Keys.tokens(col("text")).as("_t"))
+      .where(size(col("_t")) > 0)
+      .select(col("doc_id"), Keys.simhashMd5Udf(col("_t")).as("s"))
+      .as[(Long, Long)].collect()
+    assert(sigs.length == texts.length - 1, "only the whitespace-only document is unsigned")
+    val all = for {
+      i <- sigs.indices; j <- (i + 1) until sigs.length
+    } yield {
+      val (a, b) = (sigs(i)._1, sigs(j)._1)
+      (math.min(a, b), math.max(a, b), java.lang.Long.bitCount(sigs(i)._2 ^ sigs(j)._2))
+    }
+    val oracle = all.filter(_._3 <= cfg.simhashRadius).toSet
+    assert(oracle.count(_._3 == 0) >= 12 && oracle.exists(_._3 > 0),
+      "the fixture must yield identical and near pairs within the radius")
+    assert(all.exists(p => p._3 > cfg.simhashRadius && p._3 <= 2 * cfg.simhashRadius),
+      "the fixture must yield near pairs beyond the radius")
+    val sim = DocOps.simhashPairs(docs, "doc_id", "text", cfg).as[(Long, Long, Int)].collect().toSeq
+    assert(sim.distinct.size == sim.size, "duplicate rows")
+    assert(sim.toSet == oracle,
+      s"missing=${(oracle -- sim).take(5)} extra=${(sim.toSet -- oracle).take(5)}")
+  }
+
+  test("expandRepPairs precondition: its MinHash-LSH rep pairs are distinct") {
     // expandRepPairs drops its trailing distinct on the strength of this
-    // precondition, for the MinHash-LSH and the SimHash listings alike; the
-    // containment listing and edges carry no distinct either
+    // precondition; the SimHash listing, the containment listing and the
+    // edges carry no distinct either
     import graft.candidates.Candidates
     import graft.util.Seal
     def assertDistinct(tag: String, pairs: org.apache.spark.sql.DataFrame): Unit = {
@@ -105,7 +147,7 @@ class OpsSpec extends SparkSpec {
     assert(exact.count() == 27, "a star per key")
     assertDistinct("exactEdges", exact)
     // multi-index Hamming with the cap disabled — the listing form the
-    // SimHash listing uses (no distinct) — over real SimHash signatures
+    // SimHash listing is (no distinct) — over real SimHash signatures
     assume(haveTestdata)
     import graft.keys.Keys
     val sigs = docs

@@ -86,7 +86,7 @@ class PlanShapeSpec extends SparkSpec {
       val (repPairs, members, _) = graft.candidates.Candidates
         .captionLshPartsIn(docs, "doc_id", "text", cfg, pairComplete = true)(scope)
       Seq(
-        graft.ops.DocOps.simhashPairsIn(docs, "doc_id", "text", cfg)(scope),
+        graft.ops.DocOps.simhashPairs(docs, "doc_id", "text", cfg),
         graft.candidates.Candidates.expandRepPairs(repPairs, members),
         graft.candidates.Candidates.containmentEdgesIn(docs, "doc_id", "text", cfg)(scope)
       ).foreach { df =>
@@ -128,8 +128,10 @@ class PlanShapeSpec extends SparkSpec {
       graft.candidates.Candidates.containmentPairsIn(corpus, "image_id", "caption", 3)(_))
     callsOnce("jaccardPairs (shingleHashUdf)")(
       graft.ops.DocOps.jaccardPairsIn(corpus, "image_id", "caption", 3, 80)(_))
-    callsOnce("simhashPairsIn (simhashMd5Udf)")(
-      graft.ops.DocOps.simhashPairsIn(corpus, "image_id", "caption", cfg)(_))
+    // the SimHash listing persists nothing: its own plan calls the UDF once
+    val simhash = graft.ops.DocOps.simhashPairs(corpus, "image_id", "caption", cfg)
+    val simCalls = udfCalls(simhash.queryExecution.executedPlan)
+    assert(simCalls == 1, s"simhashPairs (simhashMd5Udf): UDF calls in its plan: $simCalls")
   }
 
   test("operators leave the session cache manager empty (scoped persists)") {

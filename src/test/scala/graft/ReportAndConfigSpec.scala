@@ -23,6 +23,26 @@ class ReportAndConfigSpec extends SparkSpec {
     intercept[IllegalArgumentException](FilterConfig.parseSize(""))
   }
 
+  test("NearDupConfig rejects multi-index settings past 4,096 probe rows per hash") {
+    import graft.schema.NearDupConfig
+    assert(Seq((4, 1), (1, 1), (4, 3)).map { case (b, s) => NearDupConfig.probeRowsPerHash(b, s) } ==
+      Seq(68L, 65L, 2788L))
+    NearDupConfig()
+    NearDupConfig(hammingBands = 1, hammingRadius = 1, simhashBands = 1, simhashRadius = 1)
+    NearDupConfig(hammingSubRadius = 3, simhashSubRadius = 3)
+    // each radius is the pigeonhole guarantee at subRadius 3, so only the
+    // probe-row bound rejects
+    for ((bands, rows) <- Seq(1 -> 43745L, 2 -> 10978L)) {
+      val radius = bands * 4 - 1
+      Seq(
+        intercept[IllegalArgumentException](
+          NearDupConfig(hammingBands = bands, hammingSubRadius = 3, hammingRadius = radius)),
+        intercept[IllegalArgumentException](
+          NearDupConfig(simhashBands = bands, simhashSubRadius = 3, simhashRadius = radius))
+      ).foreach(e => assert(e.getMessage.contains(s"$rows probe rows"), e.getMessage))
+    }
+  }
+
   test("clusterReport: dense 1..N keys in cluster order, formatted mtimes") {
     val rows = Seq(
       ("c_b", "p3", 30L, "2024-01-02 03:04:05.123"),
