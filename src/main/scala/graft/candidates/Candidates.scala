@@ -17,19 +17,17 @@ import graft.util.CacheScope
   * `captionLshEdges`): the same components as its verified pairs, not the
   * pairs themselves, and an edge may repeat across partitions.
   *
-  * One body per technique: the lazy `*In` bodies here are also the
-  * `DocOps` pair listings' (`captionLshPartsIn` — grouped and verified
-  * inside each LSH bucket by `bucketPairs` — + `expandRepPairs` for
-  * MinHash-LSH, `multiIndexHammingPairsIn` — grouped and verified inside
-  * each band bucket — for SimHash, `containmentPairsIn` for containment);
-  * each public call only picks the output form and the sealing mode. Both
-  * listing forms emit each pair once, in the lowest band that finds it,
-  * so no listing runs a `distinct`; the caption rep-collapse frame carries
-  * a `_sig` flag (the text yields a signature), from which
-  * `expandRepPairs` builds its cliques with no semi-join. A flagship
-  * source seals ONE frame, its edges; its bucket statistics are observed
-  * inside that frame's job (`BucketStats`), never aggregated by a job of
-  * their own.
+  * One body per technique: the lazy bodies here are also the `DocOps`
+  * pair listings' (`bucketPairs` — grouped and verified inside each LSH
+  * bucket — for MinHash-LSH, `multiIndexHammingPairsIn` — grouped and
+  * verified inside each band bucket — for SimHash, `containmentPairsIn`
+  * for containment); each public call only picks the output form and the
+  * sealing mode. The listings collapse no identical texts: both listing
+  * forms emit each pair once, in the lowest band that finds it —
+  * identical texts at band 0 — so no listing runs a `distinct` or a
+  * member expansion. A flagship source seals ONE frame, its edges; its
+  * bucket statistics are observed inside that frame's job
+  * (`BucketStats`), never aggregated by a job of their own.
   *
   * At 100 TB the invariant is: NEVER a cartesian product; every candidate
   * source is blocked on a key (exact key, LSH band hash, Hamming band,
@@ -249,16 +247,16 @@ object Candidates {
     *                              (`hasShingles` — identical captions agree,
     *                              and a group's within-pairs qualify at
     *                              Jaccard 1 exactly when it holds)
-    * The engine edge source contracts pairs and groups into a forest
-    * (`captionLshEdges`); pair-listing queries expand to member level
-    * (`expandRepPairs`).
+    * Both consumers are connectivity forms: they join the rep pairs with a
+    * rep—member star per group. The pair listing (`DocOps.minhashLshPairs`)
+    * collapses nothing and calls `bucketPairs` itself.
     *
     * `stats` are `bucketPairs`' salted buckets, observed when repPairs'
     * plan runs.
     *
     * Lazy (intermediates persist into `scope`). Consumers: `captionLshEdges`
-    * (flagship, sealed mode) and DocOps.minhashLshPairs/minhashLshEdges
-    * (query surfaces, deferred mode). */
+    * (flagship, sealed mode) and `DocOps.minhashLshEdges` (query surface,
+    * deferred mode). */
   private[graft] def captionLshPartsIn(df: DataFrame, idCol: String, captionCol: String,
                                        cfg: NearDupConfig,
                                        pairComplete: Boolean = false)(scope: CacheScope)
@@ -324,37 +322,6 @@ object Candidates {
         .select(col("dst").as("id1"), col("src").as("id2"), lit("caption_lsh").as("kind"))
       (forest, stats)
     }
-
-  /** Expand MinHash-LSH's rep-level verified pairs back to member level —
-    * the exact pair LISTING the identical-caption collapse stands for:
-    * every cross pair of two connected groups, plus every within-group pair
-    * of groups whose rows carry `_sig` (identical content ⇒ similarity 1 ⇒
-    * qualifies, provided the content produced a signature at all;
-    * identical content agrees on the flag). `members` is (id, rep, _sig).
-    * Output (id1, id2) with id1 < id2, Θ(listing size), inherent to pair
-    * listing; the cluster pipeline never calls this (stars suffice there).
-    *
-    * PRECONDITION: `repPairs` is distinct — `bucketPairs`' listing form
-    * emits each pair only in the lowest band its two rows share (asserted
-    * by OpsSpec). The output is then distinct WITHOUT a final exchange:
-    * member→rep is functional, so a cross pair {m1,m2} determines its rep
-    * pair uniquely (no duplicate across rep pairs) and appears once per rep
-    * pair; cliques are ordered within-group pairs (unique); and cross
-    * (different reps) is disjoint from cliques (same rep). A trailing
-    * `.distinct()` would be a full extra shuffle of the listing — the
-    * operator's LARGEST frame. */
-  def expandRepPairs(repPairs: DataFrame, members: DataFrame): DataFrame = {
-    val cross = repPairs
-      .join(members.select(col("rep").as("id1"), col("id").as("_m1")), "id1")
-      .join(members.select(col("rep").as("id2"), col("id").as("_m2")), "id2")
-      .select(least(col("_m1"), col("_m2")).as("id1"), greatest(col("_m1"), col("_m2")).as("id2"))
-    val signed = members.where(col("_sig"))
-    val cliques = signed.select(col("rep"), col("id").as("_a"))
-      .join(signed.select(col("rep"), col("id").as("_b")), "rep")
-      .where(col("_a") < col("_b"))
-      .select(col("_a").as("id1"), col("_b").as("id2"))
-    cross.unionByName(cliques)
-  }
 
   /** Generic multi-index Hamming pair search over a 64-bit hash column
     * (Norouzi et al., CVPR'12), verified inside each band bucket. Each hash

@@ -100,32 +100,39 @@ object DocOps {
     * grouped pass that verifies each LSH bucket in memory
     * (`Candidates.bucketPairs`, listing form: every pair once, in the
     * lowest band its two texts share), instead of the shared-shingle join
-    * of `jaccardPairs`. Identical normalized texts collapse to one
-    * representative before signatures; the rep-level pair set is then
-    * expanded back to the full member-level listing (cross pairs +
-    * within-group cliques — what `jaccardPairs` emits for duplicate texts).
+    * of `jaccardPairs`. Every document with ≥ k tokens is shingled and
+    * listed as it is — no identical-text collapse: n copies of a text are
+    * n rows of every band bucket, their band arrays agree from band 0, so
+    * each of their n(n−1)/2 pairs is emitted once there, at Jaccard 1; a
+    * hot copy group is held at most `maxBucketSize` rows per salted tile.
     * Output (doc1, doc2) — equal to `jaccardPairs` ids whenever LSH recall
-    * is 1 (the S-curve at the corpus' planted similarities makes misses
-    * ~1e-8). */
+    * is 1 (a pair at Jaccard J shares no band with probability
+    * (1 − J⁴)¹⁶: ~7e-6 at J = 0.85). */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       cfg: NearDupConfig): DataFrame = CacheScope.deferred { scope =>
-    val (repPairs, members, _) =
-      Candidates.captionLshPartsIn(docs, idCol, textCol, cfg,
-        pairComplete = true)(scope)
-    Candidates.expandRepPairs(repPairs, members)
-      .select(col("id1").as("doc1"), col("id2").as("doc2"))
+    // EAGER: the bucket-size aggregate and the bucket rows both read it.
+    // The empty-shingle filter applies to the persisted frame: inside it,
+    // the optimizer would copy the UDF into the pushed-down filter
+    val sbUdf = Keys.shingleLshUdf(cfg.shingleK, cfg.lshBands, cfg.lshRowsPerBand)
+    val shingled = scope.persistEager(docs
+        .select(col(idCol).as("doc_id"), sbUdf(Keys.normCaption(col(textCol))).as("_sb")))
+      .where(size(col("_sb._1")) > 0)
+      .select(col("doc_id"), col("_sb._1").as("_shh"), col("_sb._2").as("_bands"))
+    val (pairs, _) = Candidates.bucketPairs(shingled, "doc_id", cfg.maxBucketSize,
+      math.round(cfg.jaccardThreshold * 100).toInt, pairComplete = true)
+    pairs.select(col("id1").as("doc1"), col("id2").as("doc2"))
   }
 
   /** MinHash+LSH near-dup EDGES in connectivity form — for clustering
     * consumers (connected components), which need the same COMPONENTS as
-    * `minhashLshPairs`, not the full pair listing: verified rep-level pairs
-    * plus one rep—member star per identical-text group with ≥1 shingle.
-    * The quadratic member-level expansion (`expandRepPairs`) adds no
-    * connectivity, so clustering over these edges yields identical cluster
-    * assignments at Θ(groups) instead of Θ(listing) edges — the shape the
-    * flagship uses at 100 TB. Candidate generation stays pair-complete, so
-    * verification sees exactly the pairs the listing form verifies.
-    * Output (doc1, doc2). */
+    * `minhashLshPairs`, not the full pair listing: verified pairs among
+    * identical-text representatives plus one rep—member star per
+    * identical-text group with ≥1 shingle. The listing's within-group and
+    * cross pairs add no connectivity, so clustering over these edges yields
+    * identical cluster assignments at Θ(groups) instead of Θ(listing)
+    * edges — the shape the flagship uses at 100 TB. Candidate generation
+    * stays pair-complete, so every rep pair the listing verifies is
+    * verified here too. Output (doc1, doc2). */
   def minhashLshEdges(docs: DataFrame, idCol: String, textCol: String,
                       cfg: NearDupConfig): DataFrame = CacheScope.deferred { scope =>
     val (repPairs, members, _) =

@@ -48,7 +48,7 @@ class JobBudgetSpec extends SparkSpec {
       "minhashLshPairs" -> listing(DocOps.minhashLshPairs(features, "iid", "caption", docLsh)),
       "containmentPairs" -> listing(DocOps.containmentPairs(features, "iid", "caption", 3)),
       "jaccardPairs" -> listing(DocOps.jaccardPairs(features, "iid", "caption", 3, 80)))
-    assertBudget(listings, Seq("simhashPairs" -> 2, "minhashLshPairs" -> 8,
+    assertBudget(listings, Seq("simhashPairs" -> 2, "minhashLshPairs" -> 4,
                                "containmentPairs" -> 8, "jaccardPairs" -> 9))
   }
 

@@ -167,4 +167,33 @@ class KeysSpec extends SparkSpec {
         f"J $jaccard: mean shared bands $mean%.2f, expected ${16 * p}%.2f ± ${3 * sigma}%.2f")
     }
   }
+
+  test("shingleLshUdf: lanes miss like independent lanes, (1 − J⁴)¹⁶, at J 35/41") {
+    // 200,000 pairs of 40 distinct tokens, one inner token substituted:
+    // 38 3-shingles a side, 35 shared, J = 35/41. With independent lanes a
+    // pair matches 16·J⁴ ≈ 8.50 bands on average and shares none with
+    // probability (1 − J⁴)¹⁶ ≈ 5.5e-6 — 1.09 of 200,000 pairs; correlated
+    // lanes would miss far more often
+    val n = 200000L
+    val udf = Keys.shingleLshUdf(3, 16, 4)
+    def token(prefix: String, seed: String) = s"concat('$prefix', cast(xxhash64($seed) AS STRING))"
+    val got = spark.range(n)
+      .select(expr(s"transform(sequence(0, 39), i -> ${token("w", "id, i, 1441")})").as("a"),
+              expr("2 + id % 36").as("p"), col("id"))
+      .select(col("a"), expr(s"transform(a, (t, i) -> if(i = p, ${token("x", "id")}, t))").as("b"))
+      .select(udf(array_join(col("a"), " ")).as("x"), udf(array_join(col("b"), " ")).as("y"))
+      .select(size(array_intersect(col("x._1"), col("y._1"))).as("inter"),
+              aggregate(zip_with(col("x._2"), col("y._2"), (u, v) => when(u === v, 1).otherwise(0)),
+                        lit(0), _ + _).as("bands"))
+      .agg(min("inter"), max("inter"), avg("bands"), sum(when(col("bands") === 0, 1).otherwise(0)))
+      .first()
+    assert(got.getInt(0) == 35 && got.getInt(1) == 35,
+      s"shared shingles ${got.getInt(0)}-${got.getInt(1)}")
+    val p = math.pow(35.0 / 41, 4)
+    val (mean, misses) = (got.getDouble(2), got.getLong(3))
+    assert(math.abs(mean - 16 * p) <= 0.02 * 16 * p,
+      f"mean shared bands $mean%.3f, expected ${16 * p}%.3f ± 2%%")
+    val expected = n * math.pow(1 - p, 16)
+    assert(misses <= 4 * expected, f"$misses pairs share no band, expected $expected%.2f")
+  }
 }

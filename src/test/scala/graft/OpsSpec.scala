@@ -110,28 +110,78 @@ class OpsSpec extends SparkSpec {
       s"missing=${(oracle -- sim).take(5)} extra=${(sim.toSet -- oracle).take(5)}")
   }
 
-  test("expandRepPairs precondition: its MinHash-LSH rep pairs are distinct") {
-    // expandRepPairs drops its trailing distinct on the strength of this
-    // precondition; the SimHash listing, the containment listing and the
-    // edges carry no distinct either
+  test("MinHash-LSH listing == brute-force banded Jaccard pairs on a synthetic corpus") {
+    // groups of 2-5 identical captions (spelled with other case and
+    // spacing: one normalized text) and one group of 9 above the cap of 4,
+    // so the listing's salted tiles run; variants with the last 1-4 of 29
+    // tokens replaced (3-shingle Jaccard 26/28, 25/29, 24/30 = the 0.8
+    // threshold, 23/31); texts under k tokens, copied; one whitespace-only
+    // document
+    import graft.keys.Keys
+    val small = NearDupConfig(jaccardThreshold = 0.8, maxBucketSize = 4)
+    val rng = new scala.util.Random(1401L)
+    def caption() = Seq.fill(29)(s"w${rng.nextInt(300)}")
+    def spellings(text: Seq[String], n: Int) = Seq.tabulate(n)(c =>
+      if (c % 2 == 0) text.mkString(" ") else text.mkString("  ", "\t", " ").toUpperCase)
+    val groups = (0 until 12).flatMap { g =>
+      val base = caption()
+      val variants = Seq(1, 2, 3, 4).map(n =>
+        (base.dropRight(n) ++ Seq.fill(n)(s"x${rng.nextInt(300)}")).mkString(" "))
+      spellings(base, 2 + g % 4) ++ variants
+    }
+    val texts = groups ++ spellings(caption(), 9) ++ spellings(Seq("a", "b"), 3) ++
+      Seq("solo", "a b c", " \t ")
+    val docs = rng.shuffle(texts).zipWithIndex.map { case (t, i) => (i.toLong * 7, t) }
+      .toDF("doc_id", "text")
+    val sb = Keys.shingleLshUdf(small.shingleK, small.lshBands, small.lshRowsPerBand)
+    val sigs = docs.select(col("doc_id"), sb(Keys.normCaption(col("text"))).as("s"))
+      .select(col("doc_id"), col("s._1"), col("s._2"))
+      .as[(Long, Seq[Long], Seq[Long])].collect()
+    val pct = math.round(small.jaccardThreshold * 100)
+    val candidates = for {
+      i <- sigs.indices; j <- (i + 1) until sigs.length
+      (a, b) = (sigs(i), sigs(j))
+      if a._3.zip(b._3).exists { case (x, y) => x == y }
+    } yield {
+      val inter = a._2.intersect(b._2).size
+      ((math.min(a._1, b._1), math.max(a._1, b._1)), inter, a._2.size + b._2.size - inter)
+    }
+    val oracle = candidates.collect { case (p, i, u) if i * 100 >= u * pct => p }.toSet
+    assert(candidates.exists { case (_, i, u) => i * 100 == u * pct } &&
+           candidates.exists { case (_, i, u) => i * 100 < u * pct },
+      "the fixture must yield candidates at and below the threshold")
+    val biggest = sigs.flatMap(_._3.zipWithIndex).groupBy(identity).values.map(_.length).max
+    assert(biggest > small.maxBucketSize, "a band bucket is above the cap (salted)")
+    assert(oracle.size > 96, "the 96 identical pairs and near pairs")
+    val lsh = DocOps.minhashLshPairs(docs, "doc_id", "text", small)
+      .as[(Long, Long)].collect().toSeq
+    assert(lsh.distinct.size == lsh.size, "duplicate rows")
+    assert(lsh.toSet == oracle,
+      s"missing=${(oracle -- lsh).take(5)} extra=${(lsh.toSet -- oracle).take(5)}")
+  }
+
+  test("the MinHash-LSH listing is distinct") {
+    // no listing and no edge source runs a distinct: the MinHash-LSH and
+    // SimHash listings emit each pair in its lowest shared band only, and
+    // the containment listing and the edges are distinct by construction
     import graft.candidates.Candidates
+    import graft.keys.Keys
     import graft.util.Seal
     def assertDistinct(tag: String, pairs: org.apache.spark.sql.DataFrame): Unit = {
       val n = pairs.count()
       assert(n > 0, s"$tag: the fixture must yield pairs")
       assert(pairs.distinct().count() == n, s"$tag: duplicate rows")
     }
-    // MinHash-LSH, pair-complete, over one planted bucket above the cap
+    // MinHash-LSH, over one planted bucket above the cap
     val base = (1 to 20).map(i => s"w$i").mkString(" ")
     val planted = (0 until 80).map(i => (i.toLong, s"$base v$i")).toDF("id", "caption")
     val capped = NearDupConfig(maxBucketSize = 16)
-    val (lshPairs, lshMetrics) = Candidates.sealObserved { scope =>
-      val (rp, _, stats) = Candidates.captionLshPartsIn(planted, "id", "caption", capped,
-        pairComplete = true)(scope)
-      (rp, stats)
-    }
-    assert(lshMetrics.first().getLong(0) > 0, "the bucket is above the cap (salted)")
-    assertDistinct("captionLshPartsIn", lshPairs)
+    val sb = Keys.shingleLshUdf(capped.shingleK, capped.lshBands, capped.lshRowsPerBand)
+    val biggest = planted
+      .select(posexplode(sb(Keys.normCaption(col("caption")))("_2")))
+      .groupBy("pos", "col").count().agg(max("count")).first().getLong(0)
+    assert(biggest > capped.maxBucketSize, "a band bucket is above the cap (salted)")
+    assertDistinct("minhashLshPairs", DocOps.minhashLshPairs(planted, "id", "caption", capped))
     // containment: each short text shares ≥ 2 shingles with each of several
     // longer texts that contain it, and the longer texts contain each other
     val nested = Seq((1L, "a b c d"), (2L, "a b c d e"), (3L, "z a b c d e"),
@@ -149,7 +199,6 @@ class OpsSpec extends SparkSpec {
     // multi-index Hamming with the cap disabled — the listing form the
     // SimHash listing is (no distinct) — over real SimHash signatures
     assume(haveTestdata)
-    import graft.keys.Keys
     val sigs = docs
       .select(col("doc_id"), Keys.tokens(Keys.normCaption(col("text"))).as("_t"))
       .where(size(col("_t")) > 0)

@@ -83,11 +83,9 @@ class PlanShapeSpec extends SparkSpec {
     val cfg = graft.schema.NearDupConfig(jaccardThreshold = 0.8)
     val scope = new graft.util.CacheScope
     try {
-      val (repPairs, members, _) = graft.candidates.Candidates
-        .captionLshPartsIn(docs, "doc_id", "text", cfg, pairComplete = true)(scope)
       Seq(
         graft.ops.DocOps.simhashPairs(docs, "doc_id", "text", cfg),
-        graft.candidates.Candidates.expandRepPairs(repPairs, members),
+        graft.ops.DocOps.minhashLshPairs(docs, "doc_id", "text", cfg),
         graft.candidates.Candidates.containmentEdgesIn(docs, "doc_id", "text", cfg)(scope)
       ).foreach { df =>
         val plan = df.queryExecution.executedPlan.toString
@@ -128,6 +126,16 @@ class PlanShapeSpec extends SparkSpec {
       graft.candidates.Candidates.containmentPairsIn(corpus, "image_id", "caption", 3)(_))
     callsOnce("jaccardPairs (shingleHashUdf)")(
       graft.ops.DocOps.jaccardPairsIn(corpus, "image_id", "caption", 3, 80)(_))
+    // the MinHash listing persists its frame in a deferred scope: the
+    // listing's plan reads one cached relation, whose plan calls the UDF
+    // once, and calls no UDF outside it
+    val minhash = graft.ops.DocOps.minhashLshPairs(corpus, "image_id", "caption", cfg)
+    val cached = minhash.queryExecution.withCachedData
+      .collect { case r: InMemoryRelation => r.cacheBuilder }.distinct
+    val calls = cached.map(b => udfCalls(b.cachedPlan))
+    val outside = udfCalls(minhash.queryExecution.executedPlan)
+    assert(calls == Seq(1) && outside == 0,
+      s"minhashLshPairs (shingleLshUdf): UDF calls in its persisted frames $calls, outside $outside")
     // the SimHash listing persists nothing: its own plan calls the UDF once
     val simhash = graft.ops.DocOps.simhashPairs(corpus, "image_id", "caption", cfg)
     val simCalls = udfCalls(simhash.queryExecution.executedPlan)
